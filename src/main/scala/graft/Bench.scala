@@ -59,7 +59,7 @@ object Bench {
     // Producer.scala:247-249 / KinesisSubscriberActor.scala:138-172),
     // so the bench carries one measured records/s number for it:
     // the events fixture staged as a multi-file envelope stream, then
-    // file source → from_json decode → to_json re-encode → per-key
+    // file source → JSON decode → to_json re-encode → per-key
     // ordered serial sends ([[graft.connector.TopicSink.writeOrdered]]),
     // microbatched by the admission cap. min-of-3, fresh checkpoint per
     // run; exactly-once asserted by delivered count. Measured BEFORE

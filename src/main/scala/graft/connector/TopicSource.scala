@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.functions.JsonBytesToStruct
 import graft.model.ConsumerConfig
 
 /** Topic → unbounded DataFrame (SURVEY.md §2a #1-#3).
@@ -76,10 +77,12 @@ final case class KinesisTopicSource(
 object TopicSource {
   /** Decode a JSON-payload inbound stream into typed columns —
     * schema-on-read, mirroring the reference's negotiated deserializer
-    * (#3 deserialize map; payloads are JSON per README.md:36-39). */
+    * (#3 deserialize map; payloads are JSON per README.md:36-39).
+    * `data` may be binary or string; its bytes are parsed in place
+    * ([[graft.functions.JsonBytesToStruct]]), with the result of
+    * `from_json(col("data").cast("string"), payloadSchema)`. */
   def decodeJson(inbound: DataFrame, payloadSchema: StructType): DataFrame =
-    inbound.withColumn("payload",
-      from_json(col("data").cast("string"), payloadSchema))
+    inbound.withColumn("payload", JsonBytesToStruct.of(col("data"), payloadSchema))
 
   /** Encode typed rows into the outbound envelope (#4 serialize map +
     * #5 partition-key assignment; default key = hash of the row, like the

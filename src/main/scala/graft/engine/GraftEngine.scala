@@ -40,6 +40,18 @@ object GraftEngine {
     *    mode would re-sort every signature shuffle.
     *  - UTC + nanosAsLong: deterministic timestamp semantics against
     *    the parquet fixtures regardless of cluster-local zone.
+    *  - Artifact session isolation off: every streaming query runs on a
+    *    clone of its session, and with isolation on each clone gets a
+    *    fresh executor classloader. Spark keys its generated-code cache
+    *    on (classloader, source), so every relay drain and every
+    *    supervised restart recompiled the same classes with Janino and
+    *    re-JIT-compiled them (SCALING.md, "Relay: generated code per
+    *    streaming query"). The engine adds no per-session artifacts
+    *    (no `addArtifact`/`addJar`, no Connect), so there is nothing to
+    *    isolate. Spark reads the key when a session is created; on a
+    *    retrofitted session ([[applyRecommendedConfs]]) it takes effect
+    *    for the queries started after the call, whose sessions are
+    *    cloned from it.
     *
     * `spark.sql.shuffle.partitions` is deliberately NOT here: it is
     * cluster-sized (~2-3× total cores; 32 on local[32]), so
@@ -64,7 +76,8 @@ object GraftEngine {
     "spark.sql.autoBroadcastJoinThreshold" -> (10L * 1024 * 1024).toString,
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Session with the scale-sane defaults this engine assumes
     * ([[recommendedConfs]]), 32 shuffle partitions for local[32] (a

@@ -80,16 +80,6 @@ object Checkpointing {
         case None => df.localCheckpoint()
       })
 
-  /** Historical name ([[truncate]] now measures instead of carrying,
-    * which subsumes the stripping): kept for call-site provenance in
-    * the iterative loops whose per-round plans reference the previous
-    * round's checkpoint many times. With MEASURED stats the carried
-    * size is a bounded constant per round (never a compounding
-    * estimate product), so the round-7 Louvain planning freeze cannot
-    * recur, and the planner can additionally broadcast the node-sized
-    * per-round frames the stripped-leaf era forced into exchanges. */
-  def truncateFresh(df: DataFrame): DataFrame = truncate(df)
-
   /** [[truncate]], but local blocks are stored SERIALIZED
     * (MEMORY_AND_DISK_SER) regardless of [[StorageKey]] — for
     * corpus-sized iterative state where deserialized row objects

@@ -866,11 +866,13 @@ object Graph {
     val m2Row = deg.agg(sum(col("k")).cast(dec).as("__m2"))
     // cm0: singletons, or the warm seed (graph nodes absent from the
     // seed enter as singletons; seed rows off the graph drop).
-    // truncateFresh throughout the comm chain: the per-round plan
-    // references comm ~9 times, so carried checkpoint stats would
-    // compound as 9^round and freeze PLANNING (see truncateFresh) —
-    // a caller-provided seed can arrive pre-inflated the same way.
-    var comm = Checkpointing.truncateFresh(seed match {
+    // truncate throughout the comm chain: the per-round plan
+    // references comm ~9 times, so stats carried from the origin plan
+    // would compound as 9^round and freeze PLANNING; truncate's leaves
+    // carry measured stats instead, a bounded constant per round (see
+    // Checkpointing.truncate) — a caller-provided seed can arrive
+    // pre-inflated the same way.
+    var comm = Checkpointing.truncate(seed match {
       case None => deg.select(col("node"), col("node").as("c"))
       case Some(sd) => deg.select(col("node"))
         .join(sd.select(col("node"), col("community").as("__sc")),
@@ -998,7 +1000,7 @@ object Graph {
         // product-of-children BigInts explode to ~10⁵ digits
         // (minutes of single-core Toom-Cook planning per round,
         // measured on the sf0.1 sweep).
-        val next = Checkpointing.truncateFresh(proposal)
+        val next = Checkpointing.truncate(proposal)
         val moved =
           if (stopAtStable)
             next.join(comm.withColumnRenamed("c", "__pc"), Seq("node"))

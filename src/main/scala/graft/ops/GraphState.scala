@@ -133,9 +133,16 @@ object GraphState {
     val sWrite = java.util.concurrent.CompletableFuture.runAsync { () =>
       // common-pool threads don't reliably inherit the session
       // thread-local (ADVICE r15): pin it so planning paths that
-      // consult getActiveSession see THIS session, not a default one
+      // consult getActiveSession see THIS session, not a default one,
+      // and put back what the pooled thread had, so the pin does not
+      // outlive this task
+      val prior = SparkSession.getActiveSession
       SparkSession.setActiveSession(newS.sparkSession)
-      newS.write.saveAsTable(s"${sT}__next")
+      try newS.write.saveAsTable(s"${sT}__next")
+      finally prior match {
+        case Some(s) => SparkSession.setActiveSession(s)
+        case None => SparkSession.clearActiveSession()
+      }
     }
     // propagate either failure before any stamp — without masking: a
     // join() failure inside a bare finally would REPLACE an in-flight
