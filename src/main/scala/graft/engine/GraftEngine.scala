@@ -52,6 +52,19 @@ object GraftEngine {
     *    retrofitted session ([[applyRecommendedConfs]]) it takes effect
     *    for the queries started after the call, whose sessions are
     *    cloned from it.
+    *  - Generated-code cache at 1000 entries (Spark's default is 100):
+    *    the cache is an LRU over every class Janino compiled, and one
+    *    pass of the benchmark's catalog sample (q04, q206, q86, q233,
+    *    q128) needs about 145 distinct classes: at 100 each class is
+    *    evicted before the next pass uses it again, and every call
+    *    recompiles and re-JIT-compiles its code (SCALING.md, "Catalog:
+    *    generated-code cache working set"). 1000 leaves headroom over
+    *    that working set; a relay drain needs about 9. This key is a
+    *    STATIC SQL conf and the cache is one per JVM, sized when code
+    *    is first generated: [[sessionBuilder]] pins it, but
+    *    [[applyRecommendedConfs]] cannot (`spark.conf.set` throws on
+    *    static keys) and skips it, so a retrofitted session must pass
+    *    it at launch (`--conf` or the builder) to get it.
     *
     * `spark.sql.shuffle.partitions` is deliberately NOT here: it is
     * cluster-sized (~2-3× total cores; 32 on local[32]), so
@@ -77,7 +90,8 @@ object GraftEngine {
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   /** Session with the scale-sane defaults this engine assumes
     * ([[recommendedConfs]]), 32 shuffle partitions for local[32] (a
@@ -92,11 +106,15 @@ object GraftEngine {
       case (b, (k, v)) => b.config(k, v)
     }
 
-  /** Apply [[recommendedConfs]] to an already-built session (all keys
-    * are runtime-settable SQL confs) — the path for sessions the
-    * library did not construct, e.g. a notebook or harness session. */
+  /** Apply the runtime-settable [[recommendedConfs]] to an already-built
+    * session — the path for sessions the library did not construct,
+    * e.g. a notebook or harness session. Static keys (the generated-code
+    * cache size) are skipped: they only take effect when passed at
+    * launch. */
   def applyRecommendedConfs(spark: SparkSession): Unit =
-    recommendedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    recommendedConfs.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) spark.conf.set(k, v)
+    }
 
   /** Create the session and register the engine's SQL functions. */
   def start(master: String = "local[32]"): SparkSession = {

@@ -28,9 +28,9 @@ import org.apache.spark.sql.types._
   *    |V|×256) in one tight byte loop per input row
   *    ([[HllRegMaxAgg]], map-side combined like every
   *    TypedImperativeAggregate here),
-  *  - the estimate reads (zsum, present) off the packed row with two
-  *    O(m) byte scans ([[HllRegZsum]]/[[HllRegPresent]]) — no
-  *    re-aggregation at read time at all.
+  *  - the estimate reads (zsum, present) off the packed row in one
+  *    O(m) byte scan ([[HllRegEstimate]]) — no re-aggregation at read
+  *    time at all.
   *
   * Arithmetic is BIT-IDENTICAL to the row form by construction: the
   * packed bytes are exactly the (bucket → max rho) map the row form's
@@ -62,40 +62,6 @@ object HllRegs {
     a
   }
 
-  /** Σ 2^(57−rho) over PRESENT buckets — the exact integer
-    * [[PortableSketches.hllRegisterTerm]] sums (DECIMAL, order-free).
-    * Max value 256·2^56 = 2^64 exceeds a signed long, so accumulate in
-    * two longs and assemble one BigDecimal. */
-  def zsum(a: Array[Byte]): org.apache.spark.sql.types.Decimal = {
-    var lo = 0L // sum of terms with rho >= 2 (each ≤ 2^55, 256 of them < 2^63)
-    var ones = 0L // count of rho == 1 terms (2^56 each)
-    var i = 0
-    while (i < M) {
-      val r = a(i)
-      if (r > 0) {
-        if (r == 1) ones += 1L
-        else lo += 1L << (57 - r)
-      }
-      i += 1
-    }
-    val bi = java.math.BigInteger.valueOf(ones)
-      .shiftLeft(56)
-      .add(java.math.BigInteger.valueOf(lo))
-    org.apache.spark.sql.types.Decimal(
-      new java.math.BigDecimal(bi), 20, 0)
-  }
-
-  /** Count of present (rho > 0) buckets. */
-  def present(a: Array[Byte]): Long = {
-    var n = 0L
-    var i = 0
-    while (i < M) {
-      if (a(i) > 0) n += 1L
-      i += 1
-    }
-    n
-  }
-
   /** Column: packed register set of a single (bucket, rho) pair. */
   def regInit(bucket: Column, r: Column): Column =
     GraftSqlShim.column(HllRegInit(
@@ -106,14 +72,6 @@ object HllRegs {
   def regMax(regs: Column): Column =
     GraftSqlShim.column(
       HllRegMaxAgg(GraftSqlShim.expression(regs)).toAggregateExpression())
-
-  /** Column: exact-integer zsum of a packed register set. */
-  def regZsum(regs: Column): Column =
-    GraftSqlShim.column(HllRegZsum(GraftSqlShim.expression(regs)))
-
-  /** Column: present-bucket count of a packed register set. */
-  def regPresent(regs: Column): Column =
-    GraftSqlShim.column(HllRegPresent(GraftSqlShim.expression(regs)))
 
   /** Column: the standard estimate off a packed register set — ONE
     * compiled O(m) pass per row ([[HllRegEstimate]]). Bit-identical to
@@ -225,25 +183,6 @@ case class HllRegMaxAgg(
     copy(child = newChild)
 }
 
-/** Exact-integer zsum (Σ 2^(57−rho) over present buckets) of a packed
-  * register set, as DECIMAL(20,0) — the value the row form computes as
-  * `sum(hllRegisterTerm(r))`. */
-case class HllRegZsum(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def prettyName: String = "graft_hll_reg_zsum"
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DecimalType(20, 0)
-
-  protected override def nullSafeEval(input: Any): Any =
-    HllRegs.zsum(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HllRegs.zsum($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HllRegZsum =
-    copy(child = newChild)
-}
-
 /** The full portable-HLL estimate of a packed register set in one
   * compiled O(m) pass — bit-identical to
   * [[PortableSketches.hllEstimate]] over the row form's aggregates
@@ -261,23 +200,5 @@ case class HllRegEstimate(child: Expression)
     defineCodeGen(ctx, ev, c => s"graft.functions.HllRegs.estimate($c)")
 
   override protected def withNewChildInternal(newChild: Expression): HllRegEstimate =
-    copy(child = newChild)
-}
-
-/** Present-bucket count of a packed register set — the row form's
-  * `count(*)` per node. */
-case class HllRegPresent(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def prettyName: String = "graft_hll_reg_present"
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-
-  protected override def nullSafeEval(input: Any): Any =
-    HllRegs.present(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HllRegs.present($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): HllRegPresent =
     copy(child = newChild)
 }

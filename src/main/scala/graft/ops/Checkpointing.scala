@@ -59,8 +59,9 @@ object Checkpointing {
     spark.conf.getOption(ReliableKey).contains("true")
 
   /** Eagerly materialize `df` and truncate its lineage by the
-    * configured strategy. Local-mode leaves carry statistics MEASURED
-    * from the materialized blocks
+    * configured strategy. The checkpoint leaf never keeps the origin
+    * plan's carried statistics: local-mode leaves carry statistics
+    * MEASURED from the materialized blocks
     * ([[org.apache.spark.sql.GraftSqlShim.withMeasuredStats]],
     * round 16): the planner's broadcast/SHJ decisions for every
     * consumer of a truncated frame are made from the frame's TRUE
@@ -69,9 +70,15 @@ object Checkpointing {
     * and mis-sizes post-filter/post-distinct frames badly in either
     * direction). Scale-adaptive by construction: the same loop
     * broadcasts its node-sized frontier at local scale and keeps the
-    * shuffle when the measured size passes the threshold. */
+    * shuffle when the measured size passes the threshold. Reliable
+    * checkpoint files register no blocks, so reliable-mode leaves have
+    * their carried stats stripped
+    * ([[org.apache.spark.sql.GraftSqlShim.stripCarriedStats]]): the
+    * default size estimate keeps loop joins on shuffles, and nothing
+    * compounds across rounds. */
   def truncate(df: DataFrame): DataFrame =
-    if (isReliable(df.sparkSession)) df.checkpoint()
+    if (isReliable(df.sparkSession))
+      org.apache.spark.sql.GraftSqlShim.stripCarriedStats(df.checkpoint())
     else org.apache.spark.sql.GraftSqlShim.withMeasuredStats(
       df.sparkSession.conf.getOption(StorageKey) match {
         case Some(name) =>
@@ -85,11 +92,12 @@ object Checkpointing {
     * corpus-sized iterative state where deserialized row objects
     * would dominate the heap. Reliable mode is unaffected (a
     * `checkpoint()` is already an on-disk byte image). Leaf stats are
-    * measured, as in [[truncate]] (serialized levels measure the
-    * UnsafeRow byte image — the closest proxy to shuffle/broadcast
-    * cost). */
+    * measured or stripped, as in [[truncate]] (serialized levels
+    * measure the UnsafeRow byte image — the closest proxy to
+    * shuffle/broadcast cost). */
   def truncateSer(df: DataFrame): DataFrame =
-    if (isReliable(df.sparkSession)) df.checkpoint()
+    if (isReliable(df.sparkSession))
+      org.apache.spark.sql.GraftSqlShim.stripCarriedStats(df.checkpoint())
     else org.apache.spark.sql.GraftSqlShim.withMeasuredStats(
       df.localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))

@@ -308,14 +308,6 @@ object Dedup {
       .select(col(idCol), col("status"))
   }
 
-  /** MinHash signature as a per-row column expression (HOF form). Kept
-    * for API completeness — prefer [[minhashSignatures]], which is
-    * ~50× faster: higher-order-function lambdas evaluate interpreted,
-    * O(numHashes × shingles) per row. */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      i => array_min(transform(shinglesCol, s => xxhash64(s, i))))
-
   /** MinHash signatures as a pure per-row map: the shingle array is
     * row-local, so the whole signature folds inside ONE
     * [[graft.functions.MinHashSigRow]] expression — no explode, no
@@ -497,20 +489,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
     if (materialize) materializeAndRelease(verified) else verified
-  }
-
-  /** 64-bit SimHash over whitespace tokens. Pure column expressions: the
-    * per-bit weighted vote is unrolled over 64 when/otherwise sums —
-    * verbose but codegen-friendly (no UDF boxing on the 100 TB path). */
-  def simhash64(textCol: Column): Column = {
-    // hash every token exactly once, then take 64 per-bit votes over the
-    // precomputed hash array (arithmetic only — no re-hashing per bit)
-    val hs = transform(tokens(textCol), t => xxhash64(t))
-    (0 until 64).map { bit =>
-      val votes = aggregate(hs, lit(0L), (acc, h) =>
-        acc + when(shiftright(h, bit).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(votes > 0, shiftleft(lit(1L), bit)).otherwise(lit(0L))
-    }.reduce(_.bitwiseOR(_))
   }
 
   /** Portable 64-bit token hash built from the two 32-bit halves of the

@@ -72,9 +72,6 @@ object TextOps {
       greatest(size(toksLower), lit(1)).cast("double")
   }
 
-  def langScore(text: Column, lang: String): Column =
-    langScoreFromTokens(lowerTokens(text), lang)
-
   /** Predicted language code (argmax stopword overlap; "und" if no
     * stopword hits at all). */
   def langIdFromTokens(toksLower: Column): Column = {
@@ -139,9 +136,6 @@ object TextOps {
       // length in a sane document band
       "len_ok" -> when(length(text).between(20, 1000000), 1.0).otherwise(0.0))
   }
-
-  def qualityComponents(text: Column): Seq[(String, Column)] =
-    qualityComponentsFromTokens(text, lowerTokens(text))
 
   /** Scalar quality score: mean of the components. */
   def qualityScoreFromTokens(text: Column, toksLower: Column): Column = {

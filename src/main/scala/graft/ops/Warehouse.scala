@@ -463,21 +463,4 @@ object Warehouse {
        |         AS INT) AS version
        |FROM pfx WHERE rn = 1""".stripMargin
   }
-
-  /** Mirror of [[bitemporalAsOf]] for the DuckDB oracle. `changesSql`
-    * must select `k`, `vt`, `tt`, `seq` and the state columns. */
-  def bitemporalAsOfSql(changesSql: String, stateCols: Seq[String],
-                        asOfVtSql: String, asOfTtSql: String,
-                        keyAs: String = "k"): String = {
-    val states = stateCols.mkString(", ")
-    s"""WITH ch AS ($changesSql),
-       |q AS (
-       |  SELECT k, vt, tt, seq, $states,
-       |         row_number() OVER (PARTITION BY k
-       |           ORDER BY vt DESC, seq DESC) AS rn
-       |  FROM ch
-       |  WHERE tt <= ($asOfTtSql) AND vt <= ($asOfVtSql)
-       |)
-       |SELECT k AS $keyAs, vt, tt, $states FROM q WHERE rn = 1""".stripMargin
-  }
 }

@@ -89,9 +89,11 @@ object GraftSqlShim {
     * BigInts (no planning blowup), and broadcast/SHJ decisions are
     * made from data rather than defaults: a node-sized frontier frame
     * broadcasts at local scale, the same code at 100 TB measures past
-    * the threshold and keeps the shuffle. No-op on frames whose root
-    * is not a checkpoint leaf or whose blocks are not registered
-    * (e.g. reliable `checkpoint()` files). */
+    * the threshold and keeps the shuffle. A checkpoint leaf whose
+    * blocks are not registered (nothing to measure) comes back with
+    * its carried stats stripped ([[stripCarriedStats]]), never with
+    * the origin plan's; frames whose root is not a checkpoint leaf are
+    * returned unchanged. */
   def withMeasuredStats(df: DataFrame): DataFrame =
     df.queryExecution.analyzed match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -107,7 +109,7 @@ object GraftSqlShim {
                 Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
                   sizeInBytes = BigInt(bytes))),
                 None))
-          case None => df
+          case None => stripCarriedStats(df)
         }
       case _ => df
     }

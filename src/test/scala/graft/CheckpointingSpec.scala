@@ -103,6 +103,30 @@ class CheckpointingSpec extends SparkSpec {
       s"re-truncated frame must carry its own measured size, got $szD")
   }
 
+  test("a checkpoint leaf's size stays bounded over 10 truncated self-join rounds, local and reliable") {
+    // Catalyst estimates an inner join as the product of its children's
+    // sizes, so a leaf carrying its origin plan's estimate squares every
+    // round (the Louvain planning freeze). Measured or stripped leaves
+    // reset it per round; a stripped leaf reports the default estimate
+    // (spark.sql.defaultSizeInBytes, Long.MaxValue).
+    val bound = BigInt(Long.MaxValue)
+    def rounds(mode: String): Unit = {
+      var cur = Checkpointing.truncate(spark.range(0, 100).toDF("node"))
+      (1 to 10).foreach { r =>
+        cur = Checkpointing.truncate(
+          cur.join(cur.withColumnRenamed("node", "n2"), col("node") === col("n2"))
+            .select("node"))
+        val sz = cur.queryExecution.optimizedPlan.stats.sizeInBytes
+        assert(sz > 0 && sz <= bound, s"$mode round $r: leaf sizeInBytes $sz exceeds $bound")
+      }
+      assert(cur.count() == 100)
+    }
+    rounds("local")
+    val dir = Files.createTempDirectory("graft-ckpt-stats").toString
+    Checkpointing.enableReliable(spark, dir)
+    try rounds("reliable") finally Checkpointing.disableReliable(spark)
+  }
+
   test("CachedFrames dedups registrations by analyzed plan") {
     import graft.ops.CachedFrames
     CachedFrames.releaseAll()

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 import graft.connector.{FileTopicSource, KinesisTopicSource, TopicSink}
@@ -126,7 +127,7 @@ class EngineSpec extends SparkSpec {
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements() == 8)
   }
 
-  test("recommended conf posture is applied by the builder and settable at runtime") {
+  test("recommended conf posture: builder pins every key, retrofit every modifiable one") {
     // the builder path: every recommended key must be baked into the
     // builder's options (the session under test was built elsewhere, so
     // assert on the builder rather than a second context)
@@ -136,18 +137,45 @@ class EngineSpec extends SparkSpec {
       assert(opts.get(k).contains(v), s"builder must pin $k=$v, got ${opts.get(k)}")
     }
     assert(opts.get("spark.sql.shuffle.partitions").contains("2"))
-    // the retrofit path: every key is a runtime-settable SQL conf
-    val before = GraftEngine.recommendedConfs.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
+    // the generated-code cache size is the one static key: it can only
+    // be passed at launch, and the builder-made session under test has it
+    val (modifiable, static) = GraftEngine.recommendedConfs.partition {
+      case (k, _) => spark.conf.isModifiable(k)
+    }
+    assert(static.keySet == Set("spark.sql.codegen.cache.maxEntries"),
+      s"unexpected static keys in the posture: ${static.keySet}")
+    static.foreach { case (k, v) => assert(spark.conf.get(k) == v) }
+    // the retrofit path: sets every modifiable key, skips the static one
+    // (spark.conf.set throws on static keys)
+    val before = modifiable.keys.map(k => k -> spark.conf.getOption(k)).toMap
     try {
       GraftEngine.applyRecommendedConfs(spark)
-      GraftEngine.recommendedConfs.foreach { case (k, v) =>
+      modifiable.foreach { case (k, v) =>
         assert(spark.conf.get(k) == v, s"applyRecommendedConfs must set $k=$v")
       }
     } finally before.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("a rotation of more than 100 generated classes compiles nothing the second time") {
+    // Spark's default generated-code cache holds 100 classes, an LRU: a
+    // working set past it (one catalog_mix pass needs ~145) evicts each
+    // class before its next use, so every call compiles again. Each
+    // query here compiles its own classes (the literal is inlined into
+    // the generated source).
+    def rotation(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (0 until 120).foreach { i =>
+        spark.range(4).select((col("id") * 7919 + i).as("v")).collect()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = rotation()
+    assert(first > 100, s"the rotation must exceed Spark's default cache, compiled $first")
+    val second = rotation()
+    assert(second == 0, s"the second rotation compiled $second classes again")
   }
 
   test("backoff supervision restarts a failing query with growing delays") {
