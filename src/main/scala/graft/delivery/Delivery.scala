@@ -38,17 +38,8 @@ object Delivery {
   /** At-least-once: `process` may see a batch twice after failure, never
     * miss one. Make it idempotent for effectively-once. */
   def atLeastOnce(df: DataFrame, groupId: String, checkpointRoot: String)
-                 (process: (DataFrame, Long) => Unit): StreamingQuery = {
-    GroupId.validate(groupId)
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/$groupId")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        process(batch, batchId)
-      }
-      .start()
-  }
+                 (process: (DataFrame, Long) => Unit): StreamingQuery =
+    drain(df, groupId, checkpointRoot)(process)
 
   /** At-most-once emulation: the side ledger marks the batch BEFORE the
     * user function runs. `ledger` must survive restarts for the contract
@@ -56,34 +47,35 @@ object Delivery {
     * deployment passes a durable one). */
   def atMostOnce(df: DataFrame, groupId: String, checkpointRoot: String,
                  ledger: BatchLedger = InMemoryLedger)
-                (process: (DataFrame, Long) => Unit): StreamingQuery = {
-    GroupId.validate(groupId)
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/$groupId")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (ledger.markIfNew(groupId, batchId)) { // commit-first
-          process(batch, batchId)
-        } // else: already delivered (or attempted) — drop, don't redeliver
-      }
-      .start()
-  }
+                (process: (DataFrame, Long) => Unit): StreamingQuery =
+    drain(df, groupId, checkpointRoot) { (batch, batchId) =>
+      if (ledger.markIfNew(groupId, batchId)) { // commit-first
+        process(batch, batchId)
+      } // else: already delivered (or attempted) — drop, don't redeliver
+    }
 
   /** Committable: user receives the batch and a commit thunk; records are
     * "uncommitted" until the thunk runs (e.g. after writing to an
     * external store). */
   def committable(df: DataFrame, groupId: String, checkpointRoot: String,
                   ledger: BatchLedger = InMemoryLedger)
-                 (process: (DataFrame, Long, () => Unit) => Unit): StreamingQuery = {
+                 (process: (DataFrame, Long, () => Unit) => Unit): StreamingQuery =
+    drain(df, groupId, checkpointRoot) { (batch, batchId) =>
+      process(batch, batchId, () => ledger.markIfNew(groupId, batchId))
+    }
+
+  /** Start `df`'s drain for `groupId`: append mode, checkpointed under
+    * `<checkpointRoot>/<groupId>`, everything available now, each
+    * microbatch handed to `batch` — the part all three contracts
+    * share. */
+  private def drain(df: DataFrame, groupId: String, checkpointRoot: String)
+                   (batch: (DataFrame, Long) => Unit): StreamingQuery = {
     GroupId.validate(groupId)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$checkpointRoot/$groupId")
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        process(batch, batchId, () => ledger.markIfNew(groupId, batchId))
-      }
+      .foreachBatch(batch)
       .start()
   }
 }

@@ -1343,7 +1343,7 @@ object Dedup {
     * shuffle at all, leaving the explode+hash recomputed from scan.
     *
     * That 2× computation is the DELIBERATE default, decided by
-    * measurement (round 7, `tools.SpanAb`, same-JVM interleaved
+    * measurement (round 7, SCALING.md, same-JVM interleaved
     * min-of-3 at x10): checkpoint-materializing the gram frame so both
     * branches read blocks measured 9.96 s vs 3.11 s for the recompute —
     * 3.2× slower. The bytes explain it: the gram stream is ~28 B per

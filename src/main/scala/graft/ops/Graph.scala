@@ -782,7 +782,7 @@ object Graph {
 
   /** Community-assignment advance over an ALREADY-CANONICAL previous
     * edge set — the maintained-state path
-    * ([[GraphState.advanceCommState]]): fold the fresh delta into the
+    * ([[GraphState.advance]]): fold the fresh delta into the
     * stored canonical edges (broadcast-probed, zero |E| shuffle —
     * [[advanceTriangleCore]]'s discipline), then re-run at most
     * `iters` warm parity rounds seeded from the previous assignment
@@ -1188,7 +1188,7 @@ object Graph {
     * `iters` fine rounds cold (singleton cm0) over `waveEdgeNames(0)`,
     * every later wave runs `iters` WARM rounds over its cumulative
     * edge table seeded from the previous wave's final assignment —
-    * exactly the process [[GraphState.advanceCommState]] executes per
+    * exactly the process [[GraphState.advance]] executes per
     * microbatch with the same `iters` cap (an advance that stabilized
     * early leaves the unroll's tail rounds provably no-ops, so the
     * fixed-depth replay matches either way). `edgesCte` must define each name in `waveEdgeNames`
@@ -1377,7 +1377,7 @@ object Graph {
     * region peel — each round is one Spark job, and the round count is
     * data-dependent): a delta whose region cascades past the bound
     * falls back to the FULL fixed-point re-peel of the new graph (the
-    * recovery path's rebuild, [[GraphState.recoverKCoreState]]) —
+    * recovery path's rebuild, [[GraphState.recover]]) —
     * always exact, never faster than the incremental path, but a
     * BOUNDED number of driver round-trips replaces an unbounded one.
     *
@@ -1418,7 +1418,7 @@ object Graph {
   val DefaultIncRounds = 128
 
   /** The k-core advance over an ALREADY-CANONICAL previous edge set —
-    * the maintained-state path ([[GraphState.advanceKCoreState]]),
+    * the maintained-state path ([[GraphState.advance]]),
     * mirroring [[advanceTriangleCore]]: no per-advance |E|
     * re-canonicalization. Returns (newEdges, newCore). */
   private[ops] def advanceKCoreCore(prevCore: DataFrame, oldE: DataFrame,
@@ -1567,7 +1567,7 @@ object Graph {
 
   /** Retraction over an ALREADY-CANONICAL previous edge set — the
     * maintained-state twin of [[advanceKCoreCore]]
-    * ([[GraphState.retractKCoreState]]). The actually-present removed
+    * ([[GraphState.retract]]). The actually-present removed
     * set is broadcast-probed ([[retractTriangleCore]]'s shape: one
     * |E| scan, zero |E| shuffle, delta-bounded result). Returns
     * (newEdges, newCore). */
@@ -2388,7 +2388,7 @@ object Graph {
   }
 
   /** The advance over an ALREADY-CANONICAL previous edge set — the
-    * maintained-state path ([[GraphState.advanceTriangleState]]):
+    * maintained-state path ([[GraphState.advance]]):
     * `oldE` must be canonical pairs (what the state table stores), so
     * NO per-advance re-canonicalization of history happens (the
     * round-13 verdict's What's-wrong #1 — the raw-history overload

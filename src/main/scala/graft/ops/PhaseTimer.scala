@@ -8,10 +8,12 @@ package graft.ops
   * context (the member key) around each query; code wrapped in
   * [[time]] then records `<member>.<label>` seconds, which Bench
   * appends to `BENCH_MEMBERS.json` as extra members — base and
-  * advance separate IN THE DRIVER ARTIFACT, the TriangleDeltaAb
-  * accounting without a side tool. Outside a bench pass (Verify,
-  * tests, library use) the context is empty and [[time]] is a
-  * zero-overhead pass-through.
+  * advance separate in the bench artifact itself, with no side tool.
+  * [[GraphState]] records `init`, `advance` (building the change's
+  * plans and the advance core's eager work) and `stage` (the staging
+  * writes and swaps). Outside a bench pass (Verify, tests, library
+  * use) the context is empty and [[time]] is a zero-overhead
+  * pass-through.
   *
   * Phase keys deliberately contain a '.' so the bench stdout rollup
   * can exclude them (they are components of an already-reported

@@ -933,9 +933,8 @@ object TextOps {
     * subtrees (bigram stream, bigram counts, unigram counts — each a
     * full-corpus regex split, the round-7 verdict's flagged smell)
     * for ONE checkpoint-truncated (id, tokens) frame that all three
-    * read back. Measured head-to-head with `tools.BigramAb`
-    * (min-of-3, interleaved) — see SCALING.md for the verdict the
-    * default encodes. */
+    * read back. Measured head-to-head (min-of-3, interleaved) — see
+    * SCALING.md for the verdict the default encodes. */
   def bigramSurprisal(docs: DataFrame, idCol: String, textCol: String,
                       materialize: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.DecimalType

@@ -113,7 +113,7 @@ object CatalogML11 {
     // The oracle recomputes the stats from scratch and restates the
     // same exact-integer / portable-double arithmetic.
     ("q242_graph_degree_profile", (s: SparkSession, d: String) => {
-      import graft.ops.GraphState
+      import graft.ops.GraphState, GraphState.Triangles
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q242_graph_$tag"
       val li = table(s, d, "lineitem")
@@ -124,9 +124,9 @@ object CatalogML11 {
           Seq("l_orderkey"))
         .where(col("l_partkey") < col("__p2"))
         .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      GraphState.initTriangleState(s, st, pairs, "src", "dst")
+      GraphState.init(s, st, Triangles, pairs, "src", "dst")
       graft.ops.Graph.degreeProfile(
-        GraphState.stats(s, st), GraphState.edges(s, st))
+        GraphState.table(s, st, Triangles), GraphState.edges(s, st))
     }, Some(graft.ops.Graph.degreeProfileSql(
       """e AS (
         |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b

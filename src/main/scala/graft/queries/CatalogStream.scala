@@ -197,8 +197,8 @@ object CatalogStream {
     // users, wave B the tail, wave C the stragglers (old timestamps
     // arriving two batches after the watermark advanced past them).
     // Three waves because Spark's stateful operators use TWO
-    // watermarks (empirically verified with tools.WaveProbe on this
-    // engine): batch k filters LATE INPUT with the watermark of batch
+    // watermarks (verified empirically on this engine, SCALING.md):
+    // batch k filters LATE INPUT with the watermark of batch
     // k−1 (so wave B, at batch 1, is filtered with batch 0's initial
     // zero watermark — nothing drops) and EVICTS/EMITS state with the
     // watermark of batch k — so wave C, at batch 2, is filtered with
@@ -1057,7 +1057,7 @@ object CatalogStream {
     // lives as MAINTAINED state tables (GraphState — the q177/q188
     // stage-and-swap posture applied to the graph family) and three
     // crawl waves of edge deltas fold in through foreachBatch, each
-    // microbatch one |D|-bounded advanceTriangleState consuming the
+    // microbatch one |D|-bounded GraphState.advance consuming the
     // stored CANONICAL edge set (never re-canonicalizing history —
     // Graph.advanceTriangleCore). Waves re-deliver edges already
     // present (co-order pairs recur across orders); the advance dedups
@@ -1065,7 +1065,7 @@ object CatalogStream {
     // from-scratch triangle count over the whole union — maintained ≡
     // full, to the hash.
     ("q230_stream_triangle_maintain", (s: SparkSession, d: String) => {
-      import graft.ops.GraphState
+      import graft.ops.GraphState, GraphState.Triangles
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q230_graph_$tag"
       def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
@@ -1081,20 +1081,20 @@ object CatalogStream {
         pairsOf(ok => ok % 3 === 0), pairsOf(ok => ok % 3 === 1),
         pairsOf(ok => ok % 3 === 2)))
       val empty = pairsOf(_ => lit(false))
-      GraphState.initTriangleState(s, st, empty, "src", "dst")
+      GraphState.init(s, st, Triangles, empty, "src", "dst")
       val src = s.readStream.format("parquet").schema(empty.schema)
         .option("maxFilesPerTrigger", 1).load(dir)
       val ckpt = Files.createTempDirectory("graft-graph-ckpt").toString
       try {
         val q = src.writeStream
           .foreachBatch { (b: DataFrame, _: Long) =>
-            GraphState.advanceTriangleState(s, st, b, "src", "dst")
+            GraphState.advance(s, st, Triangles, b, "src", "dst")
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       } finally rmrf(ckpt)
-      GraphState.stats(s, st)
+      GraphState.table(s, st, Triangles)
         .withColumnRenamed("node", "part_id").orderBy("part_id")
     }, Some(graft.ops.Graph.triangleStatsSql(
       """e AS (
@@ -1115,9 +1115,10 @@ object CatalogStream {
     // peel over the union (k=20 stabilizes in ≤3 rounds at every
     // fixture scale; the unrolled CTE runs 5).
     ("q236_stream_kcore_maintain", (s: SparkSession, d: String) => {
-      import graft.ops.GraphState
+      import graft.ops.GraphState, GraphState.KCore
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q236_graph_$tag"
+      val view = KCore(20)
       def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
         val li = table(s, d, "lineitem")
           .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
@@ -1131,20 +1132,20 @@ object CatalogStream {
         pairsOf(ok => ok % 3 === 0), pairsOf(ok => ok % 3 === 1),
         pairsOf(ok => ok % 3 === 2)))
       val empty = pairsOf(_ => lit(false))
-      GraphState.initKCoreState(s, st, empty, "src", "dst", k = 20)
+      GraphState.init(s, st, view, empty, "src", "dst")
       val src = s.readStream.format("parquet").schema(empty.schema)
         .option("maxFilesPerTrigger", 1).load(dir)
       val ckpt = Files.createTempDirectory("graft-kcore-ckpt").toString
       try {
         val q = src.writeStream
           .foreachBatch { (b: DataFrame, _: Long) =>
-            GraphState.advanceKCoreState(s, st, b, "src", "dst", k = 20)
+            GraphState.advance(s, st, view, b, "src", "dst")
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       } finally rmrf(ckpt)
-      GraphState.core(s, st)
+      GraphState.table(s, st, view)
         .withColumnRenamed("node", "part_id").orderBy("part_id")
     }, Some(graft.ops.Graph.kCoreSql(
       """p AS (
@@ -1171,9 +1172,10 @@ object CatalogStream {
     // peel of exactly that — maintained ≡ net, to the hash, with the
     // unroll-depth assertion keeping a too-shallow oracle loud.
     ("q237_stream_kcore_retract", (s: SparkSession, d: String) => {
-      import graft.ops.GraphState
+      import graft.ops.GraphState, GraphState.KCore
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q237_graph_$tag"
+      val view = KCore(20)
       def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
         val li = table(s, d, "lineitem")
           .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
@@ -1191,7 +1193,7 @@ object CatalogStream {
         takedown.withColumn("op", lit("del")),
         pairsOf(ok => ok % 3 === 2).withColumn("op", lit("add"))))
       val empty = pairsOf(_ => lit(false)).withColumn("op", lit("add"))
-      GraphState.initKCoreState(s, st, empty.drop("op"), "src", "dst", k = 20)
+      GraphState.init(s, st, view, empty.drop("op"), "src", "dst")
       val src = s.readStream.format("parquet").schema(empty.schema)
         .option("maxFilesPerTrigger", 1).load(dir)
       val ckpt = Files.createTempDirectory("graft-kcret-ckpt").toString
@@ -1201,15 +1203,15 @@ object CatalogStream {
             val adds = b.where(col("op") === "add").drop("op")
             val dels = b.where(col("op") === "del").drop("op")
             if (!adds.isEmpty)
-              GraphState.advanceKCoreState(s, st, adds, "src", "dst", k = 20)
+              GraphState.advance(s, st, view, adds, "src", "dst")
             if (!dels.isEmpty)
-              GraphState.retractKCoreState(s, st, dels, "src", "dst", k = 20)
+              GraphState.retract(s, st, view, dels, "src", "dst")
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       } finally rmrf(ckpt)
-      GraphState.core(s, st)
+      GraphState.table(s, st, view)
         .withColumnRenamed("node", "part_id").orderBy("part_id")
     }, Some(graft.ops.Graph.kCoreSql(
       """pab AS (
@@ -1240,7 +1242,7 @@ object CatalogStream {
     // crawl waves fold into an (edges, comm) pair through
     // foreachBatch, each microbatch re-running 3 deterministic warm
     // Louvain parity rounds SEEDED from the stored assignment
-    // (GraphState.advanceCommState / Graph.louvainWarm) — untouched
+    // (GraphState.advance over Communities / Graph.louvainWarm) — untouched
     // communities re-stabilize in zero moves, only the delta's
     // neighborhood re-settles, and recovery replays an interrupted
     // advance bit-identically (the assignment is a pure function of
@@ -1252,9 +1254,10 @@ object CatalogStream {
     // in exact integers (louvainWarmChainSql). Labels canonicalized
     // to min member (the q217 convention).
     ("q238_stream_comm_maintain", (s: SparkSession, d: String) => {
-      import graft.ops.GraphState
+      import graft.ops.GraphState, GraphState.Communities
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q238_graph_$tag"
+      val view = Communities(3)
       def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
         val li = table(s, d, "lineitem")
           .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
@@ -1268,20 +1271,20 @@ object CatalogStream {
         pairsOf(ok => ok % 3 === 0), pairsOf(ok => ok % 3 === 1),
         pairsOf(ok => ok % 3 === 2)))
       val empty = pairsOf(_ => lit(false))
-      GraphState.initCommState(s, st, empty, "src", "dst", iters = 3)
+      GraphState.init(s, st, view, empty, "src", "dst")
       val src = s.readStream.format("parquet").schema(empty.schema)
         .option("maxFilesPerTrigger", 1).load(dir)
       val ckpt = Files.createTempDirectory("graft-comm-ckpt").toString
       try {
         val q = src.writeStream
           .foreachBatch { (b: DataFrame, _: Long) =>
-            GraphState.advanceCommState(s, st, b, "src", "dst", iters = 3)
+            GraphState.advance(s, st, view, b, "src", "dst")
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       } finally rmrf(ckpt)
-      val res = GraphState.communities(s, st)
+      val res = GraphState.table(s, st, view)
       val canon = res.groupBy("community").agg(min("node").as("__cl"))
       res.join(canon, Seq("community"))
         .select(col("node").as("part_id"), col("__cl").as("community"))
@@ -1313,7 +1316,7 @@ object CatalogStream {
     // part–supplier bipartite graph arrives in three crawl waves and
     // the full register ladder (levels 0..3) lives as state, each
     // microbatch advancing it by EXACT per-level changed-frontier
-    // propagation (GraphState.advanceAnfState — registers are
+    // propagation (GraphState.advance over Anf — registers are
     // monotone max-mergeable, so only the delta's neighborhood
     // recomputes per level and every other row passes through
     // byte-identical). Because the maintained ladder is
@@ -1321,9 +1324,10 @@ object CatalogStream {
     // net edge set, the oracle is simply the existing
     // neighborhoodFunction unroll over the union.
     ("q243_stream_anf_maintain", (s: SparkSession, d: String) => {
-      import graft.ops.GraphState
+      import graft.ops.GraphState, GraphState.Anf
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q243_graph_$tag"
+      val view = Anf(3)
       def edgesOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
         table(s, d, "lineitem")
           .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
@@ -1333,20 +1337,21 @@ object CatalogStream {
         edgesOf(ok => ok % 3 === 0), edgesOf(ok => ok % 3 === 1),
         edgesOf(ok => ok % 3 === 2)))
       val empty = edgesOf(_ => lit(false))
-      GraphState.initAnfState(s, st, empty, "src", "dst", t = 3)
+      GraphState.init(s, st, view, empty, "src", "dst")
       val src = s.readStream.format("parquet").schema(empty.schema)
         .option("maxFilesPerTrigger", 1).load(dir)
       val ckpt = Files.createTempDirectory("graft-anf-ckpt").toString
       try {
         val q = src.writeStream
           .foreachBatch { (b: DataFrame, _: Long) =>
-            GraphState.advanceAnfState(s, st, b, "src", "dst", t = 3)
+            GraphState.advance(s, st, view, b, "src", "dst")
           }
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       } finally rmrf(ckpt)
-      GraphState.anfEstimates(s, st).orderBy("node", "t")
+      graft.ops.Graph.anfEstimates(GraphState.table(s, st, view))
+        .orderBy("node", "t")
     }, Some(graft.ops.Graph.neighborhoodFunctionSql(
       """p AS (
         |  SELECT DISTINCT CAST(l_partkey AS BIGINT) AS a,

@@ -151,7 +151,7 @@ object GraphScaleSweep {
       }
       if (opsRun("kcoreinc")) {
         // incremental k-core advance vs the full fixed-point re-peel:
-        // 1%-of-orders edge delta (the TriangleDeltaAb scenario), base
+        // 1%-of-orders edge delta (the triangle-maintenance scenario), base
         // core materialized UNTIMED (it exists in the maintenance
         // scenario); both legs at the k=55 fixture the q231 oracle
         // uses, checksums compared

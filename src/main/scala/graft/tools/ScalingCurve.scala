@@ -106,7 +106,7 @@ object ScalingCurve {
       // tree-probed IVF at the catalog's fixture-sized tree (nlist=16,
       // ntop=4): corpus-side assignment scan + fixed 20-query probe —
       // q46's class; the LARGE-nlist probe economics are measured in
-      // tools.TreeProbeAb (flat is N·nlist, tree is N·(ntop+w·nlist/ntop))
+      // SCALING.md (flat is N·nlist, tree is N·(ntop+w·nlist/ntop))
       "q145",
       // sentence-aware chunking: row-local derivation + one compiled
       // SentencePack generator per doc — q111's near-flat class

@@ -5,20 +5,19 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.ops.{Graph, GraphState, Tables}
+import graft.ops.{Graph, GraphState, Incremental, Tables}
+import graft.ops.GraphState.{Anf, Communities, KCore, Triangles}
 
-/** [[graft.ops.GraphState]] — the triangle stats maintained as a
-  * crash-safe (edges, stats) state-table pair (round-13 verdict's top
-  * ask: an advance must consume STATE, never re-canonicalize raw
-  * history). */
+/** [[graft.ops.GraphState]] — graph views maintained as crash-safe
+  * (edges, view) state-table pairs (round-13 verdict's top ask: an
+  * advance must consume STATE, never re-canonicalize raw history). */
 class GraphStateSpec extends SparkSpec {
   import spark.implicits._
 
-  private def scrub(name: String): Unit =
-    Tables.dropTablesAndDirs(spark,
-      s"${name}_edges", s"${name}_stats",
-      s"${name}_edges__next", s"${name}_stats__next",
-      s"${name}_edges__old", s"${name}_stats__old")
+  private def scrub(name: String): Unit = GraphState.drop(spark, name, Triangles)
+
+  private def stats(name: String): DataFrame =
+    GraphState.table(spark, name, Triangles)
 
   private def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
     val li = Tables.table(spark, sf, "lineitem")
@@ -38,13 +37,13 @@ class GraphStateSpec extends SparkSpec {
   test("advance folds waves into the pair; maintained stats equal the full re-count; epochs track; no danglers") {
     val name = "gstate_adv"
     scrub(name)
-    GraphState.initTriangleState(spark, name,
+    GraphState.init(spark, name, Triangles,
       pairsOf(_ => lit(false)), "src", "dst")
     assert(GraphState.epochOf(spark, s"${name}_edges") == 0L)
     for (w <- 0 to 2)
-      GraphState.advanceTriangleState(spark, name,
+      GraphState.advance(spark, name, Triangles,
         pairsOf(ok => ok % 3 === w), "src", "dst")
-    val got = sortedStats(GraphState.stats(spark, name))
+    val got = sortedStats(stats(name))
     val want = sortedStats(
       Graph.triangleStats(pairsOf(_ => lit(true)), "src", "dst"))
     assert(got == want, "maintained pair must equal the from-scratch count")
@@ -52,30 +51,30 @@ class GraphStateSpec extends SparkSpec {
     assert(GraphState.epochOf(spark, s"${name}_stats") == 3L)
     for (t <- Seq("_edges__next", "_stats__next", "_edges__old", "_stats__old"))
       assert(!spark.catalog.tableExists(name + t), s"dangler $t")
-    assert(GraphState.recoverTriangleState(spark, name) == "clean")
+    assert(GraphState.recover(spark, name, Triangles) == "clean")
     // re-applying an already-folded delta is a no-op (crash-replay safety)
-    GraphState.advanceTriangleState(spark, name,
+    GraphState.advance(spark, name, Triangles,
       pairsOf(ok => ok % 3 === 1), "src", "dst")
-    assert(sortedStats(GraphState.stats(spark, name)) == want)
+    assert(sortedStats(stats(name)) == want)
     scrub(name)
   }
 
   test("retract removes a slice; pair equals the full re-count on the remainder; retract∘advance is identity") {
     val name = "gstate_ret"
     scrub(name)
-    GraphState.initTriangleState(spark, name, pairsOf(_ => lit(true)),
+    GraphState.init(spark, name, Triangles, pairsOf(_ => lit(true)),
       "src", "dst")
-    val before = sortedStats(GraphState.stats(spark, name))
+    val before = sortedStats(stats(name))
     val slice = pairsOf(ok => ok % 7 === 0)
-    GraphState.retractTriangleState(spark, name, slice, "src", "dst")
+    GraphState.retract(spark, name, Triangles, slice, "src", "dst")
     // the retracted pair equals a from-scratch count over the remaining
     // edges (edges ground truth drives the check)
     val want = sortedStats(Graph.triangleStats(
       GraphState.edges(spark, name), "a", "b"))
-    assert(sortedStats(GraphState.stats(spark, name)) == want)
+    assert(sortedStats(stats(name)) == want)
     // identity: advancing the same slice back restores the original
-    GraphState.advanceTriangleState(spark, name, slice, "src", "dst")
-    assert(sortedStats(GraphState.stats(spark, name)) == before)
+    GraphState.advance(spark, name, Triangles, slice, "src", "dst")
+    assert(sortedStats(stats(name)) == before)
     assert(GraphState.epochOf(spark, s"${name}_stats") == 2L)
     scrub(name)
   }
@@ -89,7 +88,7 @@ class GraphStateSpec extends SparkSpec {
     pairsOf(ok => ok % 3 =!= 0).write.mode("overwrite").parquet(hist)
     val deltaDir = java.nio.file.Files.createTempDirectory("gstate-delta").toString
     pairsOf(ok => ok % 3 === 0).write.mode("overwrite").parquet(deltaDir)
-    GraphState.initTriangleState(spark, name,
+    GraphState.init(spark, name, Triangles,
       spark.read.parquet(hist), "src", "dst")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
@@ -104,7 +103,7 @@ class GraphStateSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      GraphState.advanceTriangleState(spark, name,
+      GraphState.advance(spark, name, Triangles,
         spark.read.parquet(deltaDir), "src", "dst")
       // listener delivery is async — wait for the queue to go quiet
       var last = -1
@@ -132,90 +131,80 @@ class GraphStateSpec extends SparkSpec {
 
   test("k-core pair: waves fold to the union's fixed point; advance consumes canonical state; recovery rebuilds under the stored k") {
     val name = "gstate_kc"
-    Tables.dropTablesAndDirs(spark,
-      s"${name}_edges", s"${name}_core",
-      s"${name}_edges__next", s"${name}_core__next",
-      s"${name}_edges__old", s"${name}_core__old")
-    GraphState.initKCoreState(spark, name, pairsOf(_ => lit(false)),
-      "src", "dst", k = 4)
+    GraphState.init(spark, name, KCore(4), pairsOf(_ => lit(false)),
+      "src", "dst")
     for (w <- 0 to 2)
-      GraphState.advanceKCoreState(spark, name,
-        pairsOf(ok => ok % 3 === w), "src", "dst", k = 4)
+      GraphState.advance(spark, name, KCore(4),
+        pairsOf(ok => ok % 3 === w), "src", "dst")
     def m(df: DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val got = m(GraphState.core(spark, name))
+    val got = m(GraphState.table(spark, name, KCore(4)))
     val want = m(Graph.kCoreFixedPoint(pairsOf(_ => lit(true)), "src",
       "dst", k = 4))
     assert(got == want, "maintained core must equal the union's fixed point")
     assert(got.nonEmpty && got.values.forall(_ >= 4L))
     assert(GraphState.epochOf(spark, s"${name}_core") == 3L)
     // stats-lag recovery rebuilds the survivor set from ground truth
-    // under the k stored on the table
+    // under the k the advances stored on the table, not the k it is
+    // handed (a 100-core of this graph is empty)
     spark.sql(s"ALTER TABLE ${name}_core SET TBLPROPERTIES('graft.epoch'='0')")
-    assert(GraphState.recoverKCoreState(spark, name) == "rebuilt-core")
-    assert(m(GraphState.core(spark, name)) == want)
-    assert(GraphState.recoverKCoreState(spark, name) == "clean")
-    Tables.dropTablesAndDirs(spark, s"${name}_edges", s"${name}_core")
+    assert(GraphState.recover(spark, name, KCore(100)) == "rebuilt-core")
+    assert(m(GraphState.table(spark, name, KCore(4))) == want)
+    assert(GraphState.recover(spark, name, KCore(4)) == "clean")
+    GraphState.drop(spark, name, KCore(4))
   }
 
   test("k-core pair retraction: interleaved advance/retract waves equal the net fixed point; retract∘advance is identity; recovery rebuilds") {
     val name = "gstate_kcr"
-    Tables.dropTablesAndDirs(spark,
-      s"${name}_edges", s"${name}_core",
-      s"${name}_edges__next", s"${name}_core__next",
-      s"${name}_edges__old", s"${name}_core__old")
     def m(df: DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    GraphState.initKCoreState(spark, name, pairsOf(ok => ok % 3 === 0),
-      "src", "dst", k = 4)
-    val base = m(GraphState.core(spark, name))
+    def core: DataFrame = GraphState.table(spark, name, KCore(4))
+    GraphState.init(spark, name, KCore(4), pairsOf(ok => ok % 3 === 0),
+      "src", "dst")
+    val base = m(core)
     // advance a wave, retract a slice, advance another wave — the
     // maintained survivor set must track the NET edge set's fixed
     // point through every step
-    GraphState.advanceKCoreState(spark, name,
-      pairsOf(ok => ok % 3 === 1), "src", "dst", k = 4)
-    val afterAdv = m(GraphState.core(spark, name))
+    GraphState.advance(spark, name, KCore(4),
+      pairsOf(ok => ok % 3 === 1), "src", "dst")
+    val afterAdv = m(core)
     val slice = pairsOf(ok => ok % 6 === 1) // ⊆ the %3==1 wave
-    GraphState.retractKCoreState(spark, name, slice, "src", "dst", k = 4)
+    GraphState.retract(spark, name, KCore(4), slice, "src", "dst")
     // ground truth drives the check: maintained core == the fixed
     // point re-peeled from the edges table
-    assert(m(GraphState.core(spark, name)) ==
+    assert(m(core) ==
       m(Graph.kCoreFixedPoint(GraphState.edges(spark, name), "a", "b", k = 4)))
     // identity: advancing the slice back restores the post-advance core
-    GraphState.advanceKCoreState(spark, name, slice, "src", "dst", k = 4)
-    assert(m(GraphState.core(spark, name)) == afterAdv,
+    GraphState.advance(spark, name, KCore(4), slice, "src", "dst")
+    assert(m(core) == afterAdv,
       "retract∘advance must restore the maintained core")
     assert(GraphState.epochOf(spark, s"${name}_core") == 3L)
     // retract the whole %3==1 wave (SET semantics: pairs the %3==0
     // wave also delivered leave too — an edge has no multiplicity) —
     // ground truth still drives the equality
-    GraphState.retractKCoreState(spark, name,
-      pairsOf(ok => ok % 3 === 1), "src", "dst", k = 4)
-    val afterRet = m(GraphState.core(spark, name))
+    GraphState.retract(spark, name, KCore(4),
+      pairsOf(ok => ok % 3 === 1), "src", "dst")
+    val afterRet = m(core)
     assert(afterRet ==
       m(Graph.kCoreFixedPoint(GraphState.edges(spark, name), "a", "b", k = 4)))
     // crash-window recovery after a retraction: core lags ground truth
     // → rebuilt from the edges table under the stored k
     spark.sql(s"ALTER TABLE ${name}_core SET TBLPROPERTIES('graft.epoch'='0')")
-    assert(GraphState.recoverKCoreState(spark, name) == "rebuilt-core")
-    assert(m(GraphState.core(spark, name)) == afterRet)
-    Tables.dropTablesAndDirs(spark, s"${name}_edges", s"${name}_core")
+    assert(GraphState.recover(spark, name, KCore(4)) == "rebuilt-core")
+    assert(m(core) == afterRet)
+    GraphState.drop(spark, name, KCore(4))
   }
 
-  test("community pair: maintained assignment equals the replayed warm chain; recovery promotes or replays an interrupted advance bit-identically") {
+  test("community pair: maintained assignment equals the replayed warm chain") {
     val name = "gstate_comm"
-    Tables.dropTablesAndDirs(spark,
-      s"${name}_edges", s"${name}_comm",
-      s"${name}_edges__next", s"${name}_comm__next",
-      s"${name}_edges__old", s"${name}_comm__old")
     def m(df: DataFrame): Map[Long, Long] =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    GraphState.initCommState(spark, name, pairsOf(_ => lit(false)),
-      "src", "dst", iters = 3)
+    GraphState.init(spark, name, Communities(3), pairsOf(_ => lit(false)),
+      "src", "dst")
     for (w <- 0 to 2)
-      GraphState.advanceCommState(spark, name,
-        pairsOf(ok => ok % 3 === w), "src", "dst", iters = 3)
-    val got = m(GraphState.communities(spark, name))
+      GraphState.advance(spark, name, Communities(3),
+        pairsOf(ok => ok % 3 === w), "src", "dst")
+    val got = m(GraphState.table(spark, name, Communities(3)))
     // the maintained assignment must equal the SAME warm chain replayed
     // through the public surface over the cumulative edge sets — the
     // q238 oracle's exact process
@@ -228,54 +217,17 @@ class GraphStateSpec extends SparkSpec {
     val c3 = Graph.louvainStable(symCum(2), "src", "dst", Some(c2), 3)._1
     assert(got == m(c3), "maintained ≡ replayed warm chain")
     assert(GraphState.epochOf(spark, s"${name}_comm") == 3L)
-
-    // window A: crash BETWEEN the two swaps with the staged comm
-    // intact → promoted, no recompute
-    val dA = pairsOf(ok => ok % 7 === 3)
-    val (eA, cA) = GraphState.advanceCommPlan(spark, name, dA, "src", "dst", 3)
-    cA.write.saveAsTable(s"${name}_comm__next")
-    spark.sql(s"ALTER TABLE ${name}_comm__next SET TBLPROPERTIES(" +
-      "'graft.epoch'='4','graft.comm.iters'='3')")
-    val wantA = m(spark.table(s"${name}_comm__next"))
-    eA.write.saveAsTable(s"${name}_edges__next")
-    spark.sql(s"ALTER TABLE ${name}_edges__next SET TBLPROPERTIES('graft.epoch'='4')")
-    graft.ops.Incremental.swapStaged(spark, s"${name}_edges")
-    assert(GraphState.recoverCommState(spark, name) == "promoted-staged-comm")
-    assert(m(GraphState.communities(spark, name)) == wantA)
-
-    // window B: staged comm LOST after the edges swap — unlike the
-    // triangle/k-core views the rebuild does NOT fall back to a
-    // different valid result: the advance is a pure function of (new
-    // edges, previous assignment), BOTH of which survive this window,
-    // so recovery replays the interrupted advance BIT-IDENTICALLY
-    val dB = pairsOf(ok => ok % 7 === 5)
-    val (eB, cB) = GraphState.advanceCommPlan(spark, name, dB, "src", "dst", 3)
-    cB.write.saveAsTable(s"${name}_comm__next")
-    spark.sql(s"ALTER TABLE ${name}_comm__next SET TBLPROPERTIES(" +
-      "'graft.epoch'='5','graft.comm.iters'='3')")
-    val wantB = m(spark.table(s"${name}_comm__next"))
-    eB.write.saveAsTable(s"${name}_edges__next")
-    spark.sql(s"ALTER TABLE ${name}_edges__next SET TBLPROPERTIES('graft.epoch'='5')")
-    graft.ops.Incremental.swapStaged(spark, s"${name}_edges")
-    spark.sql(s"DROP TABLE ${name}_comm__next")
-    assert(GraphState.recoverCommState(spark, name) == "rebuilt-comm")
-    assert(m(GraphState.communities(spark, name)) == wantB,
-      "crash-rebuild must replay the interrupted advance bit-identically")
-    assert(GraphState.recoverCommState(spark, name) == "clean")
-    Tables.dropTablesAndDirs(spark, s"${name}_edges", s"${name}_comm")
+    GraphState.drop(spark, name, Communities(3))
   }
 
   test("ANF pair: wave-advanced register ladder is register-bit-identical to the from-scratch run; estimates match; recovery rebuilds") {
     val name = "gstate_anf"
-    Tables.dropTablesAndDirs(spark,
-      s"${name}_edges", s"${name}_anf",
-      s"${name}_edges__next", s"${name}_anf__next",
-      s"${name}_edges__old", s"${name}_anf__old")
-    GraphState.initAnfState(spark, name, pairsOf(_ => lit(false)),
-      "src", "dst", t = 3)
+    def regs: DataFrame = GraphState.table(spark, name, Anf(3))
+    GraphState.init(spark, name, Anf(3), pairsOf(_ => lit(false)),
+      "src", "dst")
     for (w <- 0 to 2)
-      GraphState.advanceAnfState(spark, name,
-        pairsOf(ok => ok % 3 === w), "src", "dst", t = 3)
+      GraphState.advance(spark, name, Anf(3),
+        pairsOf(ok => ok % 3 === w), "src", "dst")
     // packed layout (round-15): one 256-byte register array per
     // (level, node) row — compare as hex so byte arrays get value
     // equality
@@ -285,42 +237,39 @@ class GraphStateSpec extends SparkSpec {
         .toSet
     // register-bit-identity with the from-scratch ladder over the
     // union — the induction the q243 oracle rests on
-    val fromScratch = graft.ops.Graph.anfRegisters(
+    val fromScratch = Graph.anfRegisters(
       GraphState.edges(spark, name), t = 3)
-    assert(regSet(GraphState.anfRegisters(spark, name)) == regSet(fromScratch),
+    assert(regSet(regs) == regSet(fromScratch),
       "maintained ladder must equal the from-scratch registers")
     // estimates read view equals neighborhoodFunction's output
     def estMap(df: DataFrame): Map[(Long, Int), Double] =
       df.collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    val got = estMap(GraphState.anfEstimates(spark, name))
-    val want = estMap(graft.ops.Graph.neighborhoodFunction(
+    val got = estMap(Graph.anfEstimates(regs))
+    val want = estMap(Graph.neighborhoodFunction(
       pairsOf(_ => lit(true)), "src", "dst", iters = 3))
     assert(got == want, "maintained estimates must equal the direct run")
     assert(GraphState.epochOf(spark, s"${name}_anf") == 3L)
     // re-applying an already-folded wave is a no-op
-    GraphState.advanceAnfState(spark, name,
-      pairsOf(ok => ok % 3 === 1), "src", "dst", t = 3)
-    assert(estMap(GraphState.anfEstimates(spark, name)) == want)
-    // recovery rebuild from ground truth is register-bit-identical
+    GraphState.advance(spark, name, Anf(3),
+      pairsOf(ok => ok % 3 === 1), "src", "dst")
+    assert(estMap(Graph.anfEstimates(regs)) == want)
+    // recovery rebuild from ground truth is register-bit-identical,
+    // under the depth the advances stored, not the one it is handed
     spark.sql(s"ALTER TABLE ${name}_anf SET TBLPROPERTIES('graft.epoch'='0')")
-    assert(GraphState.recoverAnfState(spark, name) == "rebuilt-anf")
-    assert(regSet(GraphState.anfRegisters(spark, name)) == regSet(fromScratch))
-    assert(GraphState.recoverAnfState(spark, name) == "clean")
-    Tables.dropTablesAndDirs(spark, s"${name}_edges", s"${name}_anf")
+    assert(GraphState.recover(spark, name, Anf(1)) == "rebuilt-anf")
+    assert(regSet(regs) == regSet(fromScratch))
+    assert(GraphState.recover(spark, name, Anf(3)) == "clean")
+    GraphState.drop(spark, name, Anf(3))
   }
 
   test("community advance reads ONLY the state pair + the delta — never raw history (file scans audited)") {
     val name = "gstate_commplan"
-    Tables.dropTablesAndDirs(spark,
-      s"${name}_edges", s"${name}_comm",
-      s"${name}_edges__next", s"${name}_comm__next",
-      s"${name}_edges__old", s"${name}_comm__old")
     val hist = java.nio.file.Files.createTempDirectory("gcomm-hist").toString
     pairsOf(ok => ok % 3 =!= 0).write.mode("overwrite").parquet(hist)
     val deltaDir = java.nio.file.Files.createTempDirectory("gcomm-delta").toString
     pairsOf(ok => ok % 3 === 0).write.mode("overwrite").parquet(deltaDir)
-    GraphState.initCommState(spark, name,
-      spark.read.parquet(hist), "src", "dst", iters = 2)
+    GraphState.init(spark, name, Communities(2),
+      spark.read.parquet(hist), "src", "dst")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
@@ -334,8 +283,8 @@ class GraphStateSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
-      GraphState.advanceCommState(spark, name,
-        spark.read.parquet(deltaDir), "src", "dst", iters = 2)
+      GraphState.advance(spark, name, Communities(2),
+        spark.read.parquet(deltaDir), "src", "dst")
       var last = -1
       var spins = 0
       while (seen.size != last && spins < 40) {
@@ -357,7 +306,7 @@ class GraphStateSpec extends SparkSpec {
     assert(paths.exists(_.contains(s"${name}_comm")), "state comm (seed) scan missing")
     graft.ops.LocalFiles.deleteRecursively(hist)
     graft.ops.LocalFiles.deleteRecursively(deltaDir)
-    Tables.dropTablesAndDirs(spark, s"${name}_edges", s"${name}_comm")
+    GraphState.drop(spark, name, Communities(2))
   }
 
   test("triangle retraction that drains a node to degree 0 drops its row — maintained stats stay bit-identical to the rebuild (ADVICE r14)") {
@@ -366,61 +315,83 @@ class GraphStateSpec extends SparkSpec {
     // triangle {1,2,3} with an appendix edge (3,4): retracting (3,4)
     // leaves node 4 at degree 0 — the maintained path must DROP its
     // row exactly as a from-scratch recount over the edges table would
-    GraphState.initTriangleState(spark,
-      name, Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst"),
+    GraphState.init(spark, name, Triangles,
+      Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("src", "dst"),
       "src", "dst")
-    assert(GraphState.stats(spark, name).count() == 4L)
-    GraphState.retractTriangleState(spark, name,
+    assert(stats(name).count() == 4L)
+    GraphState.retract(spark, name, Triangles,
       Seq((3L, 4L)).toDF("src", "dst"), "src", "dst")
-    val maintained = sortedStats(GraphState.stats(spark, name))
+    val maintained = sortedStats(stats(name))
     assert(!maintained.exists(_._1 == 4L), "degree-0 node must leave")
     assert(maintained.map(_._1) == Seq(1L, 2L, 3L))
     // rebuild == maintained: force the recovery recount from ground
     // truth and compare bit-for-bit
     spark.sql(s"ALTER TABLE ${name}_stats SET TBLPROPERTIES('graft.epoch'='0')")
-    assert(GraphState.recoverTriangleState(spark, name) == "rebuilt-stats")
-    assert(sortedStats(GraphState.stats(spark, name)) == maintained,
+    assert(GraphState.recover(spark, name, Triangles) == "rebuilt-stats")
+    assert(sortedStats(stats(name)) == maintained,
       "crash-rebuild must equal the uncrashed maintained stats")
     scrub(name)
   }
 
-  test("recovery resolves every crash window: promote staged stats, rebuild lost stats, drop danglers") {
-    val name = "gstate_rec"
-    scrub(name)
-    GraphState.initTriangleState(spark, name,
-      pairsOf(ok => ok % 3 =!= 0), "src", "dst")
-    val delta = pairsOf(ok => ok % 3 === 0)
+  test("recovery resolves every crash window of every view: promote the staged view, rebuild a lost one under the stored parameter, drop danglers") {
+    // the view rows in one comparable form (binary registers as base64)
+    def rows(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq.sorted
+    // (table suffix, view, the same view under another parameter —
+    // which recovery must ignore for the one stored on the table —
+    // and that stored parameter's property, as a staging carries it)
+    val views = Seq(
+      ("stats", Triangles, Triangles, None),
+      ("core", KCore(4), KCore(100), Some("graft.kcore.k" -> "4")),
+      ("anf", Anf(3), Anf(1), Some("graft.anf.t" -> "3")),
+      ("comm", Communities(3), Communities(1), Some("graft.comm.iters" -> "3")))
+    for ((suffix, view, otherParam, param) <- views) {
+      val name = s"gstate_rec_$suffix"
+      val twin = s"${name}_twin" // the same changes, never crashed
+      val vT = s"${name}_$suffix"
+      for (n <- Seq(name, twin))
+        GraphState.init(spark, n, view, pairsOf(ok => ok % 3 =!= 0), "src", "dst")
+      def live(n: String): Seq[String] = rows(GraphState.table(spark, n, view))
+      // an advance interrupted BETWEEN the two swaps: both stagings
+      // written and stamped, only the edges swapped (exactly what the
+      // protocol does first); `lose` drops the staged view as well
+      def crash(delta: DataFrame, epoch: Long, lose: Boolean): Unit = {
+        val (newE, newV) = GraphState.plan(spark, name, view, delta, "src", "dst")
+        newV.write.saveAsTable(s"${vT}__next")
+        val props = (("graft.epoch" -> epoch.toString) +: param.toSeq)
+          .map { case (k, v) => s"'$k'='$v'" }.mkString(",")
+        spark.sql(s"ALTER TABLE ${vT}__next SET TBLPROPERTIES($props)")
+        newE.write.saveAsTable(s"${name}_edges__next")
+        spark.sql(s"ALTER TABLE ${name}_edges__next SET TBLPROPERTIES('graft.epoch'='$epoch')")
+        Incremental.swapStaged(spark, s"${name}_edges")
+        if (lose) spark.sql(s"DROP TABLE ${vT}__next")
+        GraphState.advance(spark, twin, view, delta, "src", "dst")
+      }
 
-    // window A: crash BETWEEN the two swaps — edges live at e+1, stats
-    // at e with a complete staged __next. Simulate by staging both and
-    // swapping only the edges (exactly what applyStaged does first).
-    val (newE, newS) = GraphState.advanceTrianglePlan(spark, name, delta,
-      "src", "dst")
-    newS.write.saveAsTable(s"${name}_stats__next")
-    spark.sql(s"ALTER TABLE ${name}_stats__next SET TBLPROPERTIES('graft.epoch'='1')")
-    newE.write.saveAsTable(s"${name}_edges__next")
-    spark.sql(s"ALTER TABLE ${name}_edges__next SET TBLPROPERTIES('graft.epoch'='1')")
-    graft.ops.Incremental.swapStaged(spark, s"${name}_edges")
-    assert(GraphState.recoverTriangleState(spark, name) == "promoted-staged-stats")
-    val want = sortedStats(
-      Graph.triangleStats(pairsOf(_ => lit(true)), "src", "dst"))
-    assert(sortedStats(GraphState.stats(spark, name)) == want)
-    assert(GraphState.epochOf(spark, s"${name}_stats") == 1L)
+      // window A: the staged view is complete → promoted, no recount
+      crash(pairsOf(ok => ok % 7 === 3), 1L, lose = false)
+      assert(GraphState.recover(spark, name, otherParam) == s"promoted-staged-$suffix")
+      assert(live(name) == live(twin), s"$suffix: promoted ≠ uncrashed")
+      assert(GraphState.epochOf(spark, vT) == 1L)
 
-    // window B: staged stats LOST after the edges swap (or unstamped) —
-    // stats lag ground truth and must be rebuilt from the edges table.
-    spark.sql(s"ALTER TABLE ${name}_stats SET TBLPROPERTIES('graft.epoch'='0')")
-    assert(GraphState.recoverTriangleState(spark, name) == "rebuilt-stats")
-    assert(sortedStats(GraphState.stats(spark, name)) == want)
-    assert(GraphState.epochOf(spark, s"${name}_stats") == 1L)
+      // window B: the staged view is lost → rebuilt from what survives
+      // (the new edges; for communities also the previous assignment)
+      // under the STORED parameter, equal to the uncrashed advance
+      crash(pairsOf(ok => ok % 7 === 5), 2L, lose = true)
+      assert(GraphState.recover(spark, name, otherParam) == s"rebuilt-$suffix")
+      assert(live(name) == live(twin), s"$suffix: rebuilt ≠ uncrashed")
+      assert(GraphState.epochOf(spark, vT) == 2L)
+      val stored = spark.sql(s"SHOW TBLPROPERTIES $vT").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      param.foreach { case (k, v) => assert(stored.get(k).contains(v), s"$suffix: $k") }
 
-    // window C: crash during staging — danglers at a stale epoch drop,
-    // the live pair stays intact (caller re-applies the delta)
-    Seq((1L, 2L)).toDF("a", "b").write.saveAsTable(s"${name}_stats__next")
-    assert(GraphState.recoverTriangleState(spark, name) == "resolved")
-    assert(!spark.catalog.tableExists(s"${name}_stats__next"))
-    assert(sortedStats(GraphState.stats(spark, name)) == want)
-    assert(GraphState.recoverTriangleState(spark, name) == "clean")
-    scrub(name)
+      // window C: crash during staging — a stale dangler drops, the
+      // live pair stays intact (the caller re-applies the change)
+      Seq((1L, 2L)).toDF("a", "b").write.saveAsTable(s"${vT}__next")
+      assert(GraphState.recover(spark, name, view) == "resolved")
+      assert(!spark.catalog.tableExists(s"${vT}__next"))
+      assert(live(name) == live(twin))
+      assert(GraphState.recover(spark, name, view) == "clean")
+      for (n <- Seq(name, twin)) GraphState.drop(spark, n, view)
+    }
   }
 }
