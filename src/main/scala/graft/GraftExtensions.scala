@@ -1,22 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlShim, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.functions.{udaf, udf}
+import org.apache.spark.sql.types.DoubleType
 
-/** Library entry point for session-build-time integration:
+/** The engine's Catalyst surface — the native as-of join planner
+  * strategy and every `graft_*` SQL function — as one
+  * `SparkSessionExtensions` function, the standard way a Spark library
+  * ships Catalyst extensions.
   *
-  * {{{
-  *   spark.sql.extensions=graft.GraftExtensions
-  * }}}
-  *
-  * injects the native as-of join planner strategy and the engine's SQL
-  * function surface into every session built with the config — the
-  * standard way a Spark library ships Catalyst extensions. The runtime
-  * registration paths (`GraftEngine.start`, `VectorFunctions.register`,
-  * `MinHashSig.register`, per-call strategy injection in
-  * `AsOfJoin.asofPlanned`) remain for sessions the library did not
-  * construct, e.g. a harness that hands us an already-built session.
+  * Every session the engine builds carries it
+  * (`GraftEngine.sessionBuilder` applies it with `withExtensions`); a
+  * session built elsewhere opts in at launch with
+  * `spark.sql.extensions=graft.GraftExtensions`, or after the fact with
+  * `GraftEngine.install(spark)`, which reads the same
+  * [[GraftExtensions.functions]] table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -31,8 +32,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** The SQL function surface, shared between build-time injection and
-    * the runtime `register` helpers. */
+  /** The SQL function surface: one builder per `graft_*` name. */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_cosine" -> (es => graft.functions.CosineSimilarity(es(0), es(1))),
     "graft_dot" -> (es => graft.functions.DotProduct(es(0), es(1))),
@@ -45,7 +45,17 @@ object GraftExtensions {
     "graft_sig_matches" -> (es => graft.functions.SigMatchCount(es(0), es(1))),
     "graft_byte_histogram" -> (es => graft.functions.ByteHistogram(es(0))),
     "graft_byte_gram_signature" -> (es => graft.functions.ByteGramSignature(
-      es(0), intLit(es(1), "graft_byte_gram_signature bins")))
+      es(0), intLit(es(1), "graft_byte_gram_signature bins"))),
+    // the bare AggregateFunction: the analyzer wraps it in an
+    // AggregateExpression, same as the built-in registry entries
+    "graft_topk" -> (es => graft.functions.TopKValues(Cast(es(0), DoubleType), es(1) match {
+      case Literal(v, _) => v.toString.toInt
+      case other => throw new IllegalArgumentException(s"graft_topk k must be a literal, got $other")
+    })),
+    "graft_centroid" -> GraftSqlShim.userDefined(udaf(new graft.functions.VectorCentroid,
+      ExpressionEncoder[Array[Float]]()).withName("graft_centroid")),
+    "graft_char_entropy" -> GraftSqlShim.userDefined(
+      udf(graft.functions.GraftUdfs.charEntropy).withName("graft_char_entropy"))
   )
 
   private def intLit(e: Expression, what: String): Int = e match {
@@ -53,11 +63,4 @@ object GraftExtensions {
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
   }
-
-  /** Runtime registration of the same table onto an already-built
-    * session (the path for sessions the library did not construct). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
-    functions.foreach { case (name, builder) =>
-      org.apache.spark.sql.GraftSqlShim.registerFunction(spark, name, builder)
-    }
 }

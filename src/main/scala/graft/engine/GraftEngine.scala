@@ -2,12 +2,13 @@ package graft.engine
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.GraftExtensions
 import graft.connector.TopicSource
 import graft.delivery.Delivery
-import graft.functions.VectorFunctions
+import graft.plans.AsOfJoinStrategy
 
 /** Engine bootstrap + topic/query registry (SURVEY.md §2a #22-#23).
   *
@@ -49,7 +50,7 @@ object GraftEngine {
     *    streaming query"). The engine adds no per-session artifacts
     *    (no `addArtifact`/`addJar`, no Connect), so there is nothing to
     *    isolate. Spark reads the key when a session is created; on a
-    *    retrofitted session ([[applyRecommendedConfs]]) it takes effect
+    *    retrofitted session ([[install]]) it takes effect
     *    for the queries started after the call, whose sessions are
     *    cloned from it.
     *  - Generated-code cache at 1000 entries (Spark's default is 100):
@@ -62,7 +63,7 @@ object GraftEngine {
     *    that working set; a relay drain needs about 9. This key is a
     *    STATIC SQL conf and the cache is one per JVM, sized when code
     *    is first generated: [[sessionBuilder]] pins it, but
-    *    [[applyRecommendedConfs]] cannot (`spark.conf.set` throws on
+    *    [[install]] cannot (`spark.conf.set` throws on
     *    static keys) and skips it, so a retrofitted session must pass
     *    it at launch (`--conf` or the builder) to get it.
     *
@@ -95,32 +96,37 @@ object GraftEngine {
 
   /** Session with the scale-sane defaults this engine assumes
     * ([[recommendedConfs]]), 32 shuffle partitions for local[32] (a
-    * real cluster sets ~2-3× total cores). */
+    * real cluster sets ~2-3× total cores), and the engine's Catalyst
+    * surface ([[graft.GraftExtensions]]): the built session runs every
+    * `graft_*` SQL function and the native as-of join with no further
+    * call. */
   def sessionBuilder(master: String = "local[32]",
                      shufflePartitions: Int = 32): SparkSession.Builder =
     recommendedConfs.foldLeft(
       SparkSession.builder()
         .master(master)
         .config("spark.sql.shuffle.partitions", shufflePartitions)
-        .config("spark.ui.enabled", "false")) {
+        .config("spark.ui.enabled", "false")
+        .withExtensions(new GraftExtensions)) {
       case (b, (k, v)) => b.config(k, v)
     }
 
-  /** Apply the runtime-settable [[recommendedConfs]] to an already-built
-    * session — the path for sessions the library did not construct,
-    * e.g. a notebook or harness session. Static keys (the generated-code
-    * cache size) are skipped: they only take effect when passed at
-    * launch. */
-  def applyRecommendedConfs(spark: SparkSession): Unit =
+  /** Fit the engine onto a session it did not build, e.g. a notebook or
+    * harness session (idempotent): sets the runtime-settable
+    * [[recommendedConfs]], registers every function of
+    * [[graft.GraftExtensions.functions]] and adds the as-of join
+    * strategy unless the session already plans with it. Static keys
+    * (the generated-code cache size) are skipped: they only take effect
+    * when passed at launch. */
+  def install(spark: SparkSession): Unit = synchronized {
     recommendedConfs.foreach { case (k, v) =>
       if (spark.conf.isModifiable(k)) spark.conf.set(k, v)
     }
-
-  /** Create the session and register the engine's SQL functions. */
-  def start(master: String = "local[32]"): SparkSession = {
-    val spark = sessionBuilder(master).getOrCreate()
-    VectorFunctions.register(spark)
-    spark
+    GraftExtensions.functions.foreach { case (name, builder) =>
+      GraftSqlShim.registerFunction(spark, name, builder)
+    }
+    if (!GraftSqlShim.plannerStrategies(spark).contains(AsOfJoinStrategy))
+      new GraftExtensions()(GraftSqlShim.extensions(spark))
   }
 
   final case class Subscription(

@@ -1,17 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 
 /** Custom typed aggregators (SURVEY.md §2b "UDAF surface").
   *
-  * [[VectorCentroid]] — elementwise mean of an embedding column, the
-  * centroid primitive IVF/k-means needs. Partial buffers are (sums, n),
-  * merged associatively, so the map-side combine collapses each partition
-  * to one buffer before the shuffle — at 100 TB the shuffle carries
-  * |groups| × dim doubles, not the vectors.
+  * [[VectorCentroid]] (SQL `graft_centroid`) — elementwise mean of an
+  * embedding column, the centroid primitive IVF/k-means needs. Partial
+  * buffers are (sums, n), merged associatively, so the map-side combine
+  * collapses each partition to one buffer before the shuffle — at 100 TB
+  * the shuffle carries |groups| × dim doubles, not the vectors.
   *
   * Note: double addition is merge-order-dependent in the last ulp; like
   * every distributed float mean, results are deterministic only up to
@@ -45,12 +44,4 @@ class VectorCentroid extends Aggregator[Array[Float], CentroidBuffer, Array[Floa
 
   override def bufferEncoder: Encoder[CentroidBuffer] = Encoders.product[CentroidBuffer]
   override def outputEncoder: Encoder[Array[Float]] = ExpressionEncoder[Array[Float]]()
-}
-
-object GraftAggregators {
-  /** Register `graft_centroid` as a SQL aggregate on the session
-    * (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("graft_centroid",
-      udaf(new VectorCentroid, ExpressionEncoder[Array[Float]]()))
 }

@@ -125,12 +125,6 @@ object MinHashSig {
     * without materializing the gram array (see [[MinHashSigChars]]). */
   def sigCharsRow(text: Column, n: Int, numHashes: Int): Column =
     GraftSqlShim.column(MinHashSigChars(GraftSqlShim.expression(text), n, numHashes))
-
-  /** Register the engine's SQL function surface (incl. `graft_minhash`
-    * and `graft_simhash` — native expressions, not UDFs) via the single
-    * builder table in [[graft.GraftExtensions]]. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
 }
 
 /** MinHash signature as ONE per-row expression over the shingle array.

@@ -3,7 +3,7 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.util.PriorityQueue
 
-import org.apache.spark.sql.{GraftSqlShim, SparkSession}
+import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -211,26 +211,9 @@ object TopKScoredIds {
     * scores, (score desc, id asc)-ordered. Ids must be numeric (cast to
     * long) — the ANN id contract in this engine. */
   def agg(score: Column, id: Column, k: Int): Column =
-    org.apache.spark.sql.GraftSqlShim.column(
+    GraftSqlShim.column(
       TopKScoredIds(
-        org.apache.spark.sql.GraftSqlShim.expression(score.cast("double")),
-        org.apache.spark.sql.GraftSqlShim.expression(id.cast("long")),
+        GraftSqlShim.expression(score.cast("double")),
+        GraftSqlShim.expression(id.cast("long")),
         k).toAggregateExpression())
-}
-
-object TopKValues {
-  /** Register `graft_topk(col, k)` as a SQL aggregate (idempotent). */
-  def register(spark: SparkSession): Unit =
-    GraftSqlShim.registerFunction(spark, "graft_topk", { es =>
-      val k = es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v.toString.toInt
-        case other =>
-          throw new IllegalArgumentException(s"graft_topk k must be a literal, got $other")
-      }
-      // return the bare AggregateFunction — the analyzer wraps it in an
-      // AggregateExpression, same as the built-in registry entries
-      TopKValues(
-        org.apache.spark.sql.catalyst.expressions.Cast(es(0), DoubleType), k)
-    })
 }

@@ -1,8 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.udf
-
 /** Scalar UDF surface (SURVEY.md §2b "UDF surface").
   *
   * Policy: built-in functions first (codegen'd), custom Catalyst
@@ -13,7 +10,8 @@ import org.apache.spark.sql.functions.udf
 object GraftUdfs {
 
   /** Shannon entropy (bits/char) of a string — a quality-filter signal
-    * with data-dependent control flow that has no built-in equivalent. */
+    * with data-dependent control flow that has no built-in equivalent
+    * (SQL `graft_char_entropy`). */
   val charEntropy: String => Double = { s =>
     if (s == null || s.isEmpty) 0.0
     else {
@@ -24,9 +22,5 @@ object GraftUdfs {
         p * math.log(p) / math.log(2.0)
       }.sum
     }
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("graft_char_entropy", udf(charEntropy))
   }
 }

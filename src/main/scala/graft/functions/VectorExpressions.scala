@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -845,11 +845,4 @@ object VectorFunctions {
     GraftSqlShim.column(SignedProject(expr(vec), signs))
 
   private def expr(c: Column): Expression = GraftSqlShim.expression(c)
-
-  /** Register the engine's SQL function surface on a session
-    * (idempotent) — delegates to the single builder table in
-    * [[graft.GraftExtensions]] so the runtime and build-time paths
-    * cannot drift. */
-  def register(spark: SparkSession): Unit =
-    graft.GraftExtensions.registerAll(spark)
 }

@@ -62,8 +62,9 @@ object AsOfJoin {
     * [[graft.plans.AsOfJoinPlan]] logical node planned by
     * [[graft.plans.AsOfJoinStrategy]] into a co-partitioned sort-merge
     * `AsOfJoinExec` (O(1) state per partition, no window operator).
-    * The strategy is injected at runtime via experimental.extraStrategies,
-    * so it works on any session, including the driver's. */
+    * The session must plan with the strategy: every session
+    * `GraftEngine.sessionBuilder` builds does, and `GraftEngine.install`
+    * adds it to any other. */
   def asofPlanned(left: DataFrame, right: DataFrame,
                   leftOn: String, rightOn: String,
                   leftTime: String, rightTime: String,
@@ -71,10 +72,9 @@ object AsOfJoin {
     require(rightCols.forall(!left.columns.contains(_)),
       s"right payload columns ${rightCols.mkString(",")} must not collide with left columns")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    require(GraftSqlShim.plannerStrategies(spark).contains(AsOfJoinStrategy),
+      "the session does not plan with the as-of join strategy: build it with " +
+        "GraftEngine.sessionBuilder or call GraftEngine.install(spark) first")
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

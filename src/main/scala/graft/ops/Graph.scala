@@ -38,6 +38,17 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Graph {
 
+  /** Part co-order edges of a lineitem frame: one (src, dst) edge per
+    * pair of rows of one order whose parts satisfy src < dst
+    * (duplicates kept). The caller filters the frame; this does only
+    * the self-join. */
+  def coOrderEdges(lineitem: DataFrame): DataFrame = {
+    val li = lineitem.select(col("l_orderkey"), col("l_partkey"))
+    li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")), Seq("l_orderkey"))
+      .where(col("l_partkey") < col("__p2"))
+      .select(col("l_partkey").as("src"), col("__p2").as("dst"))
+  }
+
   /** Fixed-iteration damped PageRank over a DIRECTED edge list
     * (symmetrize for undirected graphs). Nodes = every id appearing
     * as src or dst; out-degree-0 (dangling) nodes receive rank but

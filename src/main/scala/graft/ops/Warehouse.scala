@@ -154,7 +154,7 @@ object Warehouse {
     val rebuilt = scd2Build(replay.unionAll(fresh), keyCol,
       col("__rts"), "__rseq", attrCols)
     dim.join(keys, Seq(keyCol), "left_anti")
-      .select(rebuilt.columns.map(col): _*)
+      .select(rebuilt.columns.map(col).toIndexedSeq: _*)
       .unionAll(rebuilt)
   }
 

@@ -589,7 +589,6 @@ object CatalogML {
     // distributed float mean) → deterministic outputs only (counts/dims)
     // plus rows-only check; exact semantics pinned in FunctionsSpec.
     ("q47_udaf_centroid", (s: SparkSession, d: String) => {
-      graft.functions.GraftAggregators.register(s)
       table(s, d, "embeddings").createOrReplaceTempView("embeddings")
       s.sql(
         """SELECT label, count(*) AS n_vectors,
@@ -627,7 +626,6 @@ object CatalogML {
     // sees an array cell (round-1 q69 failure) and the doubles stay
     // bit-exact.
     ("q69_agg_topk", (s: SparkSession, d: String) => {
-      graft.functions.TopKValues.register(s)
       table(s, d, "lineitem").createOrReplaceTempView("lineitem")
       s.sql(
         """SELECT l_returnflag,
@@ -655,7 +653,6 @@ object CatalogML {
     // ASCII (FIXTURES.md), so UTF-16 code units == code points and the
     // two engines agree on "character".
     ("q48_text_entropy", (s: SparkSession, d: String) => {
-      graft.functions.GraftUdfs.register(s)
       spread(table(s, d, "documents"), "doc_id")
         .selectExpr("doc_id", "round(graft_char_entropy(text), 6) AS entropy_bits")
         .orderBy("doc_id")

@@ -27,15 +27,9 @@ object CatalogML10 {
     // fixed point in ≤2 rounds at every fixture scale; the unrolled
     // CTE runs 4) — incremental ≡ full, to the hash.
     ("q231_graph_kcore_incremental", (s: SparkSession, d: String) => {
-      def pairsOf(pred: Column => Column) = {
-        val li = table(s, d, "lineitem")
-          .where(pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"),
-            col("l_partkey").as("__p2")), Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
+      def pairsOf(pred: Column => Column) =
+        graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(pred(col("l_orderkey"))))
       val base = pairsOf(ok => ok % 5 =!= 0)
       val delta = pairsOf(ok => ok % 5 === 0)
       // the maintained survivor set: the BASE graph's stabilized core
@@ -237,16 +231,9 @@ object CatalogML10 {
     // 1/N) — every quantized term bit-identical.
     ("q235_graph_pagerank_warm", (s: SparkSession, d: String) => {
       def sym(pred: Column => Column) = {
-        val li = table(s, d, "lineitem")
-          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        val p = li.join(li.select(col("l_orderkey"),
-            col("l_partkey").as("__p2")), Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("a"), col("__p2").as("b"))
-          .distinct()
-        p.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(p.select(col("b").as("src"), col("a").as("dst")))
+        val p = graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))).distinct()
+        p.unionAll(p.select(col("dst").as("src"), col("src").as("dst")))
       }
       val cold = graft.ops.Graph.pageRank(
         sym(ok => ok % 5 =!= 0), "src", "dst", iters = 2)

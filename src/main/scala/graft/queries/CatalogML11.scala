@@ -116,14 +116,8 @@ object CatalogML11 {
       import graft.ops.GraphState, GraphState.Triangles
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q242_graph_$tag"
-      val li = table(s, d, "lineitem")
-        .where(col("l_partkey") % 3 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val pairs = li
-        .join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-          Seq("l_orderkey"))
-        .where(col("l_partkey") < col("__p2"))
-        .select(col("l_partkey").as("src"), col("__p2").as("dst"))
+      val pairs = graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+        .where(col("l_partkey") % 3 === 0))
       GraphState.init(s, st, Triangles, pairs, "src", "dst")
       graft.ops.Graph.degreeProfile(
         GraphState.table(s, st, Triangles), GraphState.edges(s, st))

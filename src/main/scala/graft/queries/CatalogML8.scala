@@ -219,13 +219,7 @@ object CatalogML8 {
     // triangles by the plain a<b<c three-way join — two independent
     // algorithms, one result set (413,718 triangles at sf0.01).
     ("q220_graph_triangles", (s: SparkSession, d: String) => {
-      val li = table(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val pairs = li
-        .join(li.select(col("l_orderkey"),
-          col("l_partkey").as("__p2")), Seq("l_orderkey"))
-        .where(col("l_partkey") < col("__p2"))
-        .select(col("l_partkey").as("src"), col("__p2").as("dst"))
+      val pairs = graft.ops.Graph.coOrderEdges(table(s, d, "lineitem"))
       graft.ops.Graph.triangleStats(pairs, "src", "dst")
         .withColumnRenamed("node", "part_id")
         .orderBy("part_id")
@@ -244,17 +238,10 @@ object CatalogML8 {
     // unit-weight one. Same purchase-part domain as q220 so the two
     // entries share one projection story.
     ("q221_graph_louvain_weighted", (s: SparkSession, d: String) => {
-      val li = table(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val pairs = li
-        .join(li.select(col("l_orderkey"),
-          col("l_partkey").as("__p2")), Seq("l_orderkey"))
-        .where(col("l_partkey") < col("__p2"))
-        .groupBy(col("l_partkey").as("a"), col("__p2").as("b"))
-        .agg(count(lit(1)).as("w"))
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .unionAll(pairs.select(col("b").as("src"), col("a").as("dst"),
-          col("w")))
+      val pairs = graft.ops.Graph.coOrderEdges(table(s, d, "lineitem"))
+        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
+      val edges = pairs.unionAll(
+        pairs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       val res = graft.ops.Graph.louvainWeighted(edges, "src", "dst", "w",
         iters = 3)
       val canon = res.groupBy("community").agg(min("node").as("__cl"))

@@ -169,13 +169,7 @@ object CatalogML9 {
     // synchronous removal schedule is order-free, so the unrolled
     // CTE needs zero tie-breaking machinery.
     ("q223_graph_kcore", (s: SparkSession, d: String) => {
-      val li = table(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val pairs = li
-        .join(li.select(col("l_orderkey"),
-          col("l_partkey").as("__p2")), Seq("l_orderkey"))
-        .where(col("l_partkey") < col("__p2"))
-        .select(col("l_partkey").as("src"), col("__p2").as("dst"))
+      val pairs = graft.ops.Graph.coOrderEdges(table(s, d, "lineitem"))
       graft.ops.Graph.kCore(pairs, "src", "dst", k = 70, iters = 5)
         .withColumnRenamed("node", "part_id")
         .orderBy("part_id")
@@ -198,15 +192,9 @@ object CatalogML9 {
     // oracle is the FULL re-count over the union — incremental ≡
     // full, to the hash, the q203/q179 differential posture.
     ("q224_graph_triangles_incremental", (s: SparkSession, d: String) => {
-      def pairsOf(pred: Column => Column) = {
-        val li = table(s, d, "lineitem")
-          .where(pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"),
-            col("l_partkey").as("__p2")), Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
+      def pairsOf(pred: Column => Column) =
+        graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(pred(col("l_orderkey"))))
       val base = pairsOf(ok => ok % 5 =!= 0)
       val delta = pairsOf(ok => ok % 5 === 0)
       // cold-advance helper (round-15): ONE shared canonicalization of
@@ -230,18 +218,10 @@ object CatalogML9 {
     // oracle. The weighted graph is q221's (symmetrized co-order
     // counts), 3 rounds.
     ("q225_graph_pagerank_weighted", (s: SparkSession, d: String) => {
-      val li = table(s, d, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val pairs = li
-        .join(li.select(col("l_orderkey"),
-          col("l_partkey").as("__p2")), Seq("l_orderkey"))
-        .where(col("l_partkey") < col("__p2"))
-        .groupBy(col("l_partkey").as("a"), col("__p2").as("b"))
-        .agg(count(lit(1)).as("w"))
-      val edges = pairs.select(col("a").as("src"), col("b").as("dst"),
-          col("w"))
-        .unionAll(pairs.select(col("b").as("src"), col("a").as("dst"),
-          col("w")))
+      val pairs = graft.ops.Graph.coOrderEdges(table(s, d, "lineitem"))
+        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
+      val edges = pairs.unionAll(
+        pairs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       graft.ops.Graph.pageRankWeighted(edges, "src", "dst", "w", iters = 3)
         .withColumnRenamed("node", "part_id")
         .orderBy("part_id")
@@ -268,15 +248,9 @@ object CatalogML9 {
     // retraction ≡ full, to the hash. Same mod-3 part slice as q228
     // so the base build stays cheap.
     ("q229_graph_triangles_retract", (s: SparkSession, d: String) => {
-      def pairsOf(pred: Column => Column) = {
-        val li = table(s, d, "lineitem")
-          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"),
-            col("l_partkey").as("__p2")), Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
+      def pairsOf(pred: Column => Column) =
+        graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey"))))
       val all = pairsOf(_ => lit(true))
       val removed = pairsOf(ok => ok % 7 === 0)
       // cold-retract helper (round-15): one shared base
@@ -314,14 +288,8 @@ object CatalogML9 {
     // q220 two-independent-algorithms posture applied inside an
     // iterative peel.
     ("q228_graph_ktruss", (s: SparkSession, d: String) => {
-      val li = table(s, d, "lineitem")
-        .where(col("l_partkey") % 3 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val pairs = li
-        .join(li.select(col("l_orderkey"),
-          col("l_partkey").as("__p2")), Seq("l_orderkey"))
-        .where(col("l_partkey") < col("__p2"))
-        .select(col("l_partkey").as("src"), col("__p2").as("dst"))
+      val pairs = graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+        .where(col("l_partkey") % 3 === 0))
       graft.ops.Graph.kTruss(pairs, "src", "dst", k = 7, iters = 4)
         .select(col("a").as("part_a"), col("b").as("part_b"),
           col("support"))

@@ -1068,15 +1068,9 @@ object CatalogStream {
       import graft.ops.GraphState, GraphState.Triangles
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q230_graph_$tag"
-      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-        val li = table(s, d, "lineitem")
-          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-            Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
+      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+        graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey"))))
       val dir = stageWavesCached(d, "graph-waves")(Seq(
         pairsOf(ok => ok % 3 === 0), pairsOf(ok => ok % 3 === 1),
         pairsOf(ok => ok % 3 === 2)))
@@ -1119,15 +1113,9 @@ object CatalogStream {
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q236_graph_$tag"
       val view = KCore(20)
-      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-        val li = table(s, d, "lineitem")
-          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-            Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
+      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+        graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey"))))
       val dir = stageWavesCached(d, "graph-waves")(Seq(
         pairsOf(ok => ok % 3 === 0), pairsOf(ok => ok % 3 === 1),
         pairsOf(ok => ok % 3 === 2)))
@@ -1176,15 +1164,9 @@ object CatalogStream {
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q237_graph_$tag"
       val view = KCore(20)
-      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-        val li = table(s, d, "lineitem")
-          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-            Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
+      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+        graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey"))))
       val takedown = pairsOf(ok => ok % 3 =!= 2)
         .where((col("src") + col("dst")) % 11 === 0)
       val dir = stageWavesCached(d, "graph-waves-ops")(Seq(
@@ -1258,15 +1240,9 @@ object CatalogStream {
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q238_graph_$tag"
       val view = Communities(3)
-      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-        val li = table(s, d, "lineitem")
-          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-          .select(col("l_orderkey"), col("l_partkey"))
-        li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-            Seq("l_orderkey"))
-          .where(col("l_partkey") < col("__p2"))
-          .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-      }
+      def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+        graft.ops.Graph.coOrderEdges(table(s, d, "lineitem")
+          .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey"))))
       val dir = stageWavesCached(d, "graph-waves")(Seq(
         pairsOf(ok => ok % 3 === 0), pairsOf(ok => ok % 3 === 1),
         pairsOf(ok => ok % 3 === 2)))

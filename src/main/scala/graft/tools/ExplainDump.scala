@@ -234,15 +234,9 @@ object ExplainDump {
         ("comm_advance_plan", "plans_cm", Communities(2)),
         ("anf_advance_plan", "plans_anf", Anf(2))).map { case (plan, pair, view) =>
       plan -> ((s: SparkSession, d: String) => {
-        def pairsOf(pred: Column => Column) = {
-          val li = graft.ops.Tables.table(s, d, "lineitem")
-            .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-            .select(col("l_orderkey"), col("l_partkey"))
-          li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-              Seq("l_orderkey"))
-            .where(col("l_partkey") < col("__p2"))
-            .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-        }
+        def pairsOf(pred: Column => Column) =
+          graft.ops.Graph.coOrderEdges(graft.ops.Tables.table(s, d, "lineitem")
+            .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey"))))
         GraphState.init(s, pair, view, pairsOf(ok => ok % 3 =!= 0), "src", "dst")
         GraphState.plan(s, pair, view, pairsOf(ok => ok % 3 === 0), "src", "dst")._2
       })

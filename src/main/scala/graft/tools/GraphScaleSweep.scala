@@ -37,14 +37,14 @@ object GraphScaleSweep {
     spark.sparkContext.setLogLevel("ERROR")
 
     val li = graft.ops.Tables.table(spark, sfDir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-    val base = li
-      .join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-        Seq("l_orderkey"))
-      .where(col("l_partkey") < col("__p2"))
-      .select(col("l_partkey").as("src"), col("__p2").as("dst"))
     // materialize once so every expansion reads the same pair table
-    val b = base.localCheckpoint()
+    val b = Graph.coOrderEdges(li).localCheckpoint()
+    // `copies` disjoint copies of an edge set, ids offset by 10^9 per copy
+    def expand(e: org.apache.spark.sql.DataFrame, copies: Int) =
+      (0 until copies).map(i =>
+          e.select((col("src") + i * 1000000000L).as("src"),
+            (col("dst") + i * 1000000000L).as("dst")))
+        .reduce(_.unionAll(_))
 
     println("| op | copies | edges-in | wall (s) | check |")
     val copiesList = sys.env.getOrElse("SPARK_GRAFT_GRAPH_COPIES", "1,4,8")
@@ -52,10 +52,10 @@ object GraphScaleSweep {
     val opsRun = sys.env.getOrElse("SPARK_GRAFT_GRAPH_OPS",
       "triangles,louvain,multilevel,kcore").split(",").map(_.trim).toSet
     for (copies <- copiesList) {
-      val edges = (0 until copies).map(i =>
-          b.select((col("src") + i * 1000000000L).as("src"),
-            (col("dst") + i * 1000000000L).as("dst")))
-        .reduce(_.unionAll(_))
+      val edges = expand(b, copies)
+      // the co-order edges of the orders `pred` keeps, expanded like `edges`
+      def pairsAt(pred: org.apache.spark.sql.Column) =
+        expand(Graph.coOrderEdges(li.where(pred)), copies)
       val n = edges.count()
       def time[A](f: => A): (Double, A) = {
         val t0 = System.nanoTime()
@@ -123,15 +123,7 @@ object GraphScaleSweep {
         // of the remainder: a ~2%-of-pairs takedown slice leaves the
         // stabilized core (materialized UNTIMED — it exists in the
         // maintenance scenario); checksums compared
-        val lik = graft.ops.Tables.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-        val kb = (0 until copies).map(i =>
-            lik.join(lik.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-                Seq("l_orderkey"))
-              .where(col("l_partkey") < col("__p2"))
-              .select((col("l_partkey") + i * 1000000000L).as("src"),
-                (col("__p2") + i * 1000000000L).as("dst")))
-          .reduce(_.unionAll(_)).localCheckpoint()
+        val kb = pairsAt(lit(true)).localCheckpoint()
         val removed = kb.where((col("src") + col("dst")) % 50 === 0)
           .localCheckpoint()
         val prevCore = Graph.kCoreFixedPoint(kb, "src", "dst", k = 55)
@@ -155,18 +147,6 @@ object GraphScaleSweep {
         // core materialized UNTIMED (it exists in the maintenance
         // scenario); both legs at the k=55 fixture the q231 oracle
         // uses, checksums compared
-        val lik = graft.ops.Tables.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-        def pairsAt(pred: org.apache.spark.sql.Column) = {
-          val l = lik.where(pred)
-          (0 until copies).map(i =>
-            l.join(l.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-                Seq("l_orderkey"))
-              .where(col("l_partkey") < col("__p2"))
-              .select((col("l_partkey") + i * 1000000000L).as("src"),
-                (col("__p2") + i * 1000000000L).as("dst")))
-            .reduce(_.unionAll(_))
-        }
         val kb = pairsAt(col("l_orderkey") % 100 =!= 0).localCheckpoint()
         val kd = pairsAt(col("l_orderkey") % 100 === 0).localCheckpoint()
         val prevCore = Graph.kCore(kb, "src", "dst", k = 55, iters = 9)
@@ -187,15 +167,7 @@ object GraphScaleSweep {
         // touching one contiguous ~2% id band) vs the full re-peel —
         // the complement of the scattered kcoreret slice, whose
         // every-neighborhood wound is retraction's worst case
-        val lik = graft.ops.Tables.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-        val kb = (0 until copies).map(i =>
-            lik.join(lik.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-                Seq("l_orderkey"))
-              .where(col("l_partkey") < col("__p2"))
-              .select((col("l_partkey") + i * 1000000000L).as("src"),
-                (col("__p2") + i * 1000000000L).as("dst")))
-          .reduce(_.unionAll(_)).localCheckpoint()
+        val kb = pairsAt(lit(true)).localCheckpoint()
         val removed = kb.where(
             pmod(col("src"), lit(1000000000L)) < 400 ||
             pmod(col("dst"), lit(1000000000L)) < 400)
@@ -223,18 +195,6 @@ object GraphScaleSweep {
         // same 12-round cap, so the rounds column IS the measured
         // saving. Assignments are local optima, not comparable by
         // hash — the check column records community counts.
-        val lik = graft.ops.Tables.table(spark, sfDir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey"))
-        def pairsAt(pred: org.apache.spark.sql.Column) = {
-          val l = lik.where(pred)
-          (0 until copies).map(i =>
-            l.join(l.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-                Seq("l_orderkey"))
-              .where(col("l_partkey") < col("__p2"))
-              .select((col("l_partkey") + i * 1000000000L).as("src"),
-                (col("__p2") + i * 1000000000L).as("dst")))
-            .reduce(_.unionAll(_))
-        }
         def symOf(df: org.apache.spark.sql.DataFrame) =
           df.unionAll(df.select(col("dst").as("src"), col("src").as("dst")))
         val cb = pairsAt(col("l_orderkey") % 100 =!= 0).distinct()

@@ -33,18 +33,10 @@ object PageRankWarmAb {
 
     val symmetrize = sys.env.getOrElse("SPARK_GRAFT_PR_SYM", "1") == "1"
     def sym(pred: org.apache.spark.sql.Column): DataFrame = {
-      val li = graft.ops.Tables.table(spark, sfDir, "lineitem")
-        .where(col("l_partkey") % 3 === 0 && pred)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val p = li.join(li.select(col("l_orderkey"),
-          col("l_partkey").as("__p2")), Seq("l_orderkey"))
-        .where(col("l_partkey") < col("__p2"))
-        .select(col("l_partkey").as("a"), col("__p2").as("b"))
-        .distinct()
-      val fwd = p.select(col("a").as("src"), col("b").as("dst"))
-      if (symmetrize)
-        fwd.unionAll(p.select(col("b").as("src"), col("a").as("dst")))
-      else fwd
+      val p = graft.ops.Graph.coOrderEdges(graft.ops.Tables.table(spark, sfDir, "lineitem")
+        .where(col("l_partkey") % 3 === 0 && pred)).distinct()
+      if (symmetrize) p.unionAll(p.select(col("dst").as("src"), col("src").as("dst")))
+      else p
     }
     val base = sym(col("l_orderkey") % mod =!= 0).localCheckpoint()
     val union = sym(lit(true)).localCheckpoint()

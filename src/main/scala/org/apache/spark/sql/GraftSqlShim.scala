@@ -5,9 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Bridge into Spark's `private[sql]` surface (Spark 4 removed the public
   * `new Column(expr)` constructor in the Connect refactor). Lives in the
   * org.apache.spark.sql package solely to convert custom Catalyst
-  * expressions into Columns and to register them as SQL functions on an
-  * already-built session (the driver hands us its session, so
-  * SparkSessionExtensions at build time is not an option).
+  * expressions into Columns and to fit the engine's Catalyst surface
+  * onto a session built elsewhere (`GraftEngine.install`).
   */
 object GraftSqlShim {
 
@@ -25,12 +24,19 @@ object GraftSqlShim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Resolve the planner strategies a SparkSessionExtensions instance
-    * would inject (private[sql] in Spark) — lets tests assert on
-    * build-time extension wiring without constructing a new session. */
-  def plannerStrategies(ext: SparkSessionExtensions,
-                        spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+  /** The strategies the session's planner plans with: its experimental
+    * ones, those its extensions inject, then Spark's own. */
+  def plannerStrategies(spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner.strategies
+
+  /** The session's own extensions object. Its planner reads the
+    * injected strategies again on every plan, so a strategy injected
+    * into a built session takes effect from its next query. Functions
+    * injected into it reach only the sessions derived later
+    * (`newSession()`); the session's live function registry takes them
+    * through [[registerFunction]]. */
+  def extensions(spark: SparkSession): SparkSessionExtensions =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].extensions
 
   /** The reliable-checkpoint file behind a frame returned by
     * `Dataset.checkpoint()`, if any — the checkpointed RDD rides inside
@@ -121,6 +127,19 @@ object GraftSqlShim {
   def builderOptions(b: SparkSession.Builder): Map[String, String] =
     b.getClass.getMethod("options").invoke(b)
       .asInstanceOf[scala.collection.mutable.HashMap[String, String]].toMap
+
+  /** The SQL function builder Spark's own UDF registration uses for a
+    * Scala UDF (a `ScalaUDF`) or a typed-Aggregator UDAF (the bare
+    * aggregate function, which the analyzer wraps). A builder that goes through
+    * [[column]]/[[expression]] instead yields an unresolved column node
+    * that the SQL function path never converts. */
+  def userDefined(f: org.apache.spark.sql.expressions.UserDefinedFunction)
+      : Seq[Expression] => Expression = f match {
+    case a: org.apache.spark.sql.expressions.UserDefinedAggregator[_, _, _] =>
+      args => org.apache.spark.sql.execution.aggregate.ScalaAggregator(a, args)
+    case u: org.apache.spark.sql.expressions.SparkUserDefinedFunction =>
+      args => org.apache.spark.sql.classic.UserDefinedFunctionUtils.toScalaUDF(u, args)
+  }
 
   /** Register (idempotently) a temp SQL function backed by an expression
     * builder on the given session. */

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.connector.{FileTopicSource, KinesisTopicSource, TopicSink}
@@ -14,7 +15,8 @@ import graft.testkit.{FakeKinesis, FakeKinesisSender}
 
 import scala.concurrent.duration._
 
-/** Engine registry (eager topic subscriptions) + backoff supervision. */
+/** Engine install paths, registry (eager topic subscriptions) + backoff
+  * supervision. */
 class EngineSpec extends SparkSpec {
 
   test("topic registry starts registered subscriptions and processes data") {
@@ -105,12 +107,59 @@ class EngineSpec extends SparkSpec {
     assert(queries.size == 2)
   }
 
+  /** Every `graft_*` SQL function: a call over inline data (no temp
+    * view, so it runs on any session) and the value it must give. */
+  private lazy val sqlSurface: Seq[(String, String, Any)] = Seq(
+    ("graft_cosine", "SELECT graft_cosine(CAST(array(1, 0) AS ARRAY<FLOAT>), " +
+      "CAST(array(1, 0) AS ARRAY<FLOAT>))", 1.0),
+    ("graft_dot", "SELECT graft_dot(CAST(array(1, 2) AS ARRAY<FLOAT>), " +
+      "CAST(array(3, 4) AS ARRAY<FLOAT>))", 11.0),
+    ("graft_simhash", "SELECT graft_simhash(array('a', 'b'))",
+      spark.range(1).select(graft.functions.SimHashAgg.simRow(array(lit("a"), lit("b"))))
+        .head().getLong(0)),
+    ("graft_minhash", "SELECT size(graft_minhash(array('a', 'b'), 8))", 8),
+    ("graft_minhash_chars", "SELECT size(graft_minhash_chars('hello world', 3, 8))", 8),
+    ("graft_pack_int8", "SELECT hex(graft_pack_int8(array(1L, -1L, 127L)))", "01FF7F"),
+    ("graft_int8_dot", "SELECT graft_int8_dot(graft_pack_int8(array(1L, 2L)), " +
+      "graft_pack_int8(array(3L, -4L)))", -5L),
+    ("graft_sig_matches", "SELECT graft_sig_matches(array(1L, 2L, 3L), array(1L, 9L, 3L))", 2),
+    ("graft_byte_histogram",
+      "SELECT element_at(graft_byte_histogram(CAST('aab' AS BINARY)), 7)", 3),
+    ("graft_byte_gram_signature",
+      "SELECT size(graft_byte_gram_signature(CAST('alpha beta' AS BINARY), 64))", 64),
+    ("graft_topk", "SELECT graft_topk(v, 2) FROM VALUES (1.0D), (3.0D), (2.0D) AS t(v)",
+      Seq(3.0, 2.0)),
+    ("graft_centroid", "SELECT graft_centroid(v) FROM VALUES " +
+      "(CAST(array(1, 2) AS ARRAY<FLOAT>)), (CAST(array(3, 4) AS ARRAY<FLOAT>)) AS t(v)",
+      Seq(2.0f, 3.0f)),
+    ("graft_char_entropy", "SELECT graft_char_entropy('abcd')", 2.0))
+
+  /** Run `body` on a new session from `builder` (not the engine's
+    * builder), then give the thread back its active session. */
+  private def withNewSession(builder: SparkSession.Builder)(body: SparkSession => Unit): Unit = {
+    val active = SparkSession.getActiveSession
+    try body(builder.create())
+    finally active match {
+      case Some(s) => SparkSession.setActiveSession(s)
+      case None => SparkSession.clearActiveSession()
+    }
+  }
+
+  private def asofOn(s: SparkSession) = graft.ops.AsOfJoin.asofPlanned(
+    s.range(4).selectExpr("id AS k", "id * 10 AS t"),
+    s.range(4).selectExpr("id AS rk", "id * 10 - 5 AS rt", "id AS v"),
+    "k", "rk", "t", "rt", Seq("v"))
+
   test("GraftExtensions injects the as-of strategy and working SQL functions") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions()(ext)
-    val strategies = org.apache.spark.sql.GraftSqlShim.plannerStrategies(ext, spark)
-    assert(strategies.contains(graft.plans.AsOfJoinStrategy),
-      s"as-of strategy missing from injected set: $strategies")
+    // a session built with the extension alone: exactly the 13 names of
+    // the SQL surface and the one strategy
+    withNewSession(SparkSession.builder().withExtensions(new GraftExtensions)) { s =>
+      assert(GraftSqlShim.plannerStrategies(s).count(_ == graft.plans.AsOfJoinStrategy) == 1)
+      val injected = s.catalog.listFunctions().collect().map(_.name)
+        .filter(_.startsWith("graft_")).toSet
+      assert(injected == sqlSurface.map(_._1).toSet,
+        s"missing ${sqlSurface.map(_._1).toSet -- injected}, extra ${injected -- sqlSurface.map(_._1)}")
+    }
     // every injected builder must produce a usable expression
     val builders = GraftExtensions.functions.toMap
     val cos = builders("graft_cosine")
@@ -125,6 +174,44 @@ class EngineSpec extends SparkSpec {
     val eight = org.apache.spark.sql.catalyst.expressions.Literal(8)
     assert(mh(Seq(toks, eight)).eval(null)
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].numElements() == 8)
+  }
+
+  test("every graft_* SQL function resolves on the engine-built session, no register call") {
+    sqlSurface.foreach { case (name, sql, want) =>
+      assert(spark.sql(sql).head().get(0) == want, s"$name: $sql")
+    }
+  }
+
+  test("install retrofits a foreign session once: SQL surface, one strategy, modifiable confs") {
+    withNewSession(SparkSession.builder()) { foreign =>
+      // the shared context carries the engine confs the test session was
+      // built with; clear them here so install has them to set
+      val modifiable = GraftEngine.recommendedConfs.filter {
+        case (k, _) => foreign.conf.isModifiable(k)
+      }
+      modifiable.keys.foreach(foreign.conf.unset)
+      assert(modifiable.exists { case (k, v) => !foreign.conf.getOption(k).contains(v) })
+      intercept[org.apache.spark.sql.AnalysisException](
+        foreign.sql("SELECT graft_char_entropy('ab')").collect())
+      val refused = intercept[IllegalArgumentException](asofOn(foreign))
+      assert(refused.getMessage.contains("GraftEngine.install"), refused.getMessage)
+
+      GraftEngine.install(foreign)
+      GraftEngine.install(foreign)
+      sqlSurface.foreach { case (name, sql, want) =>
+        assert(foreign.sql(sql).head().get(0) == want, s"$name: $sql")
+      }
+      assert(GraftSqlShim.plannerStrategies(foreign)
+        .count(_ == graft.plans.AsOfJoinStrategy) == 1)
+      modifiable.foreach { case (k, v) =>
+        assert(foreign.conf.get(k) == v, s"install must set $k=$v")
+      }
+      val planned = asofOn(foreign)
+      assert(planned.queryExecution.sparkPlan.collect {
+        case j: graft.plans.AsOfJoinExec => j }.size == 1)
+      assert(planned.select("k", "v").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        (0L until 4L).map(i => i -> i).toMap)
+    }
   }
 
   test("recommended conf posture: builder pins every key, retrofit every modifiable one") {
@@ -149,9 +236,9 @@ class EngineSpec extends SparkSpec {
     // (spark.conf.set throws on static keys)
     val before = modifiable.keys.map(k => k -> spark.conf.getOption(k)).toMap
     try {
-      GraftEngine.applyRecommendedConfs(spark)
+      GraftEngine.install(spark)
       modifiable.foreach { case (k, v) =>
-        assert(spark.conf.get(k) == v, s"applyRecommendedConfs must set $k=$v")
+        assert(spark.conf.get(k) == v, s"install must set $k=$v")
       }
     } finally before.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.functions.{GraftAggregators, GraftUdfs, VectorFunctions}
+import graft.functions.VectorFunctions
 import graft.streaming.StreamOps
 
 /** UDF/UDAF surface + flatMapGroupsWithState + SQL function registration. */
@@ -12,7 +12,6 @@ class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
   test("VectorCentroid aggregator computes per-group elementwise means") {
-    GraftAggregators.register(spark)
     val df = Seq(
       (0, Array(1.0f, 2.0f)), (0, Array(3.0f, 4.0f)),
       (1, Array(10.0f, 20.0f)))
@@ -26,7 +25,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("charEntropy UDF: uniform strings high, constant strings zero") {
-    GraftUdfs.register(spark)
     val out = Seq(("aaaa", 1), ("abcd", 2)).toDF("s", "id")
       .selectExpr("id", "graft_char_entropy(s) AS e")
       .as[(Int, Double)].collect().toMap
@@ -35,7 +33,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_topk keeps the k largest values with O(k) state") {
-    graft.functions.TopKValues.register(spark)
     (1 to 100).map(i => (i % 3, i.toDouble)).toDF("g", "v")
       .createOrReplaceTempView("topk_in")
     val out = spark.sql("SELECT g, graft_topk(v, 4) AS t FROM topk_in GROUP BY g")
@@ -89,7 +86,6 @@ class FunctionsSpec extends SparkSpec {
     got.foreach { case (m, ref) => assert(m == ref, s"$m != $ref") }
     assert(got.map(_._1).toSeq == Seq(2, 2, 0))
     // SQL surface
-    VectorFunctions.register(spark)
     df.createOrReplaceTempView("sig_match_in")
     val viaSql = spark.sql("SELECT graft_sig_matches(a, b) FROM sig_match_in")
       .as[Int].collect().toSeq
@@ -101,7 +97,6 @@ class FunctionsSpec extends SparkSpec {
     val df = Seq((1L, "alpha beta gamma"), (2L, "zz"))
       .toDF("id", "t")
       .select(col("id"), col("t").cast("binary").as("bytes"))
-    graft.functions.VectorFunctions.register(spark)
     df.createOrReplaceTempView("bgs_in")
     val viaSql = spark.sql(
       """SELECT id, graft_byte_histogram(bytes) AS h,
@@ -168,7 +163,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("graft_cosine SQL registration works through spark.sql") {
-    VectorFunctions.register(spark)
     Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f))).toDF("a", "b")
       .createOrReplaceTempView("cos_in")
     val c = spark.sql("SELECT graft_cosine(a, b) AS c FROM cos_in").as[Double].head()

@@ -19,15 +19,9 @@ class GraphStateSpec extends SparkSpec {
   private def stats(name: String): DataFrame =
     GraphState.table(spark, name, Triangles)
 
-  private def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
-    val li = Tables.table(spark, sf, "lineitem")
-      .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey")))
-      .select(col("l_orderkey"), col("l_partkey"))
-    li.join(li.select(col("l_orderkey"), col("l_partkey").as("__p2")),
-        Seq("l_orderkey"))
-      .where(col("l_partkey") < col("__p2"))
-      .select(col("l_partkey").as("src"), col("__p2").as("dst"))
-  }
+  private def pairsOf(pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
+    Graph.coOrderEdges(Tables.table(spark, sf, "lineitem")
+      .where(col("l_partkey") % 3 === 0 && pred(col("l_orderkey"))))
 
   private def sortedStats(df: DataFrame): Seq[(Long, Long, Long, Double)] =
     df.select("node", "degree", "n_triangles", "clustering")

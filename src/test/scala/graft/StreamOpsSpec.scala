@@ -207,7 +207,6 @@ class StreamOpsSpec extends SparkSpec {
   }
 
   test("graft_minhash / graft_simhash SQL functions match the library ops") {
-    graft.functions.MinHashSig.register(spark)
     val docs = graft.ops.Tables.table(spark, sf, "documents").limit(20)
     docs.createOrReplaceTempView("sig_docs")
     val viaSql = spark.sql(
