@@ -31,19 +31,6 @@ object Checkpointing {
     * else → `localCheckpoint()`. */
   val ReliableKey = "spark.graft.checkpoint.reliable"
 
-  /** Session-conf storage level for LOCAL truncation blocks
-    * (`StorageLevel.fromString` names: MEMORY_AND_DISK,
-    * MEMORY_AND_DISK_SER, DISK_ONLY, …). Default MEMORY_AND_DISK —
-    * Spark's own `localCheckpoint()` default. Serialized levels cut
-    * the block footprint ~3-4× (UnsafeRow bytes, no per-row object
-    * headers) at a small decode cost per re-read — the right trade
-    * when an iterative operator's state tables approach the heap
-    * (the graph family's edge/orientation tables; see
-    * [[Graph.triangleStats]], which requests it directly for its
-    * large intermediates rather than relying on this session-wide
-    * knob). */
-  val StorageKey = "spark.graft.checkpoint.storageLevel"
-
   /** Switch the session to reliable checkpointing into `dir` (must be
     * on storage that survives executor loss — HDFS/S3 on a cluster). */
   def enableReliable(spark: SparkSession, dir: String): Unit = {
@@ -79,18 +66,15 @@ object Checkpointing {
   def truncate(df: DataFrame): DataFrame =
     if (isReliable(df.sparkSession))
       org.apache.spark.sql.GraftSqlShim.stripCarriedStats(df.checkpoint())
-    else org.apache.spark.sql.GraftSqlShim.withMeasuredStats(
-      df.sparkSession.conf.getOption(StorageKey) match {
-        case Some(name) =>
-          df.localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.fromString(name))
-        case None => df.localCheckpoint()
-      })
+    else org.apache.spark.sql.GraftSqlShim.withMeasuredStats(df.localCheckpoint())
 
   /** [[truncate]], but local blocks are stored SERIALIZED
-    * (MEMORY_AND_DISK_SER) regardless of [[StorageKey]] — for
-    * corpus-sized iterative state where deserialized row objects
-    * would dominate the heap. Reliable mode is unaffected (a
+    * (MEMORY_AND_DISK_SER, where [[truncate]] keeps Spark's
+    * `localCheckpoint()` default MEMORY_AND_DISK) — for corpus-sized
+    * iterative state where deserialized row objects would dominate
+    * the heap: serialized blocks cut the footprint ~3-4× (UnsafeRow
+    * bytes, no per-row object headers) at a small decode cost per
+    * re-read. Reliable mode is unaffected (a
     * `checkpoint()` is already an on-disk byte image). Leaf stats are
     * measured or stripped, as in [[truncate]] (serialized levels
     * measure the UnsafeRow byte image — the closest proxy to

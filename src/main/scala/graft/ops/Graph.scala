@@ -60,48 +60,10 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // Iterative lineage discipline (the [[Dedup.connectedComponents]]
-    // pattern, and the reason this is not a naive loop): rank_{t+1}
-    // references rank_t TWICE (directly and through its contribution
-    // aggregate), so an untruncated loop doubles the plan — and the
-    // edge-derivation scans — every round (2^T blowup; the first
-    // plan dump of this operator carried 120 scans at T=3). The edge
-    // frame is truncated once and each round's rank frame truncates
-    // before the next builds on it, with superseded checkpoint files
-    // rotated away in reliable mode.
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")))
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("out_deg"))
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(outDeg, Seq("node"), "left")
-      .withColumn("out_deg", coalesce(col("out_deg"), lit(0L)))
-    // N rides along as a broadcast literal-free cross join (one-row agg)
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), col("out_deg"),
-        (lit(1.0) / col("__n")).as("rank"), col("__n")))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("out_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("out_deg")).as("__c")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__c") * lit(1.0e12)).cast("long")
-            .cast(DecimalType(38, 0)))
-          .cast("string").cast("double") / lit(1.0e12)).as("__s"))
-      val prev = ranks
-      ranks = Checkpointing.truncate(ranks
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("out_deg"),
-          (lit(1.0 - damping) / col("__n") +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"),
-          col("__n")))
-      Checkpointing.release(prev) // superseded round's stable files
-    }
-    ranks.select(col("node"), col("out_deg"), col("rank"))
+    val (e, nodes) = powerGraph(edges, srcCol, dstCol, None)
+    powerIteration(e, None,
+      uniformTeleport(nodes, damping).withColumn("rank", lit(1.0) / col("__n")),
+      "out_deg", iters, damping)
   }
 
   /** WARM-STARTED PageRank (round-13 verdict stretch #9 — incremental
@@ -109,124 +71,28 @@ object Graph {
     * vector instead of uniform. The crawl-delta scenario: after edges
     * land, restart from the PREVIOUS rank vector — the fixed point
     * moved a little, so far fewer rounds reach the same tolerance
-    * than a cold uniform start (measured in
-    * `tools.PageRankWarmAb`). Nodes absent from `startRanks` (the
+    * than a cold uniform start (SCALING.md, "PageRank warm-start:
+    * measured rounds saved"). Nodes absent from `startRanks` (the
     * delta's new nodes) start at 1/N of THIS graph; extra rows in
     * `startRanks` for departed nodes are ignored.
     *
     * Exact-replay law (GraphSpec asserts it): on an unchanged graph,
     * `pageRankFrom(e, pageRank(e, T1), T2)` is BIT-IDENTICAL to
     * `pageRank(e, T1 + T2)` — the warm rounds continue the exact
-    * quantized sequence. Same per-term 10⁻¹² quantization +
-    * DECIMAL(38,0) exact sum as [[pageRank]], so the full unrolled
-    * oracle exists for the whole cold-then-warm history (q235). */
+    * quantized sequence, since only the start vector differs from
+    * [[pageRank]]. The full unrolled oracle exists for the whole
+    * cold-then-warm history (q235). */
   def pageRankFrom(edges: DataFrame, srcCol: String, dstCol: String,
                    startRanks: DataFrame, iters: Int,
                    damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")))
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("out_deg"))
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(outDeg, Seq("node"), "left")
-      .withColumn("out_deg", coalesce(col("out_deg"), lit(0L)))
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
+    val (e, nodes) = powerGraph(edges, srcCol, dstCol, None)
     val start = startRanks
       .select(col("node").cast("long").as("node"), col("rank").as("__r0"))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nRow))
-      .join(start, Seq("node"), "left")
-      .select(col("node"), col("out_deg"),
-        coalesce(col("__r0"), lit(1.0) / col("__n")).as("rank"),
-        col("__n")))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("out_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("out_deg")).as("__c")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__c") * lit(1.0e12)).cast("long")
-            .cast(DecimalType(38, 0)))
-          .cast("string").cast("double") / lit(1.0e12)).as("__s"))
-      val prev = ranks
-      ranks = Checkpointing.truncate(ranks
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("out_deg"),
-          (lit(1.0 - damping) / col("__n") +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"),
-          col("__n")))
-      Checkpointing.release(prev)
-    }
-    ranks.select(col("node"), col("out_deg"), col("rank"))
-  }
-
-  /** DuckDB twin of a cold-then-warm history: `coldIters` rounds over
-    * `eb` (the base graph), then `warmIters` rounds over `e` (the
-    * grown graph) starting from the cold result — the ENTIRE two-phase
-    * run unrolled. `baseEdgesCte` must define `eb(src, dst)`,
-    * `unionEdgesCte` must define `e(src, dst)` (it may reference CTEs
-    * of the base chain). */
-  def pageRankWarmSql(baseEdgesCte: String, unionEdgesCte: String,
-                      coldIters: Int, warmIters: Int,
-                      damping: Double = 0.85): String = {
-    require(coldIters >= 1 && warmIters >= 1)
-    val dsum = "CAST(CAST(SUM(CAST(CAST(floor(r.rank / r.out_deg * " +
-      "1000000000000.0) AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) " +
-      "AS DOUBLE) / 1000000000000.0"
-    val cold = (1 to coldIters).map { t =>
-      s"""ca$t AS (
-         |  SELECT e.dst AS node, $dsum AS s
-         |  FROM eb e JOIN cr${t - 1} r ON e.src = r.node AND r.out_deg > 0
-         |  GROUP BY 1
-         |), cr$t AS (
-         |  SELECT n.node, n.out_deg,
-         |         ${1.0 - damping} / (SELECT n FROM nnb) +
-         |           $damping * COALESCE(a.s, 0.0) AS rank
-         |  FROM nodes_b n LEFT JOIN ca$t a ON a.node = n.node
-         |)""".stripMargin
-    }.mkString(",\n")
-    val warm = (1 to warmIters).map { t =>
-      s"""wa$t AS (
-         |  SELECT e.dst AS node, $dsum AS s
-         |  FROM e JOIN wr${t - 1} r ON e.src = r.node AND r.out_deg > 0
-         |  GROUP BY 1
-         |), wr$t AS (
-         |  SELECT n.node, n.out_deg,
-         |         ${1.0 - damping} / (SELECT n FROM nn) +
-         |           $damping * COALESCE(a.s, 0.0) AS rank
-         |  FROM nodes_u n LEFT JOIN wa$t a ON a.node = n.node
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $baseEdgesCte,
-       |deg_b AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS od
-       |          FROM eb GROUP BY 1),
-       |nodes_b AS (
-       |  SELECT v.node, COALESCE(d.od, 0) AS out_deg
-       |  FROM (SELECT src AS node FROM eb UNION SELECT dst FROM eb) v
-       |  LEFT JOIN deg_b d ON d.node = v.node
-       |),
-       |nnb AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes_b),
-       |cr0 AS (SELECT node, out_deg, 1.0 / (SELECT n FROM nnb) AS rank
-       |        FROM nodes_b),
-       |$cold,
-       |$unionEdgesCte,
-       |deg_u AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS od
-       |          FROM e GROUP BY 1),
-       |nodes_u AS (
-       |  SELECT v.node, COALESCE(d.od, 0) AS out_deg
-       |  FROM (SELECT src AS node FROM e UNION SELECT dst FROM e) v
-       |  LEFT JOIN deg_u d ON d.node = v.node
-       |),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes_u),
-       |wr0 AS (
-       |  SELECT n.node, n.out_deg,
-       |         COALESCE(c.rank, 1.0 / (SELECT n FROM nn)) AS rank
-       |  FROM nodes_u n LEFT JOIN cr$coldIters c ON c.node = n.node
-       |),
-       |$warm
-       |SELECT node, out_deg, rank FROM wr$warmIters""".stripMargin
+    powerIteration(e, None, uniformTeleport(nodes, damping)
+        .join(start, Seq("node"), "left")
+        .withColumn("rank", coalesce(col("__r0"), lit(1.0) / col("__n"))),
+      "out_deg", iters, damping)
   }
 
   /** Personalized (seeded) PageRank: teleport mass returns only to
@@ -241,86 +107,116 @@ object Graph {
                            seeds: DataFrame, seedCol: String, iters: Int,
                            damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst")))
-    val outDeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("out_deg"))
+    val (e, nodes) = powerGraph(edges, srcCol, dstCol, None)
     val seedSet = seeds.select(col(seedCol).cast("long").as("node"))
       .distinct().withColumn("__seed", lit(true))
+    val seeded = nodes.join(seedSet, Seq("node"), "left")
+      .withColumn("__seed", coalesce(col("__seed"), lit(false)))
+    val nsRow = seeded.agg(sum(col("__seed").cast("long")).as("__ns"))
+    def perSeed(mass: Double): Column =
+      when(col("__seed"), lit(mass) / col("__ns")).otherwise(lit(0.0))
+    powerIteration(e, None, seeded.crossJoin(broadcast(nsRow))
+        .select(col("node"), col("deg"), perSeed(1.0).as("rank"),
+          perSeed(1.0 - damping).as("tele")),
+      "out_deg", iters, damping)
+  }
+
+  /** WEIGHTED PageRank: each node's rank splits over its out-edges
+    * proportionally to edge WEIGHT (contribution = rank · w / wdeg
+    * instead of rank / out_deg) — centrality over the co-order
+    * multiplicity graph where [[louvainWeighted]] already clusters
+    * (round-12 verdict stretch #9). Weight-≡-parallel-edges law: an
+    * integer-weighted edge behaves exactly like w parallel unit
+    * edges (the spec asserts it), so the operator is the natural
+    * multigraph reading of [[pageRank]]. Same per-term 10⁻¹²
+    * quantization + DECIMAL(38,0) exact sum, so the full unrolled
+    * oracle exists; same per-round lineage discipline. Weights are
+    * edge MULTIPLICITIES: `wCol` is cast to long (a fractional weight
+    * TRUNCATES toward zero — the [[louvainWeighted]] convention; scale
+    * fractional affinities to integer grains upstream), and the
+    * non-negativity precondition is VALIDATED (one cheap one-row
+    * aggregate over the truncated edge frame) — a negative
+    * multiplicity would silently corrupt every rank, so it fails fast
+    * instead. wdeg-0 nodes are dangling (leaky, as in [[pageRank]]).
+    * Returns (node, w_deg, rank). */
+  def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
+                       wCol: String, iters: Int,
+                       damping: Double = 0.85): DataFrame = {
+    require(iters >= 1, s"iters must be >= 1, got $iters")
+    val (e, nodes) = powerGraph(edges, srcCol, dstCol, Some(wCol))
+    val minW = e.agg(min(col("w"))).head().get(0)
+    require(minW == null || minW.asInstanceOf[Long] >= 0L,
+      s"edge weights must be non-negative multiplicities, found min $minW")
+    powerIteration(e, Some(col("w")),
+      uniformTeleport(nodes, damping).withColumn("rank", lit(1.0) / col("__n")),
+      "w_deg", iters, damping)
+  }
+
+  /** The PageRank operators' input: the truncated edge frame
+    * e(src, dst[, w]) and its node set (node, deg) — every id that
+    * appears as src or dst, with its out-degree (the edge count, or
+    * the weight sum when `wCol` is given; 0 for dangling nodes). */
+  private def powerGraph(edges: DataFrame, srcCol: String, dstCol: String,
+                         wCol: Option[String]): (DataFrame, DataFrame) = {
+    val e = Checkpointing.truncate(edges.select(
+      Seq(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")) ++
+        wCol.map(c => col(c).cast("long").as("w")): _*))
+    val deg = e.groupBy(col("src").as("node"))
+      .agg((if (wCol.isDefined) sum(col("w")) else count(lit(1))).as("deg"))
     val nodes = e.select(col("src").as("node"))
       .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(outDeg, Seq("node"), "left")
-      .withColumn("out_deg", coalesce(col("out_deg"), lit(0L)))
-      .join(seedSet, Seq("node"), "left")
-      .withColumn("__seed", coalesce(col("__seed"), lit(false)))
-    val nsRow = nodes.agg(sum(col("__seed").cast("long")).as("__ns"))
-    def teleport: Column =
-      when(col("__seed"), lit(1.0 - damping) / col("__ns")).otherwise(lit(0.0))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nsRow))
-      .select(col("node"), col("out_deg"), col("__seed"), col("__ns"),
-        when(col("__seed"), lit(1.0) / col("__ns")).otherwise(lit(0.0))
-          .as("rank")))
+      .join(deg, Seq("node"), "left")
+      .withColumn("deg", coalesce(col("deg"), lit(0L)))
+    (e, nodes)
+  }
+
+  /** `nodes` with N as `__n` (a broadcast one-row aggregate, no
+    * literal) and the uniform teleport term (1−d)/N as `tele`. */
+  private def uniformTeleport(nodes: DataFrame, damping: Double): DataFrame =
+    nodes.crossJoin(broadcast(nodes.agg(count(lit(1)).as("__n"))))
+      .withColumn("tele", lit(1.0 - damping) / col("__n"))
+
+  /** The power iteration behind [[pageRank]], [[pageRankFrom]],
+    * [[personalizedPageRank]] and [[pageRankWeighted]]: `iters`
+    * rounds of rank_{t+1}(v) = tele(v) + d · Σ_{u→v} rank_t(u)·w/deg(u)
+    * over the truncated edge frame `e(src, dst)`. `w` multiplies each
+    * edge's contribution (`None` for unit edges, so their plans carry
+    * no weight column). `nodes(node, deg, rank, tele)` gives each
+    * node its out-degree, start rank and teleport term; the four
+    * entry points differ only in this frame. Returns
+    * (node, `degName`, rank). */
+  private def powerIteration(e: DataFrame, w: Option[Column], nodes: DataFrame,
+                             degName: String, iters: Int,
+                             damping: Double): DataFrame = {
+    // Iterative lineage discipline (the [[Dedup.connectedComponents]]
+    // pattern, and the reason this is not a naive loop): rank_{t+1}
+    // references rank_t TWICE (directly and through its contribution
+    // aggregate), so an untruncated loop doubles the plan — and the
+    // edge-derivation scans — every round (2^T blowup; the first
+    // plan dump of this operator carried 120 scans at T=3). The edge
+    // frame is truncated once and each round's rank frame truncates
+    // before the next builds on it, with superseded checkpoint files
+    // rotated away in reliable mode.
+    var ranks = Checkpointing.truncate(
+      nodes.select(col("node"), col("deg"), col("rank"), col("tele")))
     for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("out_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("out_deg")).as("__c")), Seq("src"))
+      val share = ranks.where(col("deg") > 0)
+        .select(col("node").as("src"), (col("rank") / col("deg")).as("__c"))
+      val c = w.fold(col("__c"))(col("__c") * _)
+      val contribs = e.join(share, Seq("src"))
         .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__c") * lit(1.0e12)).cast("long")
+        .agg((sum(floor(c * lit(1.0e12)).cast("long")
             .cast(DecimalType(38, 0)))
           .cast("string").cast("double") / lit(1.0e12)).as("__s"))
       val prev = ranks
       ranks = Checkpointing.truncate(ranks
         .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("out_deg"), col("__seed"), col("__ns"),
-          (teleport + lit(damping) * coalesce(col("__s"), lit(0.0)))
-            .as("rank")))
-      Checkpointing.release(prev)
+        .select(col("node"), col("deg"),
+          (col("tele") + lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"),
+          col("tele")))
+      Checkpointing.release(prev) // superseded round's stable files
     }
-    ranks.select(col("node"), col("out_deg"), col("rank"))
-  }
-
-  /** DuckDB twin of [[personalizedPageRank]] (`edgesCte` defines
-    * e(src, dst); `seedsCte` defines seeds(node)). */
-  def personalizedPageRankSql(edgesCte: String, seedsCte: String,
-                              iters: Int, damping: Double = 0.85): String = {
-    require(iters >= 1)
-    val dsum = "CAST(CAST(SUM(CAST(CAST(floor(r.rank / r.out_deg * " +
-      "1000000000000.0) AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) " +
-      "AS DOUBLE) / 1000000000000.0"
-    val tele = s"CASE WHEN n.seed THEN ${1.0 - damping} / " +
-      "(SELECT n FROM ns) ELSE 0.0 END"
-    val rounds = (1 to iters).map { t =>
-      s"""a$t AS (
-         |  SELECT e.dst AS node, $dsum AS s
-         |  FROM e JOIN r${t - 1} r ON e.src = r.node AND r.out_deg > 0
-         |  GROUP BY 1
-         |), r$t AS (
-         |  SELECT n.node, n.out_deg,
-         |         $tele + $damping * COALESCE(a.s, 0.0) AS rank
-         |  FROM nodes n LEFT JOIN a$t a ON a.node = n.node
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $edgesCte,
-       |$seedsCte,
-       |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS od
-       |        FROM e GROUP BY 1),
-       |nodes AS (
-       |  SELECT v.node, COALESCE(d.od, 0) AS out_deg,
-       |         sd.node IS NOT NULL AS seed
-       |  FROM (SELECT src AS node FROM e UNION SELECT dst FROM e) v
-       |  LEFT JOIN deg d ON d.node = v.node
-       |  LEFT JOIN (SELECT DISTINCT node FROM seeds) sd ON sd.node = v.node
-       |),
-       |ns AS (SELECT CAST(SUM(CASE WHEN seed THEN 1 ELSE 0 END) AS BIGINT)
-       |       AS n FROM nodes),
-       |r0 AS (SELECT node, out_deg, seed,
-       |       CASE WHEN seed THEN 1.0 / (SELECT n FROM ns)
-       |            ELSE 0.0 END AS rank
-       |       FROM nodes),
-       |$rounds
-       |SELECT node, out_deg, rank FROM r$iters""".stripMargin
+    ranks.select(col("node"), col("deg").as(degName), col("rank"))
   }
 
   /** DuckDB twin of [[pageRank]]: the same T rounds unrolled as a CTE
@@ -328,58 +224,110 @@ object Graph {
   def pageRankSql(edgesCte: String, iters: Int,
                   damping: Double = 0.85): String = {
     require(iters >= 1)
-    val dsum = "CAST(CAST(SUM(CAST(CAST(floor(r.rank / r.out_deg * " +
-      "1000000000000.0) AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) " +
-      "AS DOUBLE) / 1000000000000.0"
-    val rounds = (1 to iters).map { t =>
-      s"""a$t AS (
-         |  SELECT e.dst AS node, $dsum AS s
-         |  FROM e JOIN r${t - 1} r ON e.src = r.node AND r.out_deg > 0
-         |  GROUP BY 1
-         |), r$t AS (
-         |  SELECT n.node, n.out_deg,
-         |         ${1.0 - damping} / (SELECT n FROM nn) +
-         |           $damping * COALESCE(a.s, 0.0) AS rank
-         |  FROM nodes n LEFT JOIN a$t a ON a.node = n.node
-         |)""".stripMargin
-    }.mkString(",\n")
     s"""WITH $edgesCte,
-       |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS od
-       |        FROM e GROUP BY 1),
-       |nodes AS (
-       |  SELECT v.node, COALESCE(d.od, 0) AS out_deg
-       |  FROM (SELECT src AS node FROM e UNION SELECT dst FROM e) v
-       |  LEFT JOIN deg d ON d.node = v.node
-       |),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-       |r0 AS (SELECT node, out_deg, 1.0 / (SELECT n FROM nn) AS rank
-       |       FROM nodes),
-       |$rounds
-       |SELECT node, out_deg, rank FROM r$iters""".stripMargin
+       |${powerRoundsSql("", "e", weighted = false, iters, damping)(
+         uniformStartSql(_, "1.0 / nn.n", damping))}
+       |SELECT node, deg AS out_deg, rank FROM r$iters""".stripMargin
   }
 
-  /** Synchronous label-propagation communities (LPA): every node
-    * starts labeled with its own id; each round it adopts the label
-    * MOST FREQUENT among its in-neighbors (ties to the smallest
-    * label; nodes with no in-edges keep theirs). Unlike
-    * [[Dedup.connectedComponents]]' hash-min (membership = reachable
-    * set), frequency voting finds DENSE communities inside one
-    * component — the crawl-graph use is host clustering where
-    * everything is weakly connected but neighborhoods matter.
-    * Callers symmetrize `edges` for the undirected reading.
-    *
-    * Everything is INTEGER arithmetic (labels, vote counts) and the
-    * per-node argmax is the total order (count desc, label asc), so T
-    * synchronous rounds are bit-portable with no decimal machinery —
-    * the full unrolled-CTE differential oracle exists for free
-    * ([[labelPropagationSql]]).
-    *
-    * Scale per round: one |E| src-keyed join carrying (dst, lbl)
-    * pairs, one map-side-combined (node, lbl) count, one node-sized
-    * argmax, one node-keyed carry join. Fixed T, no driver collect;
-    * same per-round lineage truncation + checkpoint rotation as
-    * [[pageRank]] (rank_{t+1} references rank_t twice).
-    */
+  /** DuckDB twin of a cold-then-warm history: `coldIters` rounds over
+    * `eb` (the base graph), then `warmIters` rounds over `e` (the
+    * grown graph) starting from the cold result — the ENTIRE two-phase
+    * run unrolled. `baseEdgesCte` must define `eb(src, dst)`,
+    * `unionEdgesCte` must define `e(src, dst)` (it may reference CTEs
+    * of the base chain). */
+  def pageRankWarmSql(baseEdgesCte: String, unionEdgesCte: String,
+                      coldIters: Int, warmIters: Int,
+                      damping: Double = 0.85): String = {
+    require(coldIters >= 1 && warmIters >= 1)
+    s"""WITH $baseEdgesCte,
+       |${powerRoundsSql("c", "eb", weighted = false, coldIters, damping)(
+         uniformStartSql(_, "1.0 / nn.n", damping))},
+       |$unionEdgesCte,
+       |${powerRoundsSql("w", "e", weighted = false, warmIters, damping)(
+         uniformStartSql(_, "COALESCE(c.rank, 1.0 / nn.n)", damping,
+           s"\nLEFT JOIN cr$coldIters c ON c.node = v.node"))}
+       |SELECT node, deg AS out_deg, rank FROM wr$warmIters""".stripMargin
+  }
+
+  /** DuckDB twin of [[personalizedPageRank]] (`edgesCte` defines
+    * e(src, dst); `seedsCte` defines seeds(node)). */
+  def personalizedPageRankSql(edgesCte: String, seedsCte: String,
+                              iters: Int, damping: Double = 0.85): String = {
+    require(iters >= 1)
+    val start = (nodes: String) =>
+      s"""SELECT v.node, v.deg,
+         |       CASE WHEN v.seed THEN 1.0 / ns.n ELSE 0.0 END AS rank,
+         |       CASE WHEN v.seed THEN ${1.0 - damping} / ns.n ELSE 0.0 END AS tele
+         |FROM (SELECT node, deg, node IN (SELECT node FROM seeds) AS seed
+         |      FROM $nodes) v
+         |CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS n FROM $nodes
+         |            WHERE node IN (SELECT node FROM seeds)) ns""".stripMargin
+    s"""WITH $edgesCte,
+       |$seedsCte,
+       |${powerRoundsSql("", "e", weighted = false, iters, damping)(start)}
+       |SELECT node, deg AS out_deg, rank FROM r$iters""".stripMargin
+  }
+
+  /** DuckDB twin of [[pageRankWeighted]] (`edgesCte` must define
+    * e(src, dst, w)). The per-term quantization floors rank/wdeg·w —
+    * the SAME association order as the Spark expression
+    * (divide-then-multiply), which is what makes the IEEE product
+    * bit-identical before the floor. */
+  def pageRankWeightedSql(edgesCte: String, iters: Int,
+                          damping: Double = 0.85): String = {
+    require(iters >= 1)
+    s"""WITH $edgesCte,
+       |${powerRoundsSql("", "e", weighted = true, iters, damping)(
+         uniformStartSql(_, "1.0 / nn.n", damping))}
+       |SELECT node, deg AS w_deg, rank FROM r$iters""".stripMargin
+  }
+
+  /** The DuckDB twin of [[powerIteration]]: one run over edge
+    * relation `edges(src, dst[, w])` unrolled as CTEs whose names
+    * start with `p` — `deg`, `nodes(node, deg)`, the node CTE
+    * `r0(node, deg, rank, tele)` whose body `start` builds from the
+    * prefixed `nodes` name, then per round t `a<t>` (the quantized
+    * contribution sum) and `r<t>(node, deg, rank)`. */
+  private def powerRoundsSql(p: String, edges: String, weighted: Boolean,
+                             iters: Int, damping: Double)(
+                             start: String => String): String = {
+    val share = if (weighted) "r.rank / r.deg * e.w" else "r.rank / r.deg"
+    val rounds = (1 to iters).map { t =>
+      s"""${p}a$t AS (
+         |  SELECT e.dst AS node,
+         |         CAST(CAST(SUM(CAST(CAST(floor($share * 1000000000000.0)
+         |           AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) AS DOUBLE)
+         |           / 1000000000000.0 AS s
+         |  FROM $edges e JOIN ${p}r${t - 1} r ON e.src = r.node AND r.deg > 0
+         |  GROUP BY 1
+         |), ${p}r$t AS (
+         |  SELECT n.node, n.deg, n.tele + $damping * COALESCE(a.s, 0.0) AS rank
+         |  FROM ${p}r0 n LEFT JOIN ${p}a$t a ON a.node = n.node
+         |)""".stripMargin
+    }.mkString(",\n")
+    val deg = if (weighted) "CAST(SUM(w) AS BIGINT)" else "CAST(count(*) AS BIGINT)"
+    s"""${p}deg AS (SELECT src AS node, $deg AS d FROM $edges GROUP BY 1),
+       |${p}nodes AS (
+       |  SELECT v.node, COALESCE(d.d, 0) AS deg
+       |  FROM (SELECT src AS node FROM $edges UNION SELECT dst FROM $edges) v
+       |  LEFT JOIN ${p}deg d ON d.node = v.node
+       |),
+       |${p}r0 AS (
+       |${start(p + "nodes")}
+       |),
+       |$rounds""".stripMargin
+  }
+
+  /** Body of a uniform-teleport node CTE over `nodes(node, deg)`:
+    * start rank `rank` (SQL that reads N as `nn.n`, after the
+    * optional `join`) and teleport (1−d)/N. */
+  private def uniformStartSql(nodes: String, rank: String, damping: Double,
+                              join: String = ""): String =
+    s"""SELECT v.node, v.deg, $rank AS rank, ${1.0 - damping} / nn.n AS tele
+       |FROM $nodes v
+       |CROSS JOIN (SELECT CAST(count(*) AS BIGINT) AS n FROM $nodes) nn$join""".stripMargin
+
   /** Per-node triangle counts + local clustering coefficient — the
     * transitivity readout of a co-occurrence graph (how clique-like a
     * node's neighborhood is: the community-density signal next to
@@ -404,13 +352,7 @@ object Graph {
     * integers plus one IEEE multiply/divide pair, so the whole
     * result is engine-portable. */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    triangleStatsCore(Checkpointing.truncateSer(edges
-      .select(col(srcCol).cast("long").as("__x"),
-        col(dstCol).cast("long").as("__y"))
-      .where(col("__x") =!= col("__y"))
-      .select(least(col("__x"), col("__y")).as("a"),
-        greatest(col("__x"), col("__y")).as("b"))
-      .distinct()))
+    triangleStatsCore(Checkpointing.truncateSer(canonPairs(edges, srcCol, dstCol)))
 
   /** [[triangleStats]] over an ALREADY-CANONICAL edge frame `e(a, b)`
     * — the [[GraphState]] init/rebuild path, where the maintained
@@ -618,6 +560,28 @@ object Graph {
        |FROM prof p CROSS JOIN asst a
        |ORDER BY 1""".stripMargin
 
+  /** Synchronous label-propagation communities (LPA): every node
+    * starts labeled with its own id; each round it adopts the label
+    * MOST FREQUENT among its in-neighbors (ties to the smallest
+    * label; nodes with no in-edges keep theirs). Unlike
+    * [[Dedup.connectedComponents]]' hash-min (membership = reachable
+    * set), frequency voting finds DENSE communities inside one
+    * component — the crawl-graph use is host clustering where
+    * everything is weakly connected but neighborhoods matter.
+    * Callers symmetrize `edges` for the undirected reading.
+    *
+    * Everything is INTEGER arithmetic (labels, vote counts) and the
+    * per-node argmax is the total order (count desc, label asc), so T
+    * synchronous rounds are bit-portable with no decimal machinery —
+    * the full unrolled-CTE differential oracle exists for free
+    * ([[labelPropagationSql]]).
+    *
+    * Scale per round: one |E| src-keyed join carrying (dst, lbl)
+    * pairs, one map-side-combined (node, lbl) count, one node-sized
+    * argmax, one node-keyed carry join. Fixed T, no driver collect;
+    * same per-round lineage truncation + checkpoint rotation as
+    * [[pageRank]] (rank_{t+1} references rank_t twice).
+    */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -1279,13 +1243,7 @@ object Graph {
             k: Int, iters: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val canon = edges
-      .select(col(srcCol).cast("long").as("__x"),
-        col(dstCol).cast("long").as("__y"))
-      .where(col("__x") =!= col("__y"))
-      .select(least(col("__x"), col("__y")).as("a"),
-        greatest(col("__x"), col("__y")).as("b"))
-      .distinct()
+    val canon = canonPairs(edges, srcCol, dstCol)
     var e = Checkpointing.truncateSer(
       canon.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(canon.select(col("b").as("src"), col("a").as("dst"))))
@@ -2201,13 +2159,7 @@ object Graph {
              k: Int, iters: Int): DataFrame = {
     require(k >= 3, s"k must be >= 3, got $k")
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    var e = Checkpointing.truncateSer(edges
-      .select(col(srcCol).cast("long").as("__x"),
-        col(dstCol).cast("long").as("__y"))
-      .where(col("__x") =!= col("__y"))
-      .select(least(col("__x"), col("__y")).as("a"),
-        greatest(col("__x"), col("__y")).as("b"))
-      .distinct())
+    var e = Checkpointing.truncateSer(canonPairs(edges, srcCol, dstCol))
     var last: DataFrame = e.limit(0).withColumn("support", lit(0L))
     for (_ <- 1 to iters) {
       val tri = triangleTriples(e)
@@ -2485,103 +2437,5 @@ object Graph {
           lit(2.0) * col("n_triangles") / (col("degree") * (col("degree") - 1)))
           .otherwise(lit(0.0)).as("clustering"))
     (newE, stats)
-  }
-
-  /** WEIGHTED PageRank: each node's rank splits over its out-edges
-    * proportionally to edge WEIGHT (contribution = rank · w / wdeg
-    * instead of rank / out_deg) — centrality over the co-order
-    * multiplicity graph where [[louvainWeighted]] already clusters
-    * (round-12 verdict stretch #9). Weight-≡-parallel-edges law: an
-    * integer-weighted edge behaves exactly like w parallel unit
-    * edges (the spec asserts it), so the operator is the natural
-    * multigraph reading of [[pageRank]]. Same per-term 10⁻¹²
-    * quantization + DECIMAL(38,0) exact sum, so the full unrolled
-    * oracle exists; same per-round lineage discipline. Weights are
-    * edge MULTIPLICITIES: `wCol` is cast to long (a fractional weight
-    * TRUNCATES toward zero — the [[louvainWeighted]] convention; scale
-    * fractional affinities to integer grains upstream), and the
-    * non-negativity precondition is VALIDATED (one cheap one-row
-    * aggregate over the edge pass [[pageRankWeighted]] already makes
-    * for w_deg) — a negative multiplicity would silently corrupt
-    * every rank, so it fails fast instead. wdeg-0 nodes are dangling
-    * (leaky, as in [[pageRank]]). Returns (node, w_deg, rank). */
-  def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
-                       wCol: String, iters: Int,
-                       damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = Checkpointing.truncate(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"),
-        col(wCol).cast("long").as("w")))
-    val minW = e.agg(min(col("w"))).head().get(0)
-    require(minW == null || minW.asInstanceOf[Long] >= 0L,
-      s"edge weights must be non-negative multiplicities, found min $minW")
-    val wDeg = e.groupBy(col("src").as("node"))
-      .agg(sum(col("w")).as("w_deg"))
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-      .join(wDeg, Seq("node"), "left")
-      .withColumn("w_deg", coalesce(col("w_deg"), lit(0L)))
-    val nRow = nodes.agg(count(lit(1)).as("__n"))
-    var ranks = Checkpointing.truncate(nodes.crossJoin(broadcast(nRow))
-      .select(col("node"), col("w_deg"),
-        (lit(1.0) / col("__n")).as("rank"), col("__n")))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("w_deg") > 0)
-          .select(col("node").as("src"),
-            (col("rank") / col("w_deg")).as("__r1")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg((sum(floor(col("__r1") * col("w") * lit(1.0e12)).cast("long")
-            .cast(DecimalType(38, 0)))
-          .cast("string").cast("double") / lit(1.0e12)).as("__s"))
-      val prev = ranks
-      ranks = Checkpointing.truncate(ranks
-        .join(contribs, Seq("node"), "left")
-        .select(col("node"), col("w_deg"),
-          (lit(1.0 - damping) / col("__n") +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"),
-          col("__n")))
-      Checkpointing.release(prev)
-    }
-    ranks.select(col("node"), col("w_deg"), col("rank"))
-  }
-
-  /** DuckDB twin of [[pageRankWeighted]] (`edgesCte` must define
-    * e(src, dst, w)). The per-term quantization floors rank/wdeg·w —
-    * the SAME association order as the Spark expression
-    * (divide-then-multiply), which is what makes the IEEE product
-    * bit-identical before the floor. */
-  def pageRankWeightedSql(edgesCte: String, iters: Int,
-                          damping: Double = 0.85): String = {
-    require(iters >= 1)
-    val dsum = "CAST(CAST(SUM(CAST(CAST(floor(r.rank / r.w_deg * e.w * " +
-      "1000000000000.0) AS BIGINT) AS DECIMAL(38,0))) AS VARCHAR) " +
-      "AS DOUBLE) / 1000000000000.0"
-    val rounds = (1 to iters).map { t =>
-      s"""a$t AS (
-         |  SELECT e.dst AS node, $dsum AS s
-         |  FROM e JOIN r${t - 1} r ON e.src = r.node AND r.w_deg > 0
-         |  GROUP BY 1
-         |), r$t AS (
-         |  SELECT n.node, n.w_deg,
-         |         ${1.0 - damping} / (SELECT n FROM nn) +
-         |           $damping * COALESCE(a.s, 0.0) AS rank
-         |  FROM nodes n LEFT JOIN a$t a ON a.node = n.node
-         |)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $edgesCte,
-       |deg AS (SELECT src AS node, CAST(SUM(w) AS BIGINT) AS wd
-       |        FROM e GROUP BY 1),
-       |nodes AS (
-       |  SELECT v.node, COALESCE(d.wd, 0) AS w_deg
-       |  FROM (SELECT src AS node FROM e UNION SELECT dst FROM e) v
-       |  LEFT JOIN deg d ON d.node = v.node
-       |),
-       |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes),
-       |r0 AS (SELECT node, w_deg, 1.0 / (SELECT n FROM nn) AS rank
-       |       FROM nodes),
-       |$rounds
-       |SELECT node, w_deg, rank FROM r$iters""".stripMargin
   }
 }

@@ -224,8 +224,8 @@ object CatalogML10 {
     // Incremental PageRank warm-start (round-13 verdict stretch #9):
     // after a crawl delta lands, the power iteration restarts from the
     // PREVIOUS rank vector instead of uniform — fewer rounds to the
-    // same fixed point (tools/PageRankWarmAb measures the rounds
-    // saved). The unrolled oracle replays the ENTIRE two-phase
+    // same fixed point (SCALING.md, "PageRank warm-start: measured
+    // rounds saved"). The unrolled oracle replays the ENTIRE two-phase
     // history: 2 cold rounds on the base graph, then 2 warm rounds on
     // base ∪ delta seeded from the cold result (new nodes enter at
     // 1/N) — every quantized term bit-identical.
@@ -241,28 +241,27 @@ object CatalogML10 {
           cold.select(col("node"), col("rank")), iters = 2)
         .withColumnRenamed("node", "part_id")
         .orderBy("part_id")
-    }, Some(graft.ops.Graph.pageRankWarmSql(
-      baseEdgesCte =
-        """pb AS (
-          |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-          |  FROM lineitem a
-          |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_partkey < b.l_partkey
-          |  WHERE a.l_partkey % 3 = 0 AND b.l_partkey % 3 = 0
-          |    AND a.l_orderkey % 5 <> 0),
-          |eb AS (SELECT a AS src, b AS dst FROM pb
-          |       UNION ALL SELECT b, a FROM pb)""".stripMargin,
-      unionEdgesCte =
-        """pu AS (
-          |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-          |  FROM lineitem a
-          |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-          |   AND a.l_partkey < b.l_partkey
-          |  WHERE a.l_partkey % 3 = 0 AND b.l_partkey % 3 = 0),
-          |e AS (SELECT a AS src, b AS dst FROM pu
-          |      UNION ALL SELECT b, a FROM pu)""".stripMargin,
-      coldIters = 2, warmIters = 2)
-      .replace("SELECT node, out_deg, rank FROM wr2",
-        "SELECT node AS part_id, out_deg, rank FROM wr2 ORDER BY part_id"))),
+    }, Some("SELECT node AS part_id, out_deg, rank FROM (\n" +
+      graft.ops.Graph.pageRankWarmSql(
+        baseEdgesCte =
+          """pb AS (
+            |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
+            |  FROM lineitem a
+            |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+            |   AND a.l_partkey < b.l_partkey
+            |  WHERE a.l_partkey % 3 = 0 AND b.l_partkey % 3 = 0
+            |    AND a.l_orderkey % 5 <> 0),
+            |eb AS (SELECT a AS src, b AS dst FROM pb
+            |       UNION ALL SELECT b, a FROM pb)""".stripMargin,
+        unionEdgesCte =
+          """pu AS (
+            |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
+            |  FROM lineitem a
+            |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+            |   AND a.l_partkey < b.l_partkey
+            |  WHERE a.l_partkey % 3 = 0 AND b.l_partkey % 3 = 0),
+            |e AS (SELECT a AS src, b AS dst FROM pu
+            |      UNION ALL SELECT b, a FROM pu)""".stripMargin,
+        coldIters = 2, warmIters = 2) + "\n) ORDER BY part_id")),
   )
 }

@@ -225,19 +225,19 @@ object CatalogML9 {
       graft.ops.Graph.pageRankWeighted(edges, "src", "dst", "w", iters = 3)
         .withColumnRenamed("node", "part_id")
         .orderBy("part_id")
-    }, Some(graft.ops.Graph.pageRankWeightedSql(
-      """p AS (
-        |  SELECT a.l_partkey AS a, b.l_partkey AS b,
-        |         CAST(count(*) AS BIGINT) AS w
-        |  FROM lineitem a
-        |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_partkey < b.l_partkey
-        |  GROUP BY 1, 2
-        |),
-        |e AS (SELECT a AS src, b AS dst, w FROM p
-        |      UNION ALL SELECT b, a, w FROM p)""".stripMargin,
-      iters = 3).replace("SELECT node, w_deg, rank FROM r3",
-      "SELECT node AS part_id, w_deg, rank FROM r3 ORDER BY part_id"))),
+    }, Some("SELECT node AS part_id, w_deg, rank FROM (\n" +
+      graft.ops.Graph.pageRankWeightedSql(
+        """p AS (
+          |  SELECT a.l_partkey AS a, b.l_partkey AS b,
+          |         CAST(count(*) AS BIGINT) AS w
+          |  FROM lineitem a
+          |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+          |   AND a.l_partkey < b.l_partkey
+          |  GROUP BY 1, 2
+          |),
+          |e AS (SELECT a AS src, b AS dst, w FROM p
+          |      UNION ALL SELECT b, a, w FROM p)""".stripMargin,
+        iters = 3) + "\n) ORDER BY part_id")),
 
     // Triangle-stats RETRACTION — the deletion side of q224 (crawl
     // takedowns): co-order pairs whose supporting order slice is
@@ -294,17 +294,16 @@ object CatalogML9 {
         .select(col("a").as("part_a"), col("b").as("part_b"),
           col("support"))
         .orderBy("part_a", "part_b")
-    }, Some(graft.ops.Graph.kTrussSql(
-      """p AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM lineitem a
-        |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-        |   AND a.l_partkey < b.l_partkey
-        |  WHERE a.l_partkey % 3 = 0 AND b.l_partkey % 3 = 0),
-        |e0 AS (SELECT a, b FROM p)""".stripMargin,
-      k = 7, iters = 4).replace("SELECT a, b, support FROM te4",
-      "SELECT a AS part_a, b AS part_b, support FROM te4 " +
-        "ORDER BY part_a, part_b"))),
+    }, Some("SELECT a AS part_a, b AS part_b, support FROM (\n" +
+      graft.ops.Graph.kTrussSql(
+        """p AS (
+          |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
+          |  FROM lineitem a
+          |  JOIN lineitem b ON a.l_orderkey = b.l_orderkey
+          |   AND a.l_partkey < b.l_partkey
+          |  WHERE a.l_partkey % 3 = 0 AND b.l_partkey % 3 = 0),
+          |e0 AS (SELECT a, b FROM p)""".stripMargin,
+        k = 7, iters = 4) + "\n) ORDER BY part_a, part_b")),
 
     // Unigram-LM (SentencePiece-family) tokenizer TRAINING — the
     // round-12 stretch #8, the other production tokenizer family

@@ -824,4 +824,33 @@ class GraphSpec extends SparkSpec {
     }
     assert(neg.getMessage.contains("non-negative"))
   }
+
+  // The four PageRank entry points share one power iteration; these two
+  // laws pin that each variant reduces to pageRank at its identity
+  // input, to the bit (a variant that re-typed the round differently
+  // would drift by an ulp somewhere).
+  private val lawEdges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L),
+    (4L, 1L), (3L, 5L), (5L, 3L), (2L, 6L))
+
+  private def triples(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSeq.sortBy(_._1)
+
+  test("personalizedPageRank seeded with every node equals pageRank to the bit") {
+    val edges = lawEdges.toDF("src", "dst")
+    val all = (lawEdges.map(_._1) ++ lawEdges.map(_._2)).distinct.toDF("node")
+    val got = triples(Graph.personalizedPageRank(edges, "src", "dst",
+      all, "node", iters = 4))
+    val want = triples(Graph.pageRank(edges, "src", "dst", iters = 4))
+    assert(got.nonEmpty && got == want)
+  }
+
+  test("pageRankWeighted with every w = 1 equals pageRank to the bit") {
+    val edges = lawEdges.toDF("src", "dst")
+    val got = triples(Graph.pageRankWeighted(
+      edges.withColumn("w", lit(1L)), "src", "dst", "w", iters = 4))
+    val want = triples(Graph.pageRank(edges, "src", "dst", iters = 4))
+    assert(got.nonEmpty && got == want,
+      "unit weights must give pageRank's ranks and w_deg == out_deg")
+  }
 }
