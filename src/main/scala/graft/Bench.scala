@@ -68,57 +68,55 @@ object Bench {
     val relay: (Long, Seq[Double]) =
       if (only.exists(!_.exists(p => "relay".startsWith(p)))) (0L, Nil)
       else try {
-        import org.apache.spark.sql.DataFrame
-        import org.apache.spark.sql.functions._
-        import org.apache.spark.sql.types._
-        import org.apache.spark.sql.streaming.Trigger
-        import graft.connector.{FileTopicSource, TopicSink, TopicSource}
-        import graft.model.ConsumerConfig
-        // per-run temp dir: a fixed shared path would let two bench
-        // processes overwrite each other's stage mid-read
-        val stageDir = java.nio.file.Files
-          .createTempDirectory("graft-relay-stage").toString
-        val events = graft.ops.Tables.table(spark, sfDir, "events")
-        // stage (unmeasured): envelope rows across 24 files so the
-        // 8-file admission cap yields 3 microbatches
-        events.select(
-            to_json(struct(col("event_id"), col("user_id"),
-              col("event_type"), col("value"))).cast("binary").as("data"),
-            col("user_id").cast("string").as("partitionKey"),
-            col("event_id").as("seq"))
-          .repartition(24).write.mode("overwrite").parquet(stageDir)
-        val n = events.count()
-        val envSchema = StructType(Seq(
-          StructField("data", BinaryType), StructField("partitionKey", StringType),
-          StructField("seq", LongType)))
-        val payloadSchema = StructType(Seq(
-          StructField("event_id", LongType), StructField("user_id", LongType),
-          StructField("event_type", StringType), StructField("value", DoubleType)))
-        val src = FileTopicSource("relay-bench", stageDir, "parquet",
-          envSchema, ConsumerConfig(None, maxBatchSize = 8))
-        val dts = (1 to 3).map { _ =>
-          TopicSink.CountingSender.reset()
-          val ckpt = java.nio.file.Files
-            .createTempDirectory("graft-relay-ckpt").toString
-          val t0 = System.nanoTime()
-          val q = src.load(spark).writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, _: Long) =>
+        // per-run temp root (the stage plus one checkpoint per pass): a
+        // fixed shared path would let two bench processes overwrite
+        // each other's stage mid-read
+        val root = java.nio.file.Files
+          .createTempDirectory("graft-relay").toString
+        val stageDir = s"$root/stage"
+        try {
+          import org.apache.spark.sql.functions._
+          import org.apache.spark.sql.types._
+          import graft.connector.{FileTopicSource, TopicSink, TopicSource}
+          import graft.delivery.Delivery
+          import graft.model.ConsumerConfig
+          val events = graft.ops.Tables.table(spark, sfDir, "events")
+          // stage (unmeasured): envelope rows across 24 files so the
+          // 8-file admission cap yields 3 microbatches
+          events.select(
+              to_json(struct(col("event_id"), col("user_id"),
+                col("event_type"), col("value"))).cast("binary").as("data"),
+              col("user_id").cast("string").as("partitionKey"),
+              col("event_id").as("seq"))
+            .repartition(24).write.mode("overwrite").parquet(stageDir)
+          val n = events.count()
+          val envSchema = StructType(Seq(
+            StructField("data", BinaryType), StructField("partitionKey", StringType),
+            StructField("seq", LongType)))
+          val payloadSchema = StructType(Seq(
+            StructField("event_id", LongType), StructField("user_id", LongType),
+            StructField("event_type", StringType), StructField("value", DoubleType)))
+          val src = FileTopicSource("relay-bench", stageDir, "parquet",
+            envSchema, ConsumerConfig(None, maxBatchSize = 8))
+          // one consumer group (= fresh checkpoint) per pass
+          val dts = (1 to 3).map { pass =>
+            TopicSink.CountingSender.reset()
+            val t0 = System.nanoTime()
+            Delivery.atLeastOnce(src.load(spark), s"relay-$pass", root) { (b, _) =>
               val decoded = TopicSource.decodeJson(b, payloadSchema)
               val flowed = decoded.select(col("payload.*"), col("seq"))
               val env = TopicSource.encodeJsonOrdered(flowed, "seq",
                 Some("user_id"))
               TopicSink.writeOrdered(env, "seq",
                 () => new TopicSink.CountingSender, cpus.toInt)
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-          val dt = (System.nanoTime() - t0) / 1e9
-          require(TopicSink.CountingSender.records.get() == n,
-            s"relay lost records: ${TopicSink.CountingSender.records.get()} of $n")
-          dt
-        }
-        (n, dts)
+            }.awaitTermination()
+            val dt = (System.nanoTime() - t0) / 1e9
+            require(TopicSink.CountingSender.records.get() == n,
+              s"relay lost records: ${TopicSink.CountingSender.records.get()} of $n")
+            dt
+          }
+          (n, dts)
+        } finally graft.ops.LocalFiles.deleteRecursively(root)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] relay failed: ${e.getMessage}")
         (0L, Nil)

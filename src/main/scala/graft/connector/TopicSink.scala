@@ -26,7 +26,7 @@ trait RecordSender extends Serializable {
   * KPL surface (hard-coded 1 ms max buffering and 10 s request timeout at
   * Producer.scala:233-234, endpoint/region from the client config). In
   * production these feed a Kinesis DataSourceV2 sink or the KPL inside a
-  * foreachBatch writer; offline, construction + validation is the
+  * [[graft.delivery.Delivery]] batch function; offline, construction + validation is the
   * testable surface. */
 final case class KinesisTopicSink(
     topicId: String,

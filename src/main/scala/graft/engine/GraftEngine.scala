@@ -136,8 +136,8 @@ object GraftEngine {
       process: (DataFrame, Long) => Unit)
 
   /** Declared outbound topic. `start` builds the publishing streaming
-    * query (typically readStream → TopicSource.encodeJson →
-    * foreachBatch(TopicSink.writeOrdered)); whether it starts at all is
+    * query (typically a [[TopicSource]] load → TopicSource.encodeJson →
+    * a [[Delivery]] drain into TopicSink.writeOrdered); whether it starts at all is
     * gated by [[graft.model.ProducerConfig.role]], mirroring the
     * reference's role-filtered producer placement (Producer.scala:54-59,
     * KinesisConfig.scala:85): a producer with a role runs only on engine

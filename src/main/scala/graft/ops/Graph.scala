@@ -1545,19 +1545,9 @@ object Graph {
                                     maxRounds: Int = DefaultIncRounds): (DataFrame, DataFrame) = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // one materialization of the canonicalized removal set + one of the
-    // present set (freshDelta's round-15 discipline)
-    val c = Checkpointing.truncate(canR)
-    val cnt0 = c.count()
-    val d0 =
-      if (cnt0 <= Dedup.broadcastIdLimit(c))
-        oldE.join(broadcast(c), Seq("a", "b"), "left_semi")
-      else c.join(oldE, Seq("a", "b"), "left_semi")
-    val d1 = Checkpointing.truncate(d0)
-    val dCnt = d1.count()
-    val d = Dedup.maybeBroadcast(d1, dCnt)
+    val (d, dCnt) = presentRemoval(oldE, canR)
     val newE = Checkpointing.truncateSer(
-      oldE.join(d, Seq("a", "b"), "left_anti"))
+      oldE.join(Dedup.maybeBroadcast(d, dCnt), Seq("a", "b"), "left_anti"))
     val sym = newE.select(col("a").as("u"), col("b").as("v"))
       .unionAll(newE.select(col("b").as("u"), col("a").as("v")))
     val core = Checkpointing.truncate(prevCore.select(col("node")))
@@ -1879,13 +1869,15 @@ object Graph {
                                   canD: DataFrame, t: Int): (DataFrame, DataFrame) = {
     import graft.functions.{HllRegs, PortableSketches}
     import PortableSketches._
-    val (d, dCnt) = freshDelta(oldE, canD)
+    val (d, _) = freshDelta(oldE, canD)
     val newE = Checkpointing.truncateSer(oldE.unionAll(d))
     val sym = newE.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(newE.select(col("b").as("src"), col("a").as("dst")))
-    val dEnds = Dedup.maybeBroadcast(Checkpointing.truncate(
+    // no broadcast hint: it feeds a union and the left side of a
+    // left-anti join, and neither can use one
+    val dEnds = Checkpointing.truncate(
       d.select(col("a").as("node")).unionAll(d.select(col("b").as("node")))
-        .distinct()), dCnt * 2)
+        .distinct())
     val old0 = prevRegs.where(col("t") === 0).select("node", "regs")
     val newNodes = Checkpointing.truncate(
       dEnds.join(old0.select("node").distinct(), Seq("node"), "left_anti"))
@@ -2291,31 +2283,50 @@ object Graph {
       greatest(col("__x"), col("__y")).as("b"))
     .distinct()
 
+  /** `df` materialized, with its row count read from the materialized
+    * blocks (truncate BEFORE counting, so the count never re-runs the
+    * plan). */
+  private def materialized(df: DataFrame): (DataFrame, Long) = {
+    val m = Checkpointing.truncate(df)
+    (m, m.count())
+  }
+
   /** Fresh (not-already-present) rows of canonical delta `canD` vs the
-    * canonical edge set `oldE`, returned (maybe-broadcast, count).
+    * canonical edge set `oldE`, returned (materialized, count).
     * When the delta fits the broadcast gate the edge table is SCANNED
     * once (broadcast semi-probe → delta-bounded `present` set) but
     * never SHUFFLED — the anti-join runs delta-vs-present, both
     * delta-sized. A crawl-scale delta falls back to the plain
-    * shuffled anti-join. */
+    * shuffled anti-join. The result carries no hint: callers apply
+    * [[Dedup.maybeBroadcast]] where it is a join side (a hint that
+    * reaches a union or a checkpoint instead is dropped with a
+    * warning). */
   private def freshDelta(oldE: DataFrame, canD: DataFrame): (DataFrame, Long) = {
     // materialize the canonicalized delta ONCE up front (round-15): the
     // raw delta can itself be an expensive construction (q224's is a
     // lineitem self-join + distinct), and the lazy form was re-executed
     // by the gate count, the broadcast build, the anti-join probe AND
-    // the final truncate — 4 computations of the same frame. Same for
-    // the fresh set: truncate BEFORE counting so the count reads the
-    // materialized blocks instead of re-running the oldE probe.
-    val c = Checkpointing.truncate(canD)
-    val cnt0 = c.count()
-    val d0 =
+    // the final truncate — 4 computations of the same frame
+    val (c, cnt0) = materialized(canD)
+    materialized(
       if (cnt0 <= Dedup.broadcastIdLimit(c)) {
         val present = oldE.join(broadcast(c), Seq("a", "b"), "left_semi")
         c.join(broadcast(present), Seq("a", "b"), "left_anti")
-      } else c.join(oldE, Seq("a", "b"), "left_anti")
-    val d1 = Checkpointing.truncate(d0)
-    val dCnt = d1.count()
-    (Dedup.maybeBroadcast(d1, dCnt), dCnt)
+      } else c.join(oldE, Seq("a", "b"), "left_anti"))
+  }
+
+  /** The actually-present rows of canonical removal set `canR` in the
+    * canonical edge set `oldE`, returned (materialized, count) and
+    * unhinted, like [[freshDelta]]: a removal set under the broadcast
+    * gate is broadcast-probed (one |E| scan, zero |E| shuffle), a
+    * larger one semi-joins shuffled. Removed edges not present are
+    * ignored, duplicates collapse. */
+  private def presentRemoval(oldE: DataFrame, canR: DataFrame): (DataFrame, Long) = {
+    val (c, cnt0) = materialized(canR)
+    materialized(
+      if (cnt0 <= Dedup.broadcastIdLimit(c))
+        oldE.join(broadcast(c), Seq("a", "b"), "left_semi")
+      else c.join(oldE, Seq("a", "b"), "left_semi"))
   }
 
   def advanceTriangleStats(prevStats: DataFrame, prevEdges: DataFrame,
@@ -2408,18 +2419,8 @@ object Graph {
     * plan exchanges the edge table. Returns (newEdges, newStats). */
   private[ops] def retractTriangleCore(prevStats: DataFrame, oldE: DataFrame,
                                        canR: DataFrame): (DataFrame, DataFrame) = {
-    // one materialization of the canonicalized removal set + one of the
-    // present set (freshDelta's round-15 discipline)
-    val c = Checkpointing.truncate(canR)
-    val cnt0 = c.count()
-    val d0 =
-      if (cnt0 <= Dedup.broadcastIdLimit(c))
-        oldE.join(broadcast(c), Seq("a", "b"), "left_semi")
-      else c.join(oldE, Seq("a", "b"), "left_semi")
-    val d1 = Checkpointing.truncate(d0)
-    val dCnt = d1.count()
-    val d = Dedup.maybeBroadcast(d1, dCnt)
-    val newE = oldE.join(d, Seq("a", "b"), "left_anti")
+    val (d, dCnt) = presentRemoval(oldE, canR)
+    val newE = oldE.join(Dedup.maybeBroadcast(d, dCnt), Seq("a", "b"), "left_anti")
     val triDec = deltaTriangleCorners(oldE, d, dCnt)
     val degDec = d.select(col("a").as("node"))
       .unionAll(d.select(col("b").as("node")))

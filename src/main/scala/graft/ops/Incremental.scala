@@ -85,13 +85,9 @@ object Incremental {
     * snapshot). */
   def advanceStateTableBy(spark: SparkSession, stateTable: String,
                           deltaState: DataFrame, keys: Seq[String],
-                          aggs: Seq[Column]): Unit = {
-    val staged = s"${stateTable}__next"
-    spark.sql(s"DROP TABLE IF EXISTS $staged")
-    mergeStatesBy(Seq(spark.table(stateTable), deltaState), keys, aggs)
-      .write.saveAsTable(staged)
-    swapStaged(spark, stateTable)
-  }
+                          aggs: Seq[Column]): Unit =
+    transformStateTable(spark, stateTable)(cur =>
+      mergeStatesBy(Seq(cur, deltaState), keys, aggs))
 
   /** Stage-and-swap `stateTable` to the result of `next(current)` —
     * the generic (non-monoid) advance for state whose update is a

@@ -23,14 +23,12 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // The driver-generated events.parquet stores ts as TIMESTAMP(NANOS),
-    // which Spark's parquet reader rejects by default (PARQUET_TYPE_ILLEGAL).
-    // Read nanos as a long (legacy conf, runtime-settable) and convert to a
-    // microsecond timestamp — the fixture has no sub-microsecond components,
-    // and DuckDB reads the same file at microsecond precision, so the two
-    // engines agree bit-for-bit.
-    scala.util.Try(
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true"))
+    // A `ts` stored as TIMESTAMP(NANOS) reads as a long under the
+    // engine's pinned `spark.sql.legacy.parquet.nanosAsLong`
+    // (GraftEngine.recommendedConfs); convert it to a microsecond
+    // timestamp — DuckDB reads the same file at microsecond precision,
+    // so the two engines agree bit-for-bit. The caller's session conf
+    // is left as the caller set it.
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     df.schema.fields.find(f => f.name == "ts" &&
         f.dataType == org.apache.spark.sql.types.LongType) match {

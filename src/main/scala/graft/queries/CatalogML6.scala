@@ -316,13 +316,11 @@ object CatalogML6 {
     // STREAMING maintenance of the HDR percentile state — the q160
     // monoid-advance loop with the q190 registers as the state: three
     // arrival waves fold into a persisted (group, bucket, cnt) table
-    // via foreachBatch (one stage-and-swap per microbatch; sum-merge
+    // through CatalogStream.foldWaves (one stage-and-swap per wave; sum-merge
     // is commutative so wave order is free), and the report answers
     // quantiles FROM THE STATE. Oracle: the from-scratch whole-corpus
     // sketch — merge-equals-whole, streamed.
     ("q200_stream_quantile_state", (s: SparkSession, d: String) => {
-      import java.nio.file.Files
-      import org.apache.spark.sql.streaming.Trigger
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q200_state_$tag"
       graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
@@ -332,20 +330,11 @@ object CatalogML6 {
       QuantileSketch.sketch(events.where(lit(false)), "event_type",
           col("value"), S)
         .write.saveAsTable(st)
-      val src = s.readStream.format("parquet").schema(events.schema)
-        .option("maxFilesPerTrigger", 1).load(dir)
-      val ckpt = Files.createTempDirectory("graft-qstate-ckpt").toString
-      try {
-        val q = src.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            Incremental.advanceStateTableBy(s, st,
-              QuantileSketch.sketch(b, "event_type", col("value"), S),
-              Seq("event_type", "bucket"), QuantileSketch.mergeAggs)
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally graft.ops.LocalFiles.deleteRecursively(ckpt)
+      CatalogStream.foldWaves(s, dir, events.schema) { b =>
+        Incremental.advanceStateTableBy(s, st,
+          QuantileSketch.sketch(b, "event_type", col("value"), S),
+          Seq("event_type", "bucket"), QuantileSketch.mergeAggs)
+      }
       QuantileSketch.quantiles(s.table(st), "event_type", Seq(50, 90, 99), S)
         .orderBy("event_type", "pct")
     }, Some(

@@ -267,7 +267,7 @@ object CatalogML8 {
           |ORDER BY part_id""".stripMargin))),
 
     // STREAMING maintenance of the BOUNDED quantile sketch — q200's
-    // live foreachBatch loop with q214's NON-monoid advance as the
+    // live wave fold with q214's NON-monoid advance as the
     // per-microbatch step: each arrival wave folds into the persisted
     // (group, s_eff, bucket, cnt) table via coarsen-to-min
     // mergeBounded under the crash-safe stage-and-swap. The wave
@@ -277,8 +277,6 @@ object CatalogML8 {
     // all-at-once merge the oracle replays — the q214 law, now proven
     // ON the live gate.
     ("q218_stream_quantile_bounded_state", (s: SparkSession, d: String) => {
-      import java.nio.file.Files
-      import org.apache.spark.sql.streaming.Trigger
       import graft.ops.{Incremental, QuantileSketch}
       val S = QuantileSketch.DefaultS
       val tag = Integer.toHexString(d.hashCode)
@@ -290,22 +288,13 @@ object CatalogML8 {
       QuantileSketch.sketchBounded(events.where(lit(false)), "event_type",
           col("value"), S, maxRegisters = 24)
         .write.saveAsTable(st)
-      val src = s.readStream.format("parquet").schema(events.schema)
-        .option("maxFilesPerTrigger", 1).load(dir)
-      val ckpt = Files.createTempDirectory("graft-qbstate-ckpt").toString
-      try {
-        val q = src.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            Incremental.transformStateTable(s, st) { cur =>
-              QuantileSketch.mergeBounded(Seq(cur,
-                QuantileSketch.sketchBounded(b, "event_type", col("value"),
-                  S, maxRegisters = 24)), "event_type")
-            }
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      } finally graft.ops.LocalFiles.deleteRecursively(ckpt)
+      CatalogStream.foldWaves(s, dir, events.schema) { b =>
+        Incremental.transformStateTable(s, st) { cur =>
+          QuantileSketch.mergeBounded(Seq(cur,
+            QuantileSketch.sketchBounded(b, "event_type", col("value"),
+              S, maxRegisters = 24)), "event_type")
+        }
+      }
       QuantileSketch.quantilesBounded(s.table(st), "event_type",
           Seq(50, 90, 99))
         .orderBy("event_type", "pct")

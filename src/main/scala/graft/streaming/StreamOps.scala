@@ -134,8 +134,8 @@ object StreamOps {
     * Scale shape: the static side is a (band, bucket) → signature index
     * built ONCE (the signature table a batch dedup pipeline already
     * maintains); per microbatch the stream shuffles only its own
-    * (band, bucket) rows. Apply inside `foreachBatch` (the
-    * [[graft.delivery.Delivery]] path) so the per-doc reduction runs
+    * (band, bucket) rows. Apply inside a [[graft.delivery.Delivery]]
+    * batch function so the per-doc reduction runs
     * within each microbatch — no streaming state accumulates across
     * batches; history size only affects the static side.
     * Returns (idCol, is_dup, best_est) with one row per input doc. */

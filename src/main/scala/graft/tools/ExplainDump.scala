@@ -1,9 +1,14 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ops.GraphState
 import graft.ops.GraphState.{Anf, Communities, KCore, Triangles}
@@ -21,10 +26,12 @@ import graft.ops.GraphState.{Anf, Communities, KCore, Triangles}
   *    [sfDir] [outDir]` writes one `<outDir>/<name>_<mode>.txt` per
   *    name (default `outDir`: `plans`) — the before/after evidence of
   *    a plan change: dump `before` on the parent commit and `after`
-  *    on the change. The `exec*` modes EXECUTE the query first and
-  *    dump the FINAL adaptive plan (isFinalPlan=true) — the only way
-  *    to show AQE runtime rewrites (SMJ→SHJ conversion, coalesced
-  *    reads), which a static explain cannot.
+  *    on the change. The `exec*` modes EXECUTE the query and dump the
+  *    FINAL adaptive plan (isFinalPlan=true) of EVERY query it runs,
+  *    in execution order (an iterative operator's eager checkpoints,
+  *    counts and state writes, not just the returned frame) — the
+  *    only way to show AQE runtime rewrites (SMJ→SHJ conversion,
+  *    coalesced reads), which a static explain cannot.
   *
   * Names resolve through the catalog plus the dump-only surfaces of
   * [[dumpOnly]] (e.g. `kcore_advance_plan`).
@@ -48,10 +55,12 @@ object ExplainDump {
           all.get(name) match {
             case None => System.err.println(s"[explain] unknown query: $name")
             case Some(fn) =>
-              val df = fn(spark, sfDir)
-              if (m.startsWith("exec")) { df.collect(); () }
+              val plans =
+                if (m.startsWith("exec"))
+                  executedPlans(spark) { fn(spark, sfDir).collect(); () }
+                else Seq(planOf(fn(spark, sfDir).queryExecution))
               val f = Paths.get(out, s"${name}_$m.txt")
-              Files.writeString(f, planOf(df))
+              Files.writeString(f, plans.mkString("\n"))
               println(s"wrote $f")
           }
         }
@@ -67,9 +76,31 @@ object ExplainDump {
     * pid-keyed (LocalFiles.processScratchDir), so without masking
     * every regeneration diffs on the JVM pid alone and the
     * regenerate-and-diff plan-review workflow drowns in noise. */
-  private def planOf(df: DataFrame): String =
-    df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+  private def planOf(qe: QueryExecution): String =
+    qe.explainString(org.apache.spark.sql.execution.FormattedMode)
       .replaceAll("-pid\\d+", "-pidXXXX")
+
+  /** The plan of every query `run` executes, in execution order, each
+    * headed by its number and action name (`collect`, `count`, ...). */
+  private def executedPlans(spark: SparkSession)(run: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.add(s"== ${seen.size + 1}: $f ==\n${planOf(qe)}")
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      // listener delivery is async — wait for the queue to go quiet
+      var last = -1
+      var spins = 0
+      while (seen.size != last && spins < 120) {
+        last = seen.size; spins += 1; Thread.sleep(500)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    seen.asScala.toSeq
+  }
 
   private def plansMd(spark: SparkSession, sfDir: String,
                       all: Map[String, (SparkSession, String) => DataFrame]): String = {
@@ -160,7 +191,7 @@ object ExplainDump {
     sb.append("joins for dims, TakeOrderedAndProject for top-k, partial aggregation\n")
     sb.append("before exchanges, WholeStageCodegen coverage.\n\n")
     headline.filter(all.contains).sorted.foreach { name =>
-      sb.append(s"## $name\n\n```\n${planOf(all(name)(spark, sfDir))}\n```\n\n")
+      sb.append(s"## $name\n\n```\n${planOf(all(name)(spark, sfDir).queryExecution)}\n```\n\n")
     }
     sb.toString
   }

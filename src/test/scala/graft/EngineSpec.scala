@@ -246,6 +246,18 @@ class EngineSpec extends SparkSpec {
     }
   }
 
+  test("a fixture read leaves the caller's nanosAsLong conf as the caller set it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "false")
+      val events = graft.ops.Tables.table(spark, sf, "events")
+      assert(spark.conf.get(key) == "false", "Tables.table rewrote the session conf")
+      // the fixture's microsecond ts still reads as a timestamp
+      assert(events.schema("ts").dataType.typeName.startsWith("timestamp"))
+    } finally spark.conf.set(key, prev)
+  }
+
   test("a rotation of more than 100 generated classes compiles nothing the second time") {
     // Spark's default generated-code cache holds 100 classes, an LRU: a
     // working set past it (one catalog_mix pass needs ~145) evicts each

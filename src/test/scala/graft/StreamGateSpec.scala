@@ -112,6 +112,63 @@ class StreamGateSpec extends SparkSpec {
       "no re-delivered doc survived the gate — the dedup check is vacuous")
   }
 
+  test("q160 streamed monoid state equals the one-shot aggregate over all events") {
+    import graft.ops.Incremental
+    val events = graft.ops.Tables.table(spark, sf, "events")
+    val expected = Incremental.finish(
+      Incremental.aggState(events, Seq("event_type"), "value", scale = 6),
+      Seq("event_type"))
+    val got = q("q160_stream_state_advance")
+    assert(got.count() > 0)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+      "three folded waves must equal the whole-corpus aggregate")
+  }
+
+  test("q177 streamed CDC equals the one-shot changelog apply (in-order waves)") {
+    // the per-wave apply equals the one-shot apply only when the waves
+    // arrive in seq order, so a reordered replay fails here
+    val base = graft.ops.Tables.table(spark, sf, "customer").select(
+      col("c_custkey").as("k"), col("c_name").as("name"),
+      floor(col("c_acctbal") * 100).as("cents"))
+    val changes = graft.ops.Tables.table(spark, sf, "orders").select(
+      col("o_custkey").as("k"), col("o_orderkey").as("seq"),
+      when(col("o_orderstatus") === "P", "D")
+        .when(col("o_orderstatus") === "O", "I")
+        .otherwise("U").as("op"),
+      concat(lit("cust-"), col("o_custkey")).as("name"),
+      floor(col("o_totalprice") * 100).as("cents"))
+    val expected = graft.ops.Warehouse.applyChangelog(base, changes,
+      "k", "seq", "op", Seq("name", "cents"))
+    val got = q("q177_stream_cdc_apply")
+    assert(got.count() > 0)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
+      "three folded CDC waves must equal the one-shot MERGE")
+  }
+
+  test("a failing wave fold surfaces its exception and leaves no checkpoint behind") {
+    import java.nio.file.Files
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ckpts = Option(tmp.list()).toSeq.flatten
+      .filter(_.startsWith("graft-fold-ckpt")).toSet
+    val dir = Files.createTempDirectory("graft-fold-waves").toString
+    try {
+      spark.range(5).toDF("id").coalesce(1)
+        .write.mode("overwrite").parquet(dir)
+      val before = ckpts
+      val e = intercept[Exception] {
+        graft.queries.CatalogStream.foldWaves(spark, dir,
+          spark.read.parquet(dir).schema) { _ =>
+          throw new IllegalStateException("wave fold failed on purpose")
+        }
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c =>
+          Option(c.getMessage).exists(_.contains("wave fold failed on purpose"))),
+        s"the batch function's failure must surface, got $e")
+      assert(ckpts == before, s"checkpoint left behind: ${ckpts -- before}")
+    } finally graft.ops.LocalFiles.deleteRecursively(dir)
+  }
+
   test("q193 left-outer join: null rows emit on eviction, never before; both classes live") {
     val got = q("q193_stream_stream_outer").cache()
     // batch replica of the oracle arithmetic
