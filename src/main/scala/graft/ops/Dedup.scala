@@ -938,8 +938,8 @@ object Dedup {
                           shingleN: Int = 3, threshold: Double = 0.7,
                           bands: Int = 32, rows: Int = 2,
                           numBuckets: Int = 32): Unit = {
-    Tables.dropTablesAndDirs(spark, bucketTable, sigTable, ccStateTable,
-      s"${ccStateTable}__next", s"${ccStateTable}__old")
+    Tables.dropTablesAndDirs(spark, bucketTable, sigTable)
+    Incremental.dropStateTables(spark, ccStateTable)
     PhaseTimer.time("initidx") {
       writeSignatureIndex(docs, idCol, textCol, bucketTable, sigTable,
         shingleN, bands, rows, numBuckets)

@@ -49,6 +49,30 @@ object Graph {
       .select(col("l_partkey").as("src"), col("__p2").as("dst"))
   }
 
+  /** The symmetrized customer↔supplier purchase graph: one (src, dst)
+    * edge each way per distinct (customer, supplier) purchase pair,
+    * supplier ids offset by 1e9 into their own id space. */
+  def purchaseEdges(lineitem: DataFrame, orders: DataFrame): DataFrame = {
+    val e0 = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("c"),
+        (col("l_suppkey") + 1000000000L).as("s2"))
+      .distinct()
+    e0.select(col("c").as("src"), col("s2").as("dst"))
+      .unionAll(e0.select(col("s2").as("src"), col("c").as("dst")))
+  }
+
+  /** [[purchaseEdges]] as the DuckDB CTE pair `e0`, `e(src, dst)`;
+    * `unitWeight` adds a `w` column of 1s. */
+  def purchaseEdgesSql(unitWeight: Boolean = false): String = {
+    val (w, one) = if (unitWeight) (", 1 AS w", ", 1") else ("", "")
+    s"""e0 AS (
+       |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000000 AS s2
+       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+       |),
+       |e AS (SELECT c AS src, s2 AS dst$w FROM e0
+       |      UNION ALL SELECT s2, c$one FROM e0)""".stripMargin
+  }
+
   /** Fixed-iteration damped PageRank over a DIRECTED edge list
     * (symmetrize for undirected graphs). Nodes = every id appearing
     * as src or dst; out-degree-0 (dangling) nodes receive rank but

@@ -184,11 +184,8 @@ object GraphState {
 
   /** Drop the pair's six tables (live, `__next`, `__old` of both) and
     * their warehouse directories. */
-  def drop(spark: SparkSession, name: String, view: View): Unit = {
-    val live = Seq(edgesTable(name), viewTable(name, view))
-    Tables.dropTablesAndDirs(spark,
-      live ++ live.map(_ + "__next") ++ live.map(_ + "__old"): _*)
-  }
+  def drop(spark: SparkSession, name: String, view: View): Unit =
+    Incremental.dropStateTables(spark, edgesTable(name), viewTable(name, view))
 
   /** Create the pair at epoch 0 from a raw edge frame (one full
     * canonicalization + one full build of the view — the LAST time
@@ -238,8 +235,9 @@ object GraphState {
     val (newE, newV) = PhaseTimer.time("advance")(change)
     PhaseTimer.time("stage") {
       val eT = edgesTable(name); val vT = viewTable(name, view)
+      val (eNext, vNext) = (Incremental.staged(eT), Incremental.staged(vT))
       val ep = epochOf(spark, eT) + 1
-      Tables.dropTablesAndDirs(spark, s"${eT}__next", s"${vT}__next")
+      Tables.dropTablesAndDirs(spark, eNext, vNext)
       // stage BOTH fully (both plans read the LIVE pair) before any
       // swap; every property rides the STAGING so no crash window
       // leaves a live table missing one. The two staging writes are
@@ -256,7 +254,7 @@ object GraphState {
         // does not outlive this task
         val prior = SparkSession.getActiveSession
         SparkSession.setActiveSession(newV.sparkSession)
-        try newV.write.saveAsTable(s"${vT}__next")
+        try newV.write.saveAsTable(vNext)
         finally prior match {
           case Some(s) => SparkSession.setActiveSession(s)
           case None => SparkSession.clearActiveSession()
@@ -267,7 +265,7 @@ object GraphState {
       // edges-write exception (ADVICE r15), so it is attached as
       // suppressed instead when both writes fail
       var primary: Throwable = null
-      try newE.write.saveAsTable(s"${eT}__next")
+      try newE.write.saveAsTable(eNext)
       catch { case t: Throwable => primary = t; throw t }
       finally {
         try vWrite.join()
@@ -276,8 +274,8 @@ object GraphState {
             if (primary == null) throw j else { primary.addSuppressed(j); () }
         }
       }
-      stamp(spark, s"${vT}__next", ep, view.param)
-      stamp(spark, s"${eT}__next", ep, None)
+      stamp(spark, vNext, ep, view.param)
+      stamp(spark, eNext, ep, None)
       // ground truth first: edges, then the derived view
       Incremental.swapStaged(spark, eT)
       Incremental.swapStaged(spark, vT)
@@ -296,9 +294,9 @@ object GraphState {
     val eT = edgesTable(name); val vT = viewTable(name, view)
     val r1 = Incremental.recoverStateTable(spark, eT)
     val eEp = epochOf(spark, eT)
-    val stagedEp = epochOf(spark, s"${vT}__next")
+    val vNext = Incremental.staged(vT)
     if (spark.catalog.tableExists(vT) &&
-        spark.catalog.tableExists(s"${vT}__next") && stagedEp == eEp &&
+        spark.catalog.tableExists(vNext) && epochOf(spark, vNext) == eEp &&
         epochOf(spark, vT) != eEp) {
       Incremental.swapStaged(spark, vT)
       s"promoted-staged-${view.suffix}"

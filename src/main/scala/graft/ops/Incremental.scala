@@ -98,11 +98,23 @@ object Incremental {
     * (the same crash-safety order as [[advanceStateTableBy]]). */
   def transformStateTable(spark: SparkSession, stateTable: String)
                          (next: DataFrame => DataFrame): Unit = {
-    val staged = s"${stateTable}__next"
-    spark.sql(s"DROP TABLE IF EXISTS $staged")
-    next(spark.table(stateTable)).write.saveAsTable(staged)
+    spark.sql(s"DROP TABLE IF EXISTS ${staged(stateTable)}")
+    next(spark.table(stateTable)).write.saveAsTable(staged(stateTable))
     swapStaged(spark, stateTable)
   }
+
+  /** The staging table an advance of `stateTable` writes before
+    * [[swapStaged]] promotes it; `__old` ([[retired]]) holds the live
+    * snapshot during the swap. Only this object builds these names. */
+  private[ops] def staged(stateTable: String): String = s"${stateTable}__next"
+  private def retired(stateTable: String): String = s"${stateTable}__old"
+
+  /** Drop each state table, its staging and retired snapshots, and
+    * their warehouse directories ([[Tables.dropTablesAndDirs]]). */
+  private[graft] def dropStateTables(spark: SparkSession,
+                                     stateTables: String*): Unit =
+    Tables.dropTablesAndDirs(spark,
+      stateTables.flatMap(t => Seq(t, staged(t), retired(t))): _*)
 
   /** Promote a fully-written `<stateTable>__next` staging table to
     * live: rename live → `__old`, rename `__next` → live, drop
@@ -114,11 +126,10 @@ object Incremental {
     * table NAME may still observe the one-op gap; point-in-time
     * readers should read a snapshot export, not the live name. */
   private[graft] def swapStaged(spark: SparkSession, stateTable: String): Unit = {
-    val staged = s"${stateTable}__next"
-    val old = s"${stateTable}__old"
+    val old = retired(stateTable)
     spark.sql(s"DROP TABLE IF EXISTS $old")
     spark.sql(s"ALTER TABLE $stateTable RENAME TO $old")
-    spark.sql(s"ALTER TABLE $staged RENAME TO $stateTable")
+    spark.sql(s"ALTER TABLE ${staged(stateTable)} RENAME TO $stateTable")
     spark.sql(s"DROP TABLE $old")
   }
 
@@ -142,14 +153,14 @@ object Incremental {
     *  - `"clean"` — nothing to do.
     */
   def recoverStateTable(spark: SparkSession, stateTable: String): String = {
-    val staged = s"${stateTable}__next"
-    val old = s"${stateTable}__old"
+    val next = staged(stateTable)
+    val old = retired(stateTable)
     val cat = spark.catalog
     val hasLive = cat.tableExists(stateTable)
-    val hasStaged = cat.tableExists(staged)
+    val hasStaged = cat.tableExists(next)
     val hasOld = cat.tableExists(old)
     if (!hasLive && hasStaged) {
-      spark.sql(s"ALTER TABLE $staged RENAME TO $stateTable")
+      spark.sql(s"ALTER TABLE $next RENAME TO $stateTable")
       if (hasOld) spark.sql(s"DROP TABLE $old")
       "completed-swap"
     } else if (!hasLive && hasOld) {
@@ -159,7 +170,7 @@ object Incremental {
       spark.sql(s"DROP TABLE $old")
       "dropped-old"
     } else if (hasLive && hasStaged) {
-      spark.sql(s"DROP TABLE $staged")
+      spark.sql(s"DROP TABLE $next")
       "dropped-stale-staging"
     } else "clean"
   }

@@ -126,7 +126,7 @@ object CatalogML4 {
     ("q152_incr_agg_state", (s: SparkSession, d: String) => {
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q152_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
+      Incremental.dropStateTables(s, st)
       val orders = table(s, d, "orders")
       val cut = "TIMESTAMP '1997-01-01'"
       Incremental.aggState(orders.where(expr(s"o_orderdate < $cut")),
@@ -250,25 +250,12 @@ object CatalogML4 {
     // bit-portable enough to carry a full differential oracle (the
     // same three rounds unrolled as a DuckDB CTE chain).
     ("q155_graph_pagerank", (s: SparkSession, d: String) => {
-      val e0 = table(s, d, "lineitem")
-        .join(table(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + 1000000000L).as("s2"))
-        .distinct()
-      val edges = e0.select(col("c").as("src"), col("s2").as("dst"))
-        .unionAll(e0.select(col("s2").as("src"), col("c").as("dst")))
+      val edges = graft.ops.Graph.purchaseEdges(table(s, d, "lineitem"),
+        table(s, d, "orders"))
       graft.ops.Graph.pageRank(edges, "src", "dst", iters = 3)
         .orderBy("node")
-    }, Some(
-      graft.ops.Graph.pageRankSql(
-        """e0 AS (
-          |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000000 AS s2
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |),
-          |e AS (SELECT c AS src, s2 AS dst FROM e0
-          |      UNION ALL SELECT s2, c FROM e0)""".stripMargin,
-        iters = 3) + "\nORDER BY node")),
+    }, Some(graft.ops.Graph.pageRankSql(graft.ops.Graph.purchaseEdgesSql(),
+      iters = 3) + "\nORDER BY node")),
     // The persisted half of the inverted index (q151's build-once
     // sibling, the q93/q138 pattern for IR): postings written to a
     // bucketed term-sorted table, a "new crawl" slice appended WITHOUT
@@ -349,7 +336,7 @@ object CatalogML4 {
       import graft.functions.PortableSketches._
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q158_hll_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
+      Incremental.dropStateTables(s, st)
       val events = table(s, d, "events")
       def regs(df: DataFrame): DataFrame = df
         .select(col("event_type"), hllDigest(col("user_id")).as("__d"))
@@ -474,14 +461,8 @@ object CatalogML4 {
     // legitimate 0. Same DECIMAL discipline ⇒ same full unrolled-CTE
     // differential oracle.
     ("q162_graph_pagerank_seeded", (s: SparkSession, d: String) => {
-      val e0 = table(s, d, "lineitem")
-        .join(table(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + 1000000000L).as("s2"))
-        .distinct()
-      val edges = e0.select(col("c").as("src"), col("s2").as("dst"))
-        .unionAll(e0.select(col("s2").as("src"), col("c").as("dst")))
+      val edges = graft.ops.Graph.purchaseEdges(table(s, d, "lineitem"),
+        table(s, d, "orders"))
       val seeds = table(s, d, "customer")
         .where(col("c_nationkey") === 1)
         .select(col("c_custkey").as("node"))
@@ -490,12 +471,7 @@ object CatalogML4 {
         .orderBy("node")
     }, Some(
       graft.ops.Graph.personalizedPageRankSql(
-        """e0 AS (
-          |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000000 AS s2
-          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |),
-          |e AS (SELECT c AS src, s2 AS dst FROM e0
-          |      UNION ALL SELECT s2, c FROM e0)""".stripMargin,
+        graft.ops.Graph.purchaseEdgesSql(),
         """seeds AS (SELECT c_custkey AS node FROM customer
           |          WHERE c_nationkey = 1)""".stripMargin,
         iters = 3) + "\nORDER BY node")),

@@ -441,23 +441,12 @@ object CatalogML5 {
     // reachability. Integer-only rounds ⇒ the full unrolled-CTE
     // differential oracle, no decimal machinery.
     ("q181_graph_label_prop", (s: SparkSession, d: String) => {
-      val e0 = table(s, d, "lineitem")
-        .join(table(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + 1000000000L).as("s2"))
-        .distinct()
-      val edges = e0.select(col("c").as("src"), col("s2").as("dst"))
-        .unionAll(e0.select(col("s2").as("src"), col("c").as("dst")))
+      val edges = graft.ops.Graph.purchaseEdges(table(s, d, "lineitem"),
+        table(s, d, "orders"))
       graft.ops.Graph.labelPropagation(edges, "src", "dst", iters = 3)
         .orderBy("node")
     }, Some(graft.ops.Graph.labelPropagationSql(
-      """e0 AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000000 AS s2
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |),
-        |e AS (SELECT c AS src, s2 AS dst FROM e0
-        |      UNION ALL SELECT s2, c FROM e0)""".stripMargin,
+      graft.ops.Graph.purchaseEdgesSql(),
       iters = 3) + "\nORDER BY node")),
 
     // Behavior trigrams: the top-20 most frequent 3-step event paths —

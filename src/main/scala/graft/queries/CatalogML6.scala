@@ -53,7 +53,7 @@ object CatalogML6 {
     ("q191_quantile_sketch_state", (s: SparkSession, d: String) => {
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q191_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
+      Incremental.dropStateTables(s, st)
       val li = table(s, d, "lineitem")
       QuantileSketch.sketch(li.where(expr("l_orderkey % 3 = 0")),
           "l_returnflag", revenue, S)
@@ -316,26 +316,15 @@ object CatalogML6 {
     // STREAMING maintenance of the HDR percentile state — the q160
     // monoid-advance loop with the q190 registers as the state: three
     // arrival waves fold into a persisted (group, bucket, cnt) table
-    // through CatalogStream.foldWaves (one stage-and-swap per wave; sum-merge
-    // is commutative so wave order is free), and the report answers
-    // quantiles FROM THE STATE. Oracle: the from-scratch whole-corpus
-    // sketch — merge-equals-whole, streamed.
+    // through CatalogStream.maintainEventState (one stage-and-swap per
+    // wave; sum-merge is commutative so wave order is free), and the
+    // report answers quantiles FROM THE STATE. Oracle: the from-scratch
+    // whole-corpus sketch — merge-equals-whole, streamed.
     ("q200_stream_quantile_state", (s: SparkSession, d: String) => {
-      val tag = Integer.toHexString(d.hashCode)
-      val st = s"q200_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
-      val events = table(s, d, "events")
-        .select(col("event_id"), col("event_type"), col("value"))
-      val dir = CatalogStream.stageEventStateWaves(s, d)
-      QuantileSketch.sketch(events.where(lit(false)), "event_type",
-          col("value"), S)
-        .write.saveAsTable(st)
-      CatalogStream.foldWaves(s, dir, events.schema) { b =>
-        Incremental.advanceStateTableBy(s, st,
-          QuantileSketch.sketch(b, "event_type", col("value"), S),
-          Seq("event_type", "bucket"), QuantileSketch.mergeAggs)
-      }
-      QuantileSketch.quantiles(s.table(st), "event_type", Seq(50, 90, 99), S)
+      val state = CatalogStream.maintainEventState(s, d, "q200")(
+        QuantileSketch.sketch(_, "event_type", col("value"), S),
+        (cur, w) => QuantileSketch.merge(Seq(cur, w), "event_type"))
+      QuantileSketch.quantiles(state, "event_type", Seq(50, 90, 99), S)
         .orderBy("event_type", "pct")
     }, Some(
       QuantileSketch.quantilesSql(
@@ -415,7 +404,7 @@ object CatalogML6 {
       import graft.ops.Dedup
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q203_cc_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
+      Incremental.dropStateTables(s, st)
       val pairs = Dedup.minhashJaccardPairs(
         table(s, d, "documents"), "doc_id", "text",
         shingleN = 3, threshold = 0.7)

@@ -166,8 +166,8 @@ object CatalogML7 {
       val tag = Integer.toHexString(d.hashCode)
       val rt = s"q209_rect_$tag"
       val at = s"q209_assert_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, rt, s"${rt}__next",
-        s"${rt}__old", at)
+      graft.ops.Incremental.dropStateTables(s, rt)
+      graft.ops.Tables.dropTablesAndDirs(s, at)
       val ch = table(s, d, "events").where(col("user_id") % 7 === 1)
         .select(col("user_id").as("k"),
           unix_micros(col("ts").cast("timestamp")).as("vt"),
@@ -296,7 +296,7 @@ object CatalogML7 {
       import graft.ops.{Incremental, QuantileSketch}
       val tag = Integer.toHexString(d.hashCode)
       val st = s"q214_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
+      Incremental.dropStateTables(s, st)
       val nTokens = size(split(trim(col("text")), "\\s+"))
       val v = length(regexp_replace(col("text"), " ", "")).cast("double") /
         nTokens.cast("double")

@@ -143,26 +143,15 @@ object CatalogML8 {
     // labels canonicalized to each community's min member id (the
     // CC convention) so the assignment is partition-order-free.
     ("q217_graph_louvain", (s: SparkSession, d: String) => {
-      val e0 = table(s, d, "lineitem")
-        .join(table(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + 1000000000L).as("s2"))
-        .distinct()
-      val edges = e0.select(col("c").as("src"), col("s2").as("dst"))
-        .unionAll(e0.select(col("s2").as("src"), col("c").as("dst")))
+      val edges = graft.ops.Graph.purchaseEdges(table(s, d, "lineitem"),
+        table(s, d, "orders"))
       val res = graft.ops.Graph.louvain(edges, "src", "dst", iters = 4)
       val canon = res.groupBy("community").agg(min("node").as("__cl"))
       res.join(canon, Seq("community"))
         .select(col("node"), col("__cl").as("community"))
         .orderBy("node")
     }, Some(graft.ops.Graph.louvainSql(
-      """e0 AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000000 AS s2
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |),
-        |e AS (SELECT c AS src, s2 AS dst, 1 AS w FROM e0
-        |      UNION ALL SELECT s2, c, 1 FROM e0)""".stripMargin,
+      graft.ops.Graph.purchaseEdgesSql(unitWeight = true),
       iters = 4,
       tail =
         """SELECT lv.node, cn.clabel AS community
@@ -181,14 +170,8 @@ object CatalogML8 {
     // replays verbatim in the oracle. Same purchase graph as q217 —
     // the two entries together show what phase 2 buys.
     ("q219_graph_louvain_multilevel", (s: SparkSession, d: String) => {
-      val e0 = table(s, d, "lineitem")
-        .join(table(s, d, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("c"),
-          (col("l_suppkey") + 1000000000L).as("s2"))
-        .distinct()
-      val edges = e0.select(col("c").as("src"), col("s2").as("dst"))
-        .unionAll(e0.select(col("s2").as("src"), col("c").as("dst")))
+      val edges = graft.ops.Graph.purchaseEdges(table(s, d, "lineitem"),
+        table(s, d, "orders"))
       val res = graft.ops.Graph.louvainMultiLevel(edges, "src", "dst",
         itersPerLevel = 3, levels = 2)
       val canon = res.groupBy("community").agg(min("node").as("__cl"))
@@ -196,12 +179,7 @@ object CatalogML8 {
         .select(col("node"), col("__cl").as("community"))
         .orderBy("node")
     }, Some(graft.ops.Graph.louvainMultiLevelSql(
-      """e0 AS (
-        |  SELECT DISTINCT o_custkey AS c, l_suppkey + 1000000000 AS s2
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |),
-        |e AS (SELECT c AS src, s2 AS dst, 1 AS w FROM e0
-        |      UNION ALL SELECT s2, c, 1 FROM e0)""".stripMargin,
+      graft.ops.Graph.purchaseEdgesSql(unitWeight = true),
       itersPerLevel = 3, levels = 2,
       tail =
         """SELECT lv.node, cn.clabel AS community
@@ -277,26 +255,12 @@ object CatalogML8 {
     // all-at-once merge the oracle replays — the q214 law, now proven
     // ON the live gate.
     ("q218_stream_quantile_bounded_state", (s: SparkSession, d: String) => {
-      import graft.ops.{Incremental, QuantileSketch}
-      val S = QuantileSketch.DefaultS
-      val tag = Integer.toHexString(d.hashCode)
-      val st = s"q218_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
-      val events = table(s, d, "events")
-        .select(col("event_id"), col("event_type"), col("value"))
-      val dir = CatalogStream.stageEventStateWaves(s, d)
-      QuantileSketch.sketchBounded(events.where(lit(false)), "event_type",
-          col("value"), S, maxRegisters = 24)
-        .write.saveAsTable(st)
-      CatalogStream.foldWaves(s, dir, events.schema) { b =>
-        Incremental.transformStateTable(s, st) { cur =>
-          QuantileSketch.mergeBounded(Seq(cur,
-            QuantileSketch.sketchBounded(b, "event_type", col("value"),
-              S, maxRegisters = 24)), "event_type")
-        }
-      }
-      QuantileSketch.quantilesBounded(s.table(st), "event_type",
-          Seq(50, 90, 99))
+      import graft.ops.QuantileSketch
+      val state = CatalogStream.maintainEventState(s, d, "q218")(
+        QuantileSketch.sketchBounded(_, "event_type", col("value"),
+          QuantileSketch.DefaultS, maxRegisters = 24),
+        (cur, w) => QuantileSketch.mergeBounded(Seq(cur, w), "event_type"))
+      QuantileSketch.quantilesBounded(state, "event_type", Seq(50, 90, 99))
         .orderBy("event_type", "pct")
     }, Some {
       import graft.ops.QuantileSketch

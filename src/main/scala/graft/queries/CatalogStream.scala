@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
 import graft.connector.FileTopicSource
 import graft.delivery.Delivery
 import graft.model.ConsumerConfig
-import graft.ops.GraphState
+import graft.ops.{GraphState, Incremental}
 import graft.ops.Tables.{table, dsum, dsumSql}
 import graft.streaming.StreamOps
 
@@ -84,7 +84,7 @@ object CatalogStream {
     * deterministic (same content, names, mtime order), so reuse is
     * bit-identical to restaging; dirs live under the pid-keyed scratch
     * root ([[graft.ops.LocalFiles.processScratchDir]]) deleted at JVM
-    * shutdown, and [[runWaves]] is told it does NOT own cached dirs.
+    * shutdown, so no run ever deletes a staged wave dir.
     * The per-run engine startup + checkpoint + state-store setup is
     * the irreducible remainder (a checkpoint must never be reused —
     * replay is the point). */
@@ -140,8 +140,7 @@ object CatalogStream {
     * query ([[waves]], AvailableNow) into a uniquely-named memory sink;
     * returns the sink table. */
   private def runWaves(spark: SparkSession, dir: String, schema: StructType,
-                       mode: String, ownsDir: Boolean = true)
-                      (compose: DataFrame => DataFrame): DataFrame = {
+                       mode: String)(compose: DataFrame => DataFrame): DataFrame = {
     val name = "graft_sink_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val src = waves(spark, dir, schema)
@@ -155,7 +154,7 @@ object CatalogStream {
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     val ckpt = Files.createTempDirectory("graft-sink-ckpt").toString
     // The cleanup is in a finally: a failed stream (analysis error,
-    // runtime death) must not leak the wave dir, the checkpoint, or the
+    // runtime death) must not leak the checkpoint or the
     // driver-resident sink view — exactly the orphans this helper
     // exists to prevent (round-8 review).
     try {
@@ -175,24 +174,43 @@ object CatalogStream {
       spark.table(name).localCheckpoint(true)
     } finally {
       scala.util.Try(spark.catalog.dropTempView(name))
-      // cached (shared) wave dirs outlive the run — the pid-keyed
-      // scratch shutdown hook owns them; per-run checkpoints never do
-      if (ownsDir) rmrf(dir)
       rmrf(ckpt)
     }
   }
 
-  /** The (event_id, event_type, value) three-wave mod-split staging
-    * the state-maintenance loops replay (q160, q200 — monoid merges,
-    * so wave order is free and a mod split is valid). Shared through
-    * the process cache: one staging serves every consumer. */
-  private[queries] def stageEventStateWaves(s: SparkSession, d: String): String = {
+  /** Start state table `st` (after dropping it and its stagings) from
+    * `seed` and fold the waves staged in `dir` into it, one
+    * stage-and-swap [[Incremental.transformStateTable]] of
+    * `step(current, wave)` per wave; returns the live table. The
+    * state-table sibling of [[maintainGraph]]. */
+  private[graft] def maintainState(s: SparkSession, st: String, seed: DataFrame,
+                                   dir: String, schema: StructType)
+                                  (step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    Incremental.dropStateTables(s, st)
+    seed.write.saveAsTable(st)
+    foldWaves(s, dir, schema)(b =>
+      Incremental.transformStateTable(s, st)(step(_, b)))
+    s.table(st)
+  }
+
+  /** Query `q`'s state table on fixture `d`. */
+  private def stateName(q: String, d: String): String =
+    s"${q}_state_${Integer.toHexString(d.hashCode)}"
+
+  /** [[maintainState]] of query `q` over three `event_id % 3` waves of
+    * (event_id, event_type, value) — a mod split, valid because every
+    * caller's merge is order-free: the seed is `stateOf` no events,
+    * and each wave merges the current state with `stateOf(wave)`
+    * (q160, q200, q218; one shared staging). */
+  private[queries] def maintainEventState(s: SparkSession, d: String, q: String)
+                                         (stateOf: DataFrame => DataFrame,
+                                          merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val events = table(s, d, "events")
       .select(col("event_id"), col("event_type"), col("value"))
-    stageWavesCached(d, "events-state")(Seq(
-      events.where(col("event_id") % 3 === 0),
-      events.where(col("event_id") % 3 === 1),
-      events.where(col("event_id") % 3 === 2)))
+    val dir = stageWavesCached(d, "events-state")(
+      (0 to 2).map(m => events.where(col("event_id") % 3 === m)))
+    maintainState(s, stateName(q, d), stateOf(events.where(lit(false))),
+      dir, events.schema)((cur, w) => merge(cur, stateOf(w)))
   }
 
   /** events projected to the streaming payload. The fixture's ts reads
@@ -209,6 +227,31 @@ object CatalogStream {
     * the identical double under the UTC-pinned session. */
   private def epochSec(c: org.apache.spark.sql.Column) =
     c.cast("double")
+
+  /** The instant 80% into `events`' time range (`variant` keys the
+    * min/max cache). */
+  private def split80(events: DataFrame, d: String, variant: String): Double = {
+    val (mn, mx) = minMaxEpoch(events, d, variant)
+    mn + 0.8 * (mx - mn)
+  }
+
+  /** `events` staged as two waves: the first 80% of its time range,
+    * then the tail (`variant` names the event slice). */
+  private def splitWaves(events: DataFrame, d: String, variant: String): String =
+    stageWavesCached(d, s"split8020-$variant") {
+      val (e, at) = (epochSec(col("ts")), split80(events, d, variant))
+      Seq(events.where(e <= at), events.where(e > at))
+    }
+
+  /** q122/q129's three waves: the first 80% of the time range minus
+    * the straggler users, the tail minus them, then the stragglers. */
+  private def lateWaves(events: DataFrame, d: String): String =
+    stageWavesCached(d, "late3") {
+      val (e, at) = (epochSec(col("ts")), split80(events, d, "all"))
+      val isLate = col("user_id") % LateUsers === 0
+      Seq(events.where(!isLate && e <= at), events.where(!isLate && e > at),
+        events.where(isLate))
+    }
 
   /** Co-order part pairs `(src, dst)` of the `l_partkey % 3 == 0`
     * lineitem slice whose order key passes `pred`: the crawl waves of
@@ -235,7 +278,7 @@ object CatalogStream {
     GraphState.table(s, st, view)
   }
 
-  private val LateUsers = 10 // user_id % 10 == 0 rows arrive in wave B
+  private val LateUsers = 10 // user_id % 10 == 0 rows arrive in the last wave
 
   def entries: Seq[(String, Q, Option[String])] = Seq(
 
@@ -258,15 +301,7 @@ object CatalogStream {
     // below the final watermark max(all ts) − 1h.
     ("q122_stream_tumbling_late", (s: SparkSession, d: String) => {
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val isLate = col("user_id") % LateUsers === 0
-      val dir = stageWavesCached(d, "late3")(Seq(
-        events.where(!isLate && e <= split),
-        events.where(!isLate && e > split),
-        events.where(isLate)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, lateWaves(events, d), events.schema, "append") { df =>
         df.withWatermark("ts", "3600 seconds")
           .groupBy(window(col("ts"), "3600 seconds").as("w"))
           .agg(count(lit(1)).as("n_events"),
@@ -319,7 +354,7 @@ object CatalogStream {
       val events = ev(s, d)
       val dir = stageWavesCached(d, "replay")(Seq(events,
         events.where(col("user_id") % LateUsers === 0)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, dir, events.schema, "append") { df =>
         StreamOps.dedupped(df, "ts", "event_id", "90 days")
       }
         .select(col("event_id"), col("user_id"), col("event_type"))
@@ -338,12 +373,7 @@ object CatalogStream {
     ("q124_stream_state_running", (s: SparkSession, d: String) => {
       import s.implicits._
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "update", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "all"), events.schema, "update") { df =>
         StreamOps.runningUserState(s,
           df.select(col("user_id"),
             floor(col("value") * 100).cast("double").as("cents"))
@@ -366,14 +396,9 @@ object CatalogStream {
     // key, so the left join is deterministic per event).
     ("q125_stream_static_enrich", (s: SparkSession, d: String) => {
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020")(Seq(
-        events.where(e <= split), events.where(e > split)))
       val dim = table(s, d, "customer")
         .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "all"), events.schema, "append") { df =>
         StreamOps.enrich(df, dim, "user_id", "c_custkey")
       }
         .select(col("event_id"), col("user_id"), col("c_nationkey"),
@@ -397,12 +422,8 @@ object CatalogStream {
       // subset, and the gate query stops costing a third of the bench
       // family's wall-clock at sf0.1
       val events = ev(s, d).where(col("user_id") % 3 === 0)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "u3") // min/max of the SUBSET
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020u3")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      // the split is 80% into the SUBSET's time range
+      runWaves(s, splitWaves(events, d, "u3"), events.schema, "append") { df =>
         val a = df.where(col("event_id") % 2 === 0)
           .select(col("event_id").as("a_id"), col("user_id").as("a_user"),
             col("ts").as("a_ts"))
@@ -438,12 +459,7 @@ object CatalogStream {
     // gaps-and-islands sessionization plus that filter.
     ("q127_stream_session_merge", (s: SparkSession, d: String) => {
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "all"), events.schema, "append") { df =>
         df.withWatermark("ts", "3600 seconds")
           .groupBy(session_window(col("ts"), "1800 seconds").as("w"),
             col("user_id"))
@@ -491,12 +507,7 @@ object CatalogStream {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       import s.implicits._
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "update", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "all"), events.schema, "update") { df =>
         StreamOps.runningUserStateTws(s,
           df.select(col("user_id"),
             floor(col("value") * 100).cast("double").as("cents"))
@@ -527,16 +538,7 @@ object CatalogStream {
     // which the oracle states as a plain WHERE clause.
     ("q129_stream_dedup_eviction", (s: SparkSession, d: String) => {
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val isLate = col("user_id") % LateUsers === 0
-      // same wave set as q122 — shared staged copy by construction
-      val dir = stageWavesCached(d, "late3")(Seq(
-        events.where(!isLate && e <= split),
-        events.where(!isLate && e > split),
-        events.where(isLate)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, lateWaves(events, d), events.schema, "append") { df =>
         StreamOps.dedupped(df, "ts", "event_id", "3600 seconds")
       }
         .select(col("event_id"), col("user_id"), col("event_type"))
@@ -569,12 +571,7 @@ object CatalogStream {
     ("q130_stream_alerts", (s: SparkSession, d: String) => {
       import s.implicits._
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "all"), events.schema, "append") { df =>
         StreamOps.thresholdAlerts(s,
           df.select(col("user_id"),
             floor(col("value") * 100).cast("double").as("cents"))
@@ -613,7 +610,7 @@ object CatalogStream {
         docs.where(col("doc_id") % 3 < 2),
         docs.where(col("doc_id") % 3 === 2)
           .unionAll(docs.where(col("doc_id") % 6 === 0))))
-      runWaves(s, dir, docs.schema, "append", ownsDir = false) { df =>
+      runWaves(s, dir, docs.schema, "append") { df =>
         val tn = graft.ops.TextOps.normalizeText(col("text"))
         val withNorm = df.withColumn("text_norm", tn)
           .withColumn("ts", split(trim(col("text_norm")), "\\s+"))
@@ -658,24 +655,10 @@ object CatalogStream {
     // exactly the property that lets the same state table absorb
     // batch backfills and streaming deltas interchangeably.
     ("q160_stream_state_advance", (s: SparkSession, d: String) => {
-      import graft.ops.Incremental
-      val tag = Integer.toHexString(d.hashCode)
-      val st = s"q160_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
-      val events = table(s, d, "events")
-        .select(col("event_id"), col("event_type"), col("value"))
-      val dir = stageEventStateWaves(s, d)
-      Incremental.aggState(events.where(lit(false)),
-          Seq("event_type"), "value", scale = 6)
-        .write.saveAsTable(st)
-      foldWaves(s, dir, events.schema) { b =>
-        Incremental.advanceStateTableBy(s, st,
-          Incremental.aggState(b, Seq("event_type"), "value", scale = 6),
-          Seq("event_type"),
-          Seq(sum(col("n")).as("n"), sum(col("s")).as("s"),
-            min(col("mn")).as("mn"), max(col("mx")).as("mx")))
-      }
-      Incremental.finish(s.table(st), Seq("event_type"))
+      val keys = Seq("event_type")
+      Incremental.finish(maintainEventState(s, d, "q160")(
+          Incremental.aggState(_, keys, "value", scale = 6),
+          (cur, w) => Incremental.mergeStates(Seq(cur, w), keys)), keys)
         .orderBy("event_type")
     }, Some(
       s"""SELECT event_type,
@@ -699,10 +682,7 @@ object CatalogStream {
     // genuinely diverge — deletes would un-delete). Oracle: the
     // from-scratch batch MERGE over the whole feed.
     ("q177_stream_cdc_apply", (s: SparkSession, d: String) => {
-      import graft.ops.{Incremental, Warehouse}
-      val tag = Integer.toHexString(d.hashCode)
-      val st = s"q177_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
+      import graft.ops.Warehouse
       val base = table(s, d, "customer").select(
         col("c_custkey").as("k"), col("c_name").as("name"),
         floor(col("c_acctbal") * 100).as("cents"))
@@ -720,13 +700,9 @@ object CatalogStream {
         changes.where(col("seq") * 3 <= mx),
         changes.where(col("seq") * 3 > mx && col("seq") * 3 <= 2 * mx),
         changes.where(col("seq") * 3 > 2 * mx)))
-      base.write.saveAsTable(st)
-      foldWaves(s, dir, changes.schema) { b =>
-        Incremental.transformStateTable(s, st)(cur =>
-          Warehouse.applyChangelog(cur, b, "k", "seq", "op",
-            Seq("name", "cents")))
-      }
-      s.table(st).orderBy("k")
+      maintainState(s, stateName("q177", d), base, dir, changes.schema)(
+          Warehouse.applyChangelog(_, _, "k", "seq", "op", Seq("name", "cents")))
+        .orderBy("k")
     }, Some(graft.ops.Warehouse.applyChangelogSql(
       "SELECT c_custkey AS k, c_name AS name, " +
         "CAST(floor(c_acctbal * 100) AS BIGINT) AS cents FROM customer",
@@ -749,10 +725,7 @@ object CatalogStream {
     // the EMPTY dimension; the final table must equal the
     // from-scratch q168 build over the whole feed.
     ("q188_stream_scd2_maintain", (s: SparkSession, d: String) => {
-      import graft.ops.{Incremental, Warehouse}
-      val tag = Integer.toHexString(d.hashCode)
-      val st = s"q188_state_$tag"
-      graft.ops.Tables.dropTablesAndDirs(s, st, s"${st}__next", s"${st}__old")
+      import graft.ops.Warehouse
       val ch = table(s, d, "events").select(col("user_id"),
         col("ts").cast("timestamp").as("ts"), col("event_id"),
         col("event_type").as("state"))
@@ -762,18 +735,14 @@ object CatalogStream {
         ch.where(col("ts") < cut1),
         ch.where(col("ts") >= cut1 && col("ts") < cut2),
         ch.where(col("ts") >= cut2)))
-      Warehouse.scd2Build(ch.where(lit(false)), "user_id",
-          date_trunc("hour", col("ts")), "event_id", Seq("state"))
-        .write.saveAsTable(st)
-      foldWaves(s, dir, ch.schema) { b =>
-        Incremental.transformStateTable(s, st)(cur =>
-          Warehouse.scd2Apply(cur,
-            b.select(col("user_id"),
-              date_trunc("hour", col("ts")).as("__cts"),
-              col("event_id"), col("state")),
-            "user_id", col("__cts"), "event_id", Seq("state")))
-      }
-      s.table(st).orderBy("user_id", "version")
+      val seed = Warehouse.scd2Build(ch.where(lit(false)), "user_id",
+        date_trunc("hour", col("ts")), "event_id", Seq("state"))
+      maintainState(s, stateName("q188", d), seed, dir, ch.schema) { (cur, b) =>
+        Warehouse.scd2Apply(cur,
+          b.select(col("user_id"), date_trunc("hour", col("ts")).as("__cts"),
+            col("event_id"), col("state")),
+          "user_id", col("__cts"), "event_id", Seq("state"))
+      }.orderBy("user_id", "version")
     }, Some("WITH " + graft.ops.Warehouse.scd2BuildSql(
       "SELECT user_id AS k, date_trunc('hour', ts) AS ts, " +
         "event_id AS seq, event_type AS state FROM events",
@@ -802,12 +771,7 @@ object CatalogStream {
     // proves both classes are nonempty on the fixture.
     ("q193_stream_stream_outer", (s: SparkSession, d: String) => {
       val events = ev(s, d).where(col("user_id") % 3 === 0)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "u3")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020u3")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "u3"), events.schema, "append") { df =>
         val a = df.where(col("event_id") % 2 === 0)
           .select(col("event_id").as("a_id"), col("user_id").as("a_user"),
             col("ts").as("a_ts"))
@@ -815,8 +779,9 @@ object CatalogStream {
             (col("user_id") % 9 =!= 0))
           .select(col("event_id").as("b_id"), col("user_id").as("b_user"),
             col("ts").as("b_ts"))
-        StreamOps.streamStreamJoinLeftOuter(a, b, "a_user", "b_user",
-          "a_ts", "b_ts", "3600 seconds", "600 seconds", "600 seconds")
+        StreamOps.streamStreamJoin(a, b, "a_user", "b_user",
+          "a_ts", "b_ts", "3600 seconds", "600 seconds", "600 seconds",
+          joinType = "left_outer")
           .select(col("a_id"), col("b_id"))
       }
         .orderBy("a_id", "b_id")
@@ -870,12 +835,7 @@ object CatalogStream {
     // in order.
     ("q211_stream_stream_full_outer", (s: SparkSession, d: String) => {
       val events = ev(s, d).where(col("user_id") % 3 === 0)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "u3")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020u3")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "u3"), events.schema, "append") { df =>
         val a = df.where((col("event_id") % 2 === 0) &&
             (col("user_id") % 9 =!= 1))
           .select(col("event_id").as("a_id"), col("user_id").as("a_user"),
@@ -884,8 +844,9 @@ object CatalogStream {
             (col("user_id") % 9 =!= 0))
           .select(col("event_id").as("b_id"), col("user_id").as("b_user"),
             col("ts").as("b_ts"))
-        StreamOps.streamStreamJoinFullOuter(a, b, "a_user", "b_user",
-          "a_ts", "b_ts", "3600 seconds", "600 seconds", "600 seconds")
+        StreamOps.streamStreamJoin(a, b, "a_user", "b_user",
+          "a_ts", "b_ts", "3600 seconds", "600 seconds", "600 seconds",
+          joinType = "full_outer")
           .select(col("a_id"), col("b_id"))
       }
         .orderBy(coalesce(col("a_id"), lit(-1L)),
@@ -961,7 +922,7 @@ object CatalogStream {
         events.where(e > s1 && e <= s2).unionAll(retry(5, 900L)),
         events.where(e > s2).unionAll(retry(7, 900L))
           .unionAll(retry(11, 1296000L))))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, dir, events.schema, "append") { df =>
         StreamOps.deduppedWithinWatermark(df, "ts", Seq("event_id"),
           "216000 seconds")
           .select("event_id")
@@ -1003,12 +964,7 @@ object CatalogStream {
     // sessions.
     ("q202_stream_session_funnel", (s: SparkSession, d: String) => {
       val events = ev(s, d)
-      val e = epochSec(col("ts"))
-      val (mn, mx) = minMaxEpoch(events, d, "all")
-      val split = mn + 0.8 * (mx - mn)
-      val dir = stageWavesCached(d, "split8020")(Seq(
-        events.where(e <= split), events.where(e > split)))
-      runWaves(s, dir, events.schema, "append", ownsDir = false) { df =>
+      runWaves(s, splitWaves(events, d, "all"), events.schema, "append") { df =>
         StreamOps.sessionFunnel(s, df, "ts", "user_id", "event_id",
           "event_type", Seq("signup", "view", "click", "purchase"),
           gapSeconds = 1800, watermark = "3600 seconds").toDF()

@@ -67,57 +67,29 @@ object StreamOps {
     * stream `b` with the same key whose timestamp falls within
     * [a.ts - before, a.ts + after]. Watermarks bound the join state on
     * both sides — without them the engine would buffer both streams
-    * forever. */
-  def streamStreamJoin(a: DataFrame, b: DataFrame,
-                       keyA: String, keyB: String,
-                       tsA: String, tsB: String,
-                       watermark: String, before: String, after: String): DataFrame =
-    a.withWatermark(tsA, watermark)
-      .join(b.withWatermark(tsB, watermark),
-        expr(s"$keyA = $keyB AND $tsB BETWEEN $tsA - INTERVAL $before " +
-          s"AND $tsA + INTERVAL $after"))
-
-  /** LEFT-OUTER stream-stream interval join — [[streamStreamJoin]]
-    * plus the eviction-emission semantics late-arriving enrichment
-    * actually hits: an unmatched LEFT row is emitted null-padded only
-    * once the watermark PROVES no future partner can arrive (its
-    * `ts + after` horizon falls below the join's state watermark); an
+    * forever. `joinType` is `"inner"`, `"left_outer"` or
+    * `"full_outer"`.
+    *
+    * An outer join emits an unmatched row null-padded only once the
+    * (min-across-sides) watermark PROVES no future partner can arrive:
+    * an `a` row when its `ts + after` horizon falls below the join's
+    * state watermark, and under `"full_outer"` with symmetric bounds
+    * (`before` = `after` = h) a `b` row when its `ts + h` does. An
     * unmatched row whose horizon is still open when the stream ends is
-    * withheld, not emitted — null emission is an eviction event, never
+    * withheld, not emitted: null emission is an eviction event, never
     * a stream-end flush. Matched rows emit like the inner join.
     * Watermarks on BOTH sides are mandatory for outer emission (the
     * engine needs a bound to declare "no more matches"). */
-  def streamStreamJoinLeftOuter(a: DataFrame, b: DataFrame,
-                                keyA: String, keyB: String,
-                                tsA: String, tsB: String,
-                                watermark: String, before: String,
-                                after: String): DataFrame =
+  def streamStreamJoin(a: DataFrame, b: DataFrame,
+                       keyA: String, keyB: String,
+                       tsA: String, tsB: String,
+                       watermark: String, before: String, after: String,
+                       joinType: String = "inner"): DataFrame =
     a.withWatermark(tsA, watermark)
       .join(b.withWatermark(tsB, watermark),
         expr(s"$keyA = $keyB AND $tsB BETWEEN $tsA - INTERVAL $before " +
           s"AND $tsA + INTERVAL $after"),
-        "left_outer")
-
-  /** FULL-OUTER stream-stream interval join — both sides get
-    * [[streamStreamJoinLeftOuter]]'s eviction-emission semantics: an
-    * unmatched row from EITHER stream is emitted null-padded only when
-    * the (min-across-sides) watermark proves no future partner can
-    * arrive. With symmetric bounds (`before` = `after` = h) the
-    * horizons are symmetric too: an unmatched A row emits when
-    * a_ts + h falls below the state watermark, an unmatched B row when
-    * b_ts + h does. Unmatched rows whose horizon is still open at
-    * stream end are withheld on both sides (eviction, never a
-    * stream-end flush). */
-  def streamStreamJoinFullOuter(a: DataFrame, b: DataFrame,
-                                keyA: String, keyB: String,
-                                tsA: String, tsB: String,
-                                watermark: String, before: String,
-                                after: String): DataFrame =
-    a.withWatermark(tsA, watermark)
-      .join(b.withWatermark(tsB, watermark),
-        expr(s"$keyA = $keyB AND $tsB BETWEEN $tsA - INTERVAL $before " +
-          s"AND $tsA + INTERVAL $after"),
-        "full_outer")
+        joinType)
 
   /** Stream-static enrichment join (dimension broadcast per microbatch). */
   def enrich(stream: DataFrame, dim: DataFrame, streamKey: String,

@@ -179,10 +179,11 @@ object ExplainDump {
       "q240_graph_effective_diameter", "q242_graph_degree_profile",
       "triangle_advance_plan", "kcore_advance_plan",
       "comm_advance_plan", "anf_advance_plan",
-      // q122-q130 + q147 + q160 + q177 + q188 + q193 + q200 (streaming gate family) are deliberately absent: their
-      // returned frame is a memory-sink scan, so a physical-plan dump
-      // carries no information — their evidence is the DuckDB oracle
-      // (two-watermark arithmetic) + StreamOpsSpec
+      // q122-q130, q147, q160, q177, q188, q193, q200, q202, q211, q212
+      // and q218 (the streaming gate family) are deliberately absent: their
+      // returned frame reads a memory sink or a maintained state table,
+      // so its plan shows none of the streaming work — their evidence is
+      // the DuckDB oracle (two-watermark arithmetic) + StreamGateSpec
       "ivf_index_probe", "signature_index_probe")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries\n\n")

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Checkpointing, Dedup}
+import graft.testkit.TempDirs.withTempDir
 
 /** The reliable-checkpoint mode: same results as the default
   * executor-local mode, and the truncated lineage demonstrably lands in
@@ -25,48 +26,49 @@ class CheckpointingSpec extends SparkSpec {
   private def pairs = Seq((1L, 2L), (2L, 6L), (3L, 4L)).toDF("id_a", "id_b")
 
   test("reliable checkpoint mode matches local mode and writes to the checkpoint dir") {
-    val dir = Files.createTempDirectory("graft-ckpt").toString
+    withTempDir("graft-ckpt") { dir =>
 
-    def run(): (Set[(Long, Long, Double)], Set[(Long, Long)]) = {
-      val mined = Dedup.minhashJaccardPairs(docs, "doc_id", "text",
-          shingleN = 3, threshold = 0.5)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .as[(Long, Long, Double)].collect().toSet
-      val cc = Dedup.connectedComponents(pairs)
-        .as[(Long, Long)].collect().toSet
-      (mined, cc)
+      def run(): (Set[(Long, Long, Double)], Set[(Long, Long)]) = {
+        val mined = Dedup.minhashJaccardPairs(docs, "doc_id", "text",
+            shingleN = 3, threshold = 0.5)
+          .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
+          .as[(Long, Long, Double)].collect().toSet
+        val cc = Dedup.connectedComponents(pairs)
+          .as[(Long, Long)].collect().toSet
+        (mined, cc)
+      }
+
+      val (minedLocal, ccLocal) = run()
+      assert(!Checkpointing.isReliable(spark))
+
+      Checkpointing.enableReliable(spark, dir)
+      try {
+        assert(Checkpointing.isReliable(spark))
+        val (minedReliable, ccReliable) = run()
+        assert(minedReliable == minedLocal)
+        assert(ccReliable == ccLocal)
+        assert(ccReliable == Set((1L, 1L), (2L, 1L), (6L, 1L), (3L, 3L), (4L, 3L)))
+        // the reliable path must actually have written RDD checkpoint
+        // data to the stable dir (this is what survives executor loss)
+        val wrote = Files.walk(Paths.get(dir)).filter(Files.isRegularFile(_)).count()
+        assert(wrote > 0, s"expected checkpoint files under $dir")
+        // ... and rotated the superseded rounds: CC truncates once per
+        // propagation round, but each round's release() deletes the
+        // previous round's files, so only a bounded number of rdd-*
+        // checkpoint dirs may remain (not one per round)
+        import scala.jdk.CollectionConverters._
+        val rddDirs = Files.walk(Paths.get(dir)).iterator().asScala
+          .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
+          .size
+        assert(rddDirs <= 4,
+          s"superseded CC round checkpoints must be rotated away, found $rddDirs rdd-* dirs under $dir")
+      } finally Checkpointing.disableReliable(spark)
+
+      // back on the default path: still correct, mode flag honored
+      assert(!Checkpointing.isReliable(spark))
+      val (minedAgain, _) = run()
+      assert(minedAgain == minedLocal)
     }
-
-    val (minedLocal, ccLocal) = run()
-    assert(!Checkpointing.isReliable(spark))
-
-    Checkpointing.enableReliable(spark, dir)
-    try {
-      assert(Checkpointing.isReliable(spark))
-      val (minedReliable, ccReliable) = run()
-      assert(minedReliable == minedLocal)
-      assert(ccReliable == ccLocal)
-      assert(ccReliable == Set((1L, 1L), (2L, 1L), (6L, 1L), (3L, 3L), (4L, 3L)))
-      // the reliable path must actually have written RDD checkpoint
-      // data to the stable dir (this is what survives executor loss)
-      val wrote = Files.walk(Paths.get(dir)).filter(Files.isRegularFile(_)).count()
-      assert(wrote > 0, s"expected checkpoint files under $dir")
-      // ... and rotated the superseded rounds: CC truncates once per
-      // propagation round, but each round's release() deletes the
-      // previous round's files, so only a bounded number of rdd-*
-      // checkpoint dirs may remain (not one per round)
-      import scala.jdk.CollectionConverters._
-      val rddDirs = Files.walk(Paths.get(dir)).iterator().asScala
-        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("rdd-"))
-        .size
-      assert(rddDirs <= 4,
-        s"superseded CC round checkpoints must be rotated away, found $rddDirs rdd-* dirs under $dir")
-    } finally Checkpointing.disableReliable(spark)
-
-    // back on the default path: still correct, mode flag honored
-    assert(!Checkpointing.isReliable(spark))
-    val (minedAgain, _) = run()
-    assert(minedAgain == minedLocal)
   }
 
   test("local truncation carries MEASURED leaf statistics that drive broadcast planning") {
@@ -122,9 +124,10 @@ class CheckpointingSpec extends SparkSpec {
       assert(cur.count() == 100)
     }
     rounds("local")
-    val dir = Files.createTempDirectory("graft-ckpt-stats").toString
-    Checkpointing.enableReliable(spark, dir)
-    try rounds("reliable") finally Checkpointing.disableReliable(spark)
+    withTempDir("graft-ckpt-stats") { dir =>
+      Checkpointing.enableReliable(spark, dir)
+      try rounds("reliable") finally Checkpointing.disableReliable(spark)
+    }
   }
 
   test("CachedFrames dedups registrations by analyzed plan") {

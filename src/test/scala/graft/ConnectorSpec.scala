@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.connector.{FileTopicSource, KinesisTopicSource, TopicSink, TopicSource}
 import graft.model.{ClientConfig, ConsumerConfig, EndpointConfig}
+import graft.testkit.TempDirs.withTempDir
 
 /** Connector layer: envelope encode/decode round-trip, per-key ordered
   * sink, Kinesis option construction, config validation invariants. */
@@ -45,28 +44,30 @@ class ConnectorSpec extends SparkSpec {
   }
 
   test("file topic source streams the events fixture") {
-    val dir = Files.createTempDirectory("graft-topic").toString
-    // stage a copy of the events fixture as the topic backing
-    graft.ops.Tables.table(spark, sf, "events")
-      .write.mode("overwrite").parquet(s"$dir/data")
-    val src = FileTopicSource("events-topic", s"$dir/data",
-      schema = graft.ops.Tables.table(spark, sf, "events").schema)
-    val q = src.load(spark).writeStream.format("memory").queryName("topic_ev")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(spark.table("topic_ev").count() == 1000)
+    withTempDir("graft-topic") { dir =>
+      // stage a copy of the events fixture as the topic backing
+      graft.ops.Tables.table(spark, sf, "events")
+        .write.mode("overwrite").parquet(s"$dir/data")
+      val src = FileTopicSource("events-topic", s"$dir/data",
+        schema = graft.ops.Tables.table(spark, sf, "events").schema)
+      val q = src.load(spark).writeStream.format("memory").queryName("topic_ev")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(spark.table("topic_ev").count() == 1000)
+    }
   }
 
   test("file topic source also reads JSON-format topics") {
-    val dir = Files.createTempDirectory("graft-json-topic").toString
-    graft.ops.Tables.table(spark, sf, "region")
-      .write.mode("overwrite").json(s"$dir/data")
-    val src = FileTopicSource("region-json", s"$dir/data", format = "json",
-      schema = graft.ops.Tables.table(spark, sf, "region").schema)
-    val q = src.load(spark).writeStream.format("memory").queryName("topic_json")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(spark.table("topic_json").count() == 5)
+    withTempDir("graft-json-topic") { dir =>
+      graft.ops.Tables.table(spark, sf, "region")
+        .write.mode("overwrite").json(s"$dir/data")
+      val src = FileTopicSource("region-json", s"$dir/data", format = "json",
+        schema = graft.ops.Tables.table(spark, sf, "region").schema)
+      val q = src.load(spark).writeStream.format("memory").queryName("topic_json")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      assert(spark.table("topic_json").count() == 5)
+    }
   }
 
   test("kinesis topic source builds the reference-shaped option map") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -12,6 +11,7 @@ import graft.delivery.Supervision
 import graft.engine.GraftEngine
 import graft.model.{ClientConfig, ConsumerConfig}
 import graft.testkit.{FakeKinesis, FakeKinesisSender}
+import graft.testkit.TempDirs.withTempDir
 
 import scala.concurrent.duration._
 
@@ -20,24 +20,25 @@ import scala.concurrent.duration._
 class EngineSpec extends SparkSpec {
 
   test("topic registry starts registered subscriptions and processes data") {
-    val dir = Files.createTempDirectory("graft-engine").toString
-    graft.ops.Tables.table(spark, sf, "events")
-      .write.mode("overwrite").parquet(s"$dir/topic")
-    val seen = new ConcurrentLinkedQueue[Long]()
-    val registry = new GraftEngine.TopicRegistry(spark, s"$dir/ckpt")
-    registry.register(GraftEngine.Subscription(
-      source = FileTopicSource("events", s"$dir/topic",
-        schema = graft.ops.Tables.table(spark, sf, "events").schema),
-      groupId = "engine-test",
-      transform = df => df.filter(col("event_type") === "click"),
-      process = (batch, _) => seen.add(batch.count())))
-    val queries = registry.startAll()
-    assert(queries.size == 1)
-    queries.foreach(_.awaitTermination()) // AvailableNow drains and stops
-    registry.stopAll()
-    import scala.jdk.CollectionConverters._
-    assert(seen.size() >= 1 && seen.asScala.sum > 0,
-      "click events must have been processed")
+    withTempDir("graft-engine") { dir =>
+      graft.ops.Tables.table(spark, sf, "events")
+        .write.mode("overwrite").parquet(s"$dir/topic")
+      val seen = new ConcurrentLinkedQueue[Long]()
+      val registry = new GraftEngine.TopicRegistry(spark, s"$dir/ckpt")
+      registry.register(GraftEngine.Subscription(
+        source = FileTopicSource("events", s"$dir/topic",
+          schema = graft.ops.Tables.table(spark, sf, "events").schema),
+        groupId = "engine-test",
+        transform = df => df.filter(col("event_type") === "click"),
+        process = (batch, _) => seen.add(batch.count())))
+      val queries = registry.startAll()
+      assert(queries.size == 1)
+      queries.foreach(_.awaitTermination()) // AvailableNow drains and stops
+      registry.stopAll()
+      import scala.jdk.CollectionConverters._
+      assert(seen.size() >= 1 && seen.asScala.sum > 0,
+        "click events must have been processed")
+    }
   }
 
   test("engine end-to-end: kinesis subscription consumes, processes, republishes") {
@@ -49,62 +50,64 @@ class EngineSpec extends SparkSpec {
     FakeKinesis.createStream("e2e-out", 2)
     (0 until 12).foreach(i =>
       FakeKinesis.putRecord("e2e-in", s"k${i % 3}", s"""{"v":$i}""".getBytes("UTF-8")))
-    val dir = Files.createTempDirectory("graft-e2e").toString
-    val seen = new ConcurrentLinkedQueue[Long]()
-    val registry = new GraftEngine.TopicRegistry(spark, s"$dir/ckpt")
-    registry.register(GraftEngine.Subscription(
-      source = KinesisTopicSource("e2e-in", ConsumerConfig(Some("app"), maxBatchSize = 100)),
-      groupId = "g-e2e",
-      transform = identity,
-      process = (batch, _) => {
-        batch.select("sequenceNumber").collect()
-          .foreach(r => seen.add(r.getString(0).toLong))
-        val env = batch.select(col("data"), col("partitionKey"),
-          lit(null).cast("string").as("explicitHashKey"),
-          col("sequenceNumber").cast("long").as("seq"))
-        TopicSink.writeOrdered(env, "seq", () => new FakeKinesisSender("e2e-out"), 2)
-      }))
-    val queries = registry.startAll()
-    queries.foreach(_.awaitTermination())
-    registry.stopAll()
-    import scala.jdk.CollectionConverters._
-    assert(seen.asScala.toSet == (0L until 12L).toSet,
-      s"subscription must consume every record exactly once: ${seen.asScala.toSet}")
-    val out = (0 until 2).flatMap(s => FakeKinesis.slice("e2e-out", s, 0L, 12L))
-    assert(out.size == 12, s"republished stream incomplete: ${out.size}")
-    for ((k, recs) <- out.groupBy(_.partitionKey)) {
-      val vals = recs.sortBy(_.seq).map(r => new String(r.data, "UTF-8"))
-      val expected = (0 until 12).filter(i => s"k${i % 3}" == k).map(i => s"""{"v":$i}""")
-      assert(vals == expected, s"per-key order broken in republished stream for $k")
+    withTempDir("graft-e2e") { dir =>
+      val seen = new ConcurrentLinkedQueue[Long]()
+      val registry = new GraftEngine.TopicRegistry(spark, s"$dir/ckpt")
+      registry.register(GraftEngine.Subscription(
+        source = KinesisTopicSource("e2e-in", ConsumerConfig(Some("app"), maxBatchSize = 100)),
+        groupId = "g-e2e",
+        transform = identity,
+        process = (batch, _) => {
+          batch.select("sequenceNumber").collect()
+            .foreach(r => seen.add(r.getString(0).toLong))
+          val env = batch.select(col("data"), col("partitionKey"),
+            lit(null).cast("string").as("explicitHashKey"),
+            col("sequenceNumber").cast("long").as("seq"))
+          TopicSink.writeOrdered(env, "seq", () => new FakeKinesisSender("e2e-out"), 2)
+        }))
+      val queries = registry.startAll()
+      queries.foreach(_.awaitTermination())
+      registry.stopAll()
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSet == (0L until 12L).toSet,
+        s"subscription must consume every record exactly once: ${seen.asScala.toSet}")
+      val out = (0 until 2).flatMap(s => FakeKinesis.slice("e2e-out", s, 0L, 12L))
+      assert(out.size == 12, s"republished stream incomplete: ${out.size}")
+      for ((k, recs) <- out.groupBy(_.partitionKey)) {
+        val vals = recs.sortBy(_.seq).map(r => new String(r.data, "UTF-8"))
+        val expected = (0 until 12).filter(i => s"k${i % 3}" == k).map(i => s"""{"v":$i}""")
+        assert(vals == expected, s"per-key order broken in republished stream for $k")
+      }
     }
   }
 
   test("producer role gates publication placement (reference parity)") {
-    val dir = Files.createTempDirectory("graft-pub").toString
-    graft.ops.Tables.table(spark, sf, "region")
-      .write.mode("overwrite").parquet(s"$dir/topic")
-    val started = new ConcurrentLinkedQueue[String]()
-    def pub(id: String, role: Option[String]) =
-      GraftEngine.Publication(id, graft.model.ProducerConfig(role), { () =>
-        started.add(id)
-        graft.delivery.Delivery.atLeastOnce(
-          spark.readStream
-            .schema(graft.ops.Tables.table(spark, sf, "region").schema)
-            .parquet(s"$dir/topic"),
-          s"pub-$id", s"$dir/ckpt")((batch, _) => batch.count())
-      })
-    val registry = new GraftEngine.TopicRegistry(spark, s"$dir/ckpt",
-      nodeRoles = Set("writer"))
-    registry.register(pub("roleless", None))
-    registry.register(pub("gated-match", Some("writer")))
-    registry.register(pub("gated-other", Some("reader")))
-    val queries = registry.startProducers()
-    queries.foreach(_.awaitTermination())
-    registry.stopAll()
-    import scala.jdk.CollectionConverters._
-    assert(started.asScala.toSet == Set("roleless", "gated-match"),
-      s"role gating placed the wrong producers: ${started.asScala.toSet}")
-    assert(queries.size == 2)
+    withTempDir("graft-pub") { dir =>
+      graft.ops.Tables.table(spark, sf, "region")
+        .write.mode("overwrite").parquet(s"$dir/topic")
+      val started = new ConcurrentLinkedQueue[String]()
+      def pub(id: String, role: Option[String]) =
+        GraftEngine.Publication(id, graft.model.ProducerConfig(role), { () =>
+          started.add(id)
+          graft.delivery.Delivery.atLeastOnce(
+            spark.readStream
+              .schema(graft.ops.Tables.table(spark, sf, "region").schema)
+              .parquet(s"$dir/topic"),
+            s"pub-$id", s"$dir/ckpt")((batch, _) => batch.count())
+        })
+      val registry = new GraftEngine.TopicRegistry(spark, s"$dir/ckpt",
+        nodeRoles = Set("writer"))
+      registry.register(pub("roleless", None))
+      registry.register(pub("gated-match", Some("writer")))
+      registry.register(pub("gated-other", Some("reader")))
+      val queries = registry.startProducers()
+      queries.foreach(_.awaitTermination())
+      registry.stopAll()
+      import scala.jdk.CollectionConverters._
+      assert(started.asScala.toSet == Set("roleless", "gated-match"),
+        s"role gating placed the wrong producers: ${started.asScala.toSet}")
+      assert(queries.size == 2)
+    }
   }
 
   /** Every `graft_*` SQL function: a call over inline data (no temp
@@ -278,27 +281,28 @@ class EngineSpec extends SparkSpec {
   }
 
   test("backoff supervision restarts a failing query with growing delays") {
-    val dir = Files.createTempDirectory("graft-sup").toString
-    graft.ops.Tables.table(spark, sf, "region")
-      .write.mode("overwrite").parquet(s"$dir/topic")
-    val delays = scala.collection.mutable.ListBuffer[Long]()
-    @volatile var failures = 2
-    val restarts = Supervision.superviseSync(
-        ClientConfig(None, None, None, None,
-          minBackoff = 10.millis, maxBackoff = 80.millis),
-        maxRestarts = 5,
-        sleeper = d => delays += d)(() =>
-      graft.delivery.Delivery.atLeastOnce(
-        spark.readStream
-          .schema(graft.ops.Tables.table(spark, sf, "region").schema)
-          .parquet(s"$dir/topic"),
-        "sup-test", s"$dir/ckpt-${System.nanoTime()}") { (batch, _) =>
-        if (failures > 0) { failures -= 1; sys.error("boom") }
-        batch.count()
-      })
-    assert(restarts == 2, s"expected 2 restarts, got $restarts")
-    assert(delays.size == 2 && delays(1) >= delays.head,
-      s"backoff must not shrink: $delays")
+    withTempDir("graft-sup") { dir =>
+      graft.ops.Tables.table(spark, sf, "region")
+        .write.mode("overwrite").parquet(s"$dir/topic")
+      val delays = scala.collection.mutable.ListBuffer[Long]()
+      @volatile var failures = 2
+      val restarts = Supervision.superviseSync(
+          ClientConfig(None, None, None, None,
+            minBackoff = 10.millis, maxBackoff = 80.millis),
+          maxRestarts = 5,
+          sleeper = d => delays += d)(() =>
+        graft.delivery.Delivery.atLeastOnce(
+          spark.readStream
+            .schema(graft.ops.Tables.table(spark, sf, "region").schema)
+            .parquet(s"$dir/topic"),
+          "sup-test", s"$dir/ckpt-${System.nanoTime()}") { (batch, _) =>
+          if (failures > 0) { failures -= 1; sys.error("boom") }
+          batch.count()
+        })
+      assert(restarts == 2, s"expected 2 restarts, got $restarts")
+      assert(delays.size == 2 && delays(1) >= delays.head,
+        s"backoff must not shrink: $delays")
+    }
   }
 
   test("nextBackoff follows min * 2^attempt capped at max") {

@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import java.util.Optional
 
 import org.apache.spark.sql.functions._
 
 import graft.connector.TopicSink
 import graft.javadsl.{GraftTopics, examples}
+import graft.testkit.TempDirs.withTempDir
 
 /** The Java-facing DSL (reference javadsl parity): the compiled Java
   * example class drives the full relay end-to-end, and the facade's
@@ -21,34 +21,34 @@ class JavadslSpec extends SparkSpec {
       val k = s"k${i % 4}"
       (s"""{"k":"$k","v":$i}""".getBytes("UTF-8"), k, i.toLong)
     }
-    val stage = Files.createTempDirectory("graft-javadsl-stage").toString
-    rows.toDF("data", "partitionKey", "seq")
-      .repartition(6).write.mode("overwrite").parquet(stage)
-    // run 1 — admission caps: 2 files/trigger over 6 staged files →
-    // multiple microbatches, exactly-once delivery by count. (Cross-
-    // batch ordering is a property of the journal's file layout — the
-    // staged files scatter seqs, so only counts are asserted here.)
-    TopicSink.CollectingSender.clear()
-    val q = examples.JavaRelayExample.run(spark, stage,
-      Files.createTempDirectory("graft-javadsl-ckpt").toString, 2)
-    q.awaitTermination()
-    assert(TopicSink.CollectingSender.byKey.values.map(_.size).sum == n,
-      s"lost/duplicated records: ${TopicSink.CollectingSender.byKey}")
+    withTempDir("graft-javadsl") { root =>
+      val stage = s"$root/stage"
+      rows.toDF("data", "partitionKey", "seq")
+        .repartition(6).write.mode("overwrite").parquet(stage)
+      // run 1 — admission caps: 2 files/trigger over 6 staged files →
+      // multiple microbatches, exactly-once delivery by count. (Cross-
+      // batch ordering is a property of the journal's file layout — the
+      // staged files scatter seqs, so only counts are asserted here.)
+      TopicSink.CollectingSender.clear()
+      val q = examples.JavaRelayExample.run(spark, stage, s"$root/ckpt", 2)
+      q.awaitTermination()
+      assert(TopicSink.CollectingSender.byKey.values.map(_.size).sum == n,
+        s"lost/duplicated records: ${TopicSink.CollectingSender.byKey}")
 
-    // run 2 — ordering: one batch covers every file; writeOrdered's
-    // (partitionKey, seq) sort makes per-key delivery = seq order
-    TopicSink.CollectingSender.clear()
-    val q2 = examples.JavaRelayExample.run(spark, stage,
-      Files.createTempDirectory("graft-javadsl-ckpt2").toString, 100)
-    q2.awaitTermination()
-    val byKey = TopicSink.CollectingSender.byKey
-    assert(byKey.values.map(_.size).sum == n, s"lost/duplicated records: $byKey")
-    for ((k, msgs) <- byKey) {
-      // re-encoded payload field order is (k, v); per-key order = seq order
-      val expected = (0 until n).collect {
-        case i if s"k${i % 4}" == k => s"""{"k":"$k","v":$i}"""
+      // run 2 — ordering: one batch covers every file; writeOrdered's
+      // (partitionKey, seq) sort makes per-key delivery = seq order
+      TopicSink.CollectingSender.clear()
+      val q2 = examples.JavaRelayExample.run(spark, stage, s"$root/ckpt2", 100)
+      q2.awaitTermination()
+      val byKey = TopicSink.CollectingSender.byKey
+      assert(byKey.values.map(_.size).sum == n, s"lost/duplicated records: $byKey")
+      for ((k, msgs) <- byKey) {
+        // re-encoded payload field order is (k, v); per-key order = seq order
+        val expected = (0 until n).collect {
+          case i if s"k${i % 4}" == k => s"""{"k":"$k","v":$i}"""
+        }
+        assert(msgs == expected.toSeq, s"per-key order broken for $k")
       }
-      assert(msgs == expected.toSeq, s"per-key order broken for $k")
     }
   }
 
@@ -68,12 +68,12 @@ class JavadslSpec extends SparkSpec {
       .options("maxFetchRecordsPerShard") == "5")
 
     // registry: role gating through java.util.Set
-    val reg = GraftTopics.registry(spark,
-      Files.createTempDirectory("graft-javadsl-reg").toString,
-      java.util.Set.of("worker"))
-    assert(reg.producerRunsHere(graft.model.ProducerConfig(Some("worker"))))
-    assert(!reg.producerRunsHere(graft.model.ProducerConfig(Some("other"))))
-    assert(reg.producerRunsHere(graft.model.ProducerConfig(None)))
+    withTempDir("graft-javadsl-reg") { root =>
+      val reg = GraftTopics.registry(spark, root, java.util.Set.of("worker"))
+      assert(reg.producerRunsHere(graft.model.ProducerConfig(Some("worker"))))
+      assert(!reg.producerRunsHere(graft.model.ProducerConfig(Some("other"))))
+      assert(reg.producerRunsHere(graft.model.ProducerConfig(None)))
+    }
 
     // encode/decode round-trip through the facade
     val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")

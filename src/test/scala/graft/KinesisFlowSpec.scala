@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
@@ -10,6 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.connector.{KinesisTopicSource, TopicSink}
 import graft.model.ConsumerConfig
 import graft.testkit.{FakeKinesis, FakeKinesisSender}
+import graft.testkit.TempDirs.withTempDir
 
 /** End-to-end Kinesis path against the in-repo DataSourceV2 double
   * (registered as `kinesis` on the test classpath) — the offline analogue
@@ -39,42 +39,43 @@ class KinesisFlowSpec extends SparkSpec {
       ConsumerConfig(Some("app"), maxBatchSize = 5))
     val batchIds = new ConcurrentLinkedQueue[Long]()
     TopicSink.CollectingSender.clear()
-    val dir = Files.createTempDirectory("graft-kinesis-flow").toString
-    val q = src.load(spark).writeStream
-      .option("checkpointLocation", dir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batchIds.add(id)
-        val env = batch.select(
-          col("data"), col("partitionKey"),
-          lit(null).cast("string").as("explicitHashKey"),
-          col("sequenceNumber").cast("long").as("seq"))
-        TopicSink.writeOrdered(env, "seq", () => new TopicSink.CollectingSender, 4)
-        TopicSink.writeOrdered(env, "seq", () => new FakeKinesisSender("orders-out"), 4)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    withTempDir("graft-kinesis-flow") { dir =>
+      val q = src.load(spark).writeStream
+        .option("checkpointLocation", dir)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          batchIds.add(id)
+          val env = batch.select(
+            col("data"), col("partitionKey"),
+            lit(null).cast("string").as("explicitHashKey"),
+            col("sequenceNumber").cast("long").as("seq"))
+          TopicSink.writeOrdered(env, "seq", () => new TopicSink.CollectingSender, 4)
+          TopicSink.writeOrdered(env, "seq", () => new FakeKinesisSender("orders-out"), 4)
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
 
-    // exactly-once: every record delivered once, per-key order = put order
-    val byKey = TopicSink.CollectingSender.byKey
-    assert(byKey.values.map(_.size).sum == n, s"lost/duplicated records: $byKey")
-    for ((k, msgs) <- byKey) {
-      val expected = keys.zipWithIndex.collect {
-        case (k2, i) if k2 == k => s"""{"k":"$k2","v":$i}"""
+      // exactly-once: every record delivered once, per-key order = put order
+      val byKey = TopicSink.CollectingSender.byKey
+      assert(byKey.values.map(_.size).sum == n, s"lost/duplicated records: $byKey")
+      for ((k, msgs) <- byKey) {
+        val expected = keys.zipWithIndex.collect {
+          case (k2, i) if k2 == k => s"""{"k":"$k2","v":$i}"""
+        }
+        assert(msgs == expected, s"per-key order broken for $k")
       }
-      assert(msgs == expected, s"per-key order broken for $k")
-    }
-    // admission control: 60 records, ≤5/shard/batch over 4 shards → >1 batch
-    assert(batchIds.size > 1, s"admission cap ignored: ${batchIds.size} batch(es)")
+      // admission control: 60 records, ≤5/shard/batch over 4 shards → >1 batch
+      assert(batchIds.size > 1, s"admission cap ignored: ${batchIds.size} batch(es)")
 
-    // the republished stream holds all records, per-key in sequence order
-    val out = (0 until 2).flatMap(s => FakeKinesis.slice("orders-out", s, 0L, n.toLong))
-    assert(out.size == n)
-    for ((k, recs) <- out.groupBy(_.partitionKey)) {
-      val payloads = recs.sortBy(_.seq).map(r => new String(r.data, "UTF-8"))
-      val expected = keys.zipWithIndex.collect {
-        case (k2, i) if k2 == k => s"""{"k":"$k2","v":$i}"""
+      // the republished stream holds all records, per-key in sequence order
+      val out = (0 until 2).flatMap(s => FakeKinesis.slice("orders-out", s, 0L, n.toLong))
+      assert(out.size == n)
+      for ((k, recs) <- out.groupBy(_.partitionKey)) {
+        val payloads = recs.sortBy(_.seq).map(r => new String(r.data, "UTF-8"))
+        val expected = keys.zipWithIndex.collect {
+          case (k2, i) if k2 == k => s"""{"k":"$k2","v":$i}"""
+        }
+        assert(payloads == expected, s"republished order broken for $k")
       }
-      assert(payloads == expected, s"republished order broken for $k")
     }
   }
 
@@ -83,25 +84,26 @@ class KinesisFlowSpec extends SparkSpec {
     (0 until 10).foreach(i => putJson("clicks-topic", s"c${i % 3}", i))
     val src = KinesisTopicSource("clicks-topic",
       ConsumerConfig(Some("app"), maxBatchSize = 100))
-    val dir = Files.createTempDirectory("graft-kinesis-restart").toString
-    val seen = new ConcurrentLinkedQueue[Long]()
-    def run(): Unit = {
-      val q = src.load(spark).writeStream
-        .option("checkpointLocation", dir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.select("sequenceNumber").collect()
-            .foreach(r => seen.add(r.getString(0).toLong))
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    withTempDir("graft-kinesis-restart") { dir =>
+      val seen = new ConcurrentLinkedQueue[Long]()
+      def run(): Unit = {
+        val q = src.load(spark).writeStream
+          .option("checkpointLocation", dir)
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            batch.select("sequenceNumber").collect()
+              .foreach(r => seen.add(r.getString(0).toLong))
+          }
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      run()
+      assert(seen.size == 10, s"first run must drain the backlog: ${seen.size}")
+      (10 until 15).foreach(i => putJson("clicks-topic", s"c${i % 3}", i))
+      run()
+      import scala.jdk.CollectionConverters._
+      assert(seen.size == 15, s"restart must deliver only the 5 new records: ${seen.size}")
+      assert(seen.asScala.toSet.size == 15, "restart redelivered already-committed records")
     }
-    run()
-    assert(seen.size == 10, s"first run must drain the backlog: ${seen.size}")
-    (10 until 15).foreach(i => putJson("clicks-topic", s"c${i % 3}", i))
-    run()
-    import scala.jdk.CollectionConverters._
-    assert(seen.size == 15, s"restart must deliver only the 5 new records: ${seen.size}")
-    assert(seen.asScala.toSet.size == 15, "restart redelivered already-committed records")
   }
 
   test("AT_TIMESTAMP starts mid-stream at the requested arrival time") {

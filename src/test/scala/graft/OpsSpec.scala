@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{AsOfJoin, Dedup, RangeJoin, Similarity, TextOps}
 import graft.functions.VectorFunctions
+import graft.testkit.TempDirs.withTempDir
 
 /** Unit semantics for the analytics/ML ops on small hand-built inputs. */
 class OpsSpec extends SparkSpec {
@@ -464,70 +465,72 @@ class OpsSpec extends SparkSpec {
   }
 
   test("compactTo sizes output files to the data, losslessly, both shuffle modes") {
-    val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val sliver = s"$base/sliver"
-    val df = spark.range(0, 20000)
-      .select(col("id"), concat(lit("x" * 200), col("id").cast("string")).as("pad"))
-    df.repartition(48).write.mode("overwrite").parquet(sliver)
-    val nIn = new java.io.File(sliver).listFiles()
-      .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-    assert(nIn == 48)
-    // tiny target → several files; count follows ceil(bytes/target)
-    val fs = new org.apache.hadoop.fs.Path(sliver)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(sliver)).getLength
-    val target = bytes / 4
-    val n1 = graft.ops.Layout.compactTo(spark, sliver, s"$base/c1", target)
-    assert(n1 == math.ceil(bytes.toDouble / target).toInt, s"got $n1 files")
-    assert(n1 < nIn)
-    val back1 = spark.read.parquet(s"$base/c1")
-    assert(back1.exceptAll(df).isEmpty && df.exceptAll(back1).isEmpty)
-    // shuffle=false (coalesce) also compacts and stays lossless
-    val n2 = graft.ops.Layout.compactTo(spark, sliver, s"$base/c2",
-      bytes * 2, shuffle = false)
-    assert(n2 == 1)
-    val back2 = spark.read.parquet(s"$base/c2")
-    assert(back2.exceptAll(df).isEmpty && df.exceptAll(back2).isEmpty)
-    // in-place compaction is refused
-    intercept[IllegalArgumentException] {
-      graft.ops.Layout.compactTo(spark, sliver, sliver, target)
+    withTempDir("graft-compact") { base =>
+      val sliver = s"$base/sliver"
+      val df = spark.range(0, 20000)
+        .select(col("id"), concat(lit("x" * 200), col("id").cast("string")).as("pad"))
+      df.repartition(48).write.mode("overwrite").parquet(sliver)
+      val nIn = new java.io.File(sliver).listFiles()
+        .count(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
+      assert(nIn == 48)
+      // tiny target → several files; count follows ceil(bytes/target)
+      val fs = new org.apache.hadoop.fs.Path(sliver)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(sliver)).getLength
+      val target = bytes / 4
+      val n1 = graft.ops.Layout.compactTo(spark, sliver, s"$base/c1", target)
+      assert(n1 == math.ceil(bytes.toDouble / target).toInt, s"got $n1 files")
+      assert(n1 < nIn)
+      val back1 = spark.read.parquet(s"$base/c1")
+      assert(back1.exceptAll(df).isEmpty && df.exceptAll(back1).isEmpty)
+      // shuffle=false (coalesce) also compacts and stays lossless
+      val n2 = graft.ops.Layout.compactTo(spark, sliver, s"$base/c2",
+        bytes * 2, shuffle = false)
+      assert(n2 == 1)
+      val back2 = spark.read.parquet(s"$base/c2")
+      assert(back2.exceptAll(df).isEmpty && df.exceptAll(back2).isEmpty)
+      // in-place compaction is refused
+      intercept[IllegalArgumentException] {
+        graft.ops.Layout.compactTo(spark, sliver, sliver, target)
+      }
     }
   }
 
   test("writeWithBloom: footer carries bloom filters on the asked columns only") {
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
-    val df = spark.range(0, 5000)
-      .select(col("id"), (col("id") * 7 % 1000).as("k"))
-    graft.ops.Layout.writeWithBloom(df, dir, Seq("k"), expectedNdv = 1000)
-    val part = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).head
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(part.getAbsolutePath),
-      spark.sparkContext.hadoopConfiguration)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      val cols = reader.getFooter.getBlocks.get(0).getColumns.asScala
-      val kCol = cols.find(_.getPath.toDotString == "k").get
-      val idCol = cols.find(_.getPath.toDotString == "id").get
-      assert(kCol.getBloomFilterOffset >= 0, "k must carry a bloom filter")
-      assert(idCol.getBloomFilterOffset < 0, "id must not carry one")
-      val bloom = reader.readBloomFilter(kCol)
-      assert(bloom != null)
-      // the filter actually works at the parquet level (engine-agnostic):
-      // every present key hits, an absent key misses (no false negative
-      // is possible; a false positive for ONE probe at ndv=1000 is
-      // astronomically unlikely at the default 1% fpp)
-      def mightContain(v: Long): Boolean = bloom.findHash(bloom.hash(v))
-      assert((0 until 1000).forall(c => mightContain(c.toLong)),
-        "present keys must hit the bloom filter")
-      assert(!mightContain(123456789L), "an absent key should miss")
-    } finally reader.close()
-    // correctness never depends on the filter: present and absent keys
-    val back = spark.read.parquet(dir)
-    assert(back.where(col("k") === 3).count() ==
-      df.where(col("k") === 3).count())
-    assert(back.where(col("k") === 123456).count() == 0)
+    withTempDir("graft-bloom") { dir =>
+      val df = spark.range(0, 5000)
+        .select(col("id"), (col("id") * 7 % 1000).as("k"))
+      graft.ops.Layout.writeWithBloom(df, dir, Seq("k"), expectedNdv = 1000)
+      val part = new java.io.File(dir).listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).head
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.getAbsolutePath),
+        spark.sparkContext.hadoopConfiguration)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        val cols = reader.getFooter.getBlocks.get(0).getColumns.asScala
+        val kCol = cols.find(_.getPath.toDotString == "k").get
+        val idCol = cols.find(_.getPath.toDotString == "id").get
+        assert(kCol.getBloomFilterOffset >= 0, "k must carry a bloom filter")
+        assert(idCol.getBloomFilterOffset < 0, "id must not carry one")
+        val bloom = reader.readBloomFilter(kCol)
+        assert(bloom != null)
+        // the filter actually works at the parquet level (engine-agnostic):
+        // every present key hits, an absent key misses (no false negative
+        // is possible; a false positive for ONE probe at ndv=1000 is
+        // astronomically unlikely at the default 1% fpp)
+        def mightContain(v: Long): Boolean = bloom.findHash(bloom.hash(v))
+        assert((0 until 1000).forall(c => mightContain(c.toLong)),
+          "present keys must hit the bloom filter")
+        assert(!mightContain(123456789L), "an absent key should miss")
+      } finally reader.close()
+      // correctness never depends on the filter: present and absent keys
+      val back = spark.read.parquet(dir)
+      assert(back.where(col("k") === 3).count() ==
+        df.where(col("k") === 3).count())
+      assert(back.where(col("k") === 123456).count() == 0)
+    }
   }
 
   test("Profile.summary: counts, nulls, distinct, modal value with tie-break") {

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
@@ -15,6 +14,7 @@ import org.scalacheck.rng.Seed
 import graft.connector.{FileTopicSource, TopicSink, TopicSource}
 import graft.delivery.Delivery
 import graft.model.ConsumerConfig
+import graft.testkit.TempDirs.withTempDir
 
 /** The relay's per-drain hot path: generated code is reused across the
   * streaming queries of successive drains, and the JSON decode parses
@@ -23,30 +23,31 @@ class RelayHotPathSpec extends SparkSpec {
   import spark.implicits._
 
   test("a second relay drain compiles no new generated code") {
-    val dir = Files.createTempDirectory("graft-relay").toString
-    val envelope = (0 until 200).map { i =>
-      (s"""{"id":$i,"user":${i % 7},"v":${i * 0.5}}""", (i % 7).toString, i.toLong)
-    }.toDF("data", "partitionKey", "seq")
-    envelope.repartition(4).write.parquet(s"$dir/topic")
-    val src = FileTopicSource("relay", s"$dir/topic", "parquet", envelope.schema,
-      ConsumerConfig(None, maxBatchSize = 2))
-    val payload = StructType.fromDDL("id BIGINT, user BIGINT, v DOUBLE")
+    withTempDir("graft-relay") { dir =>
+      val envelope = (0 until 200).map { i =>
+        (s"""{"id":$i,"user":${i % 7},"v":${i * 0.5}}""", (i % 7).toString, i.toLong)
+      }.toDF("data", "partitionKey", "seq")
+      envelope.repartition(4).write.parquet(s"$dir/topic")
+      val src = FileTopicSource("relay", s"$dir/topic", "parquet", envelope.schema,
+        ConsumerConfig(None, maxBatchSize = 2))
+      val payload = StructType.fromDDL("id BIGINT, user BIGINT, v DOUBLE")
 
-    def drain(n: Int): Unit = {
-      TopicSink.CollectingSender.clear()
-      Delivery.atLeastOnce(src.load(spark), "relay", s"$dir/ckpt-$n") { (b, _) =>
-        val flowed = TopicSource.decodeJson(b, payload).select(col("payload.*"), col("seq"))
-        TopicSink.writeOrdered(TopicSource.encodeJsonOrdered(flowed, "seq", Some("user")),
-          "seq", () => new TopicSink.CollectingSender, numPartitions = 2)
-      }.awaitTermination()
-      assert(TopicSink.CollectingSender.sent.size == 200, s"drain $n delivers every record")
+      def drain(n: Int): Unit = {
+        TopicSink.CollectingSender.clear()
+        Delivery.atLeastOnce(src.load(spark), "relay", s"$dir/ckpt-$n") { (b, _) =>
+          val flowed = TopicSource.decodeJson(b, payload).select(col("payload.*"), col("seq"))
+          TopicSink.writeOrdered(TopicSource.encodeJsonOrdered(flowed, "seq", Some("user")),
+            "seq", () => new TopicSink.CollectingSender, numPartitions = 2)
+        }.awaitTermination()
+        assert(TopicSink.CollectingSender.sent.size == 200, s"drain $n delivers every record")
+      }
+
+      drain(1)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      drain(2)
+      val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+      assert(recompiled == 0, s"the second drain compiled $recompiled classes again")
     }
-
-    drain(1)
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    drain(2)
-    val recompiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
-    assert(recompiled == 0, s"the second drain compiled $recompiled classes again")
   }
 
   private val payloadSchema = StructType.fromDDL(

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.queries.Catalog
+import graft.testkit.TempDirs.withTempDir
 
 /** The q122-q130 streaming gate family, exercised at sf0.001 against
   * in-Spark BATCH replicas of their oracles — so `sbt test` catches a
@@ -145,28 +146,70 @@ class StreamGateSpec extends SparkSpec {
       "three folded CDC waves must equal the one-shot MERGE")
   }
 
+  private def foldCkpts: Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).list())
+      .toSeq.flatten.filter(_.startsWith("graft-fold-ckpt")).toSet
+
+  /** Whether `e` or one of its causes carries `msg`. */
+  private def surfaced(e: Throwable, msg: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains(msg)))
+
   test("a failing wave fold surfaces its exception and leaves no checkpoint behind") {
-    import java.nio.file.Files
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    def ckpts = Option(tmp.list()).toSeq.flatten
-      .filter(_.startsWith("graft-fold-ckpt")).toSet
-    val dir = Files.createTempDirectory("graft-fold-waves").toString
-    try {
+    withTempDir("graft-fold-waves") { dir =>
       spark.range(5).toDF("id").coalesce(1)
         .write.mode("overwrite").parquet(dir)
-      val before = ckpts
+      val before = foldCkpts
       val e = intercept[Exception] {
         graft.queries.CatalogStream.foldWaves(spark, dir,
           spark.read.parquet(dir).schema) { _ =>
           throw new IllegalStateException("wave fold failed on purpose")
         }
       }
-      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      assert(causes.exists(c =>
-          Option(c.getMessage).exists(_.contains("wave fold failed on purpose"))),
+      assert(surfaced(e, "wave fold failed on purpose"),
         s"the batch function's failure must surface, got $e")
-      assert(ckpts == before, s"checkpoint left behind: ${ckpts -- before}")
-    } finally graft.ops.LocalFiles.deleteRecursively(dir)
+      assert(foldCkpts == before, s"checkpoint left behind: ${foldCkpts -- before}")
+    }
+  }
+
+  test("a maintained state whose step fails on wave 2 keeps wave 1's fold and no staging") {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    val st = "stream_gate_spec_state"
+    withTempDir("graft-state-waves") { root =>
+      // three one-file waves of ids, mtimes in wave order
+      val waves = Files.createDirectory(Paths.get(root, "waves"))
+      val t0 = System.currentTimeMillis() - 600000L
+      for (i <- 1 to 3) {
+        val out = s"$root/w$i"
+        spark.range(i * 10, i * 10 + 5).toDF("id").coalesce(1).write.parquet(out)
+        val part = new java.io.File(out).listFiles()
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+        val dest = Files.move(part.toPath, waves.resolve(s"wave-$i.parquet"))
+        Files.setLastModifiedTime(dest, FileTime.fromMillis(t0 + i * 60000L))
+      }
+      val before = foldCkpts
+      var step = 0
+      try {
+        val e = intercept[Exception] {
+          graft.queries.CatalogStream.maintainState(spark, st,
+              spark.range(0).toDF("id"), waves.toString,
+              spark.range(0).toDF("id").schema) { (cur, w) =>
+            step += 1
+            if (step == 2) throw new IllegalStateException("state step failed on wave 2")
+            cur.unionByName(w)
+          }
+        }
+        assert(surfaced(e, "state step failed on wave 2"),
+          s"the step's failure must surface, got $e")
+        assert(step == 2, s"the fold must stop at the failing wave, ran $step steps")
+        assert(foldCkpts == before, s"checkpoint left behind: ${foldCkpts -- before}")
+        assert(spark.table(st).as[Long].collect().sorted.toSeq == (10L until 15L),
+          "the live table must hold exactly wave 1's fold")
+        Seq(s"${st}__next", s"${st}__old").foreach(t =>
+          assert(!spark.catalog.tableExists(t), s"$t left in the catalog"))
+      } finally graft.ops.Incremental.dropStateTables(spark, st)
+    }
   }
 
   test("q193 left-outer join: null rows emit on eviction, never before; both classes live") {
